@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Shared
 import org.apache.spark.sql.types._
 
 /** Distributed k-means (Lloyd) training over an embedding column — the
@@ -148,11 +149,11 @@ object KMeans {
     * `sampleFraction` < 1 trains on the deterministic hash-sample
     * ([[graft.operators.Sampling.deterministicSample]] — membership a
     * pure function of the id, so a SQL oracle replays the slice
-    * exactly), PERSISTED across the Lloyd iterations: at 100 TB,
+    * exactly), [[Shared]] across the Lloyd iterations: at 100 TB,
     * `iters × 2` full-corpus scans is not how anyone trains a coarse
     * quantizer — FAISS trains on a sample — and the per-iteration cost
     * decouples from corpus size (the r17 verdict's trainer fix). The
-    * default full-corpus path (no persist: caching 100 TB would be
+    * default full-corpus path (not shared: storing 100 TB would be
     * worse than re-scanning) is kept for fixture-exact oracles.
     */
   def train(df: DataFrame, idCol: String, vecCol: String, k: Int, dim: Int,
@@ -164,13 +165,12 @@ object KMeans {
     val sampled = sampleFraction < 1.0
     val valid =
       if (sampled)
-        graft.operators.Sampling
+        Shared(graft.operators.Sampling
           .deterministicSample(all, idCol, sampleFraction)
-          .select(col(idCol), col(vecCol))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .select(col(idCol), col(vecCol)))
       else all
     try trainOn(valid, spark, idCol, vecCol, k, dim, iters)
-    finally if (sampled) valid.unpersist(false)
+    finally if (sampled) Shared.release(valid)
   }
 
   private def trainOn(valid: DataFrame, spark: SparkSession, idCol: String,

@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graft.Shared
 import org.apache.spark.sql.types._
 
 /** Product quantization (PQ) for embedding vectors — the standard
@@ -544,9 +545,9 @@ object Pq {
     * the k-means model-fitting loop at PQ granularity.
     *
     * `sampleFraction` < 1 trains on the deterministic hash-sample,
-    * persisted across iterations — the [[graft.functions.KMeans.train]]
+    * [[Shared]] across iterations — the [[graft.functions.KMeans.train]]
     * sampling contract (FAISS trains subquantizers on a sample too);
-    * the full-corpus default stays un-persisted for fixture-exact
+    * the full-corpus default stays unshared for fixture-exact
     * oracles.
     */
   def train(df: org.apache.spark.sql.DataFrame, idCol: String,
@@ -560,13 +561,12 @@ object Pq {
     val sampled = sampleFraction < 1.0
     val valid =
       if (sampled)
-        graft.operators.Sampling
+        Shared(graft.operators.Sampling
           .deterministicSample(all, idCol, sampleFraction)
-          .select(col(idCol), col(vecCol))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .select(col(idCol), col(vecCol)))
       else all
     try trainOn(valid, spark, idCol, vecCol, iters)
-    finally if (sampled) valid.unpersist(false)
+    finally if (sampled) Shared.release(valid)
   }
 
   private def trainOn(valid: org.apache.spark.sql.DataFrame,

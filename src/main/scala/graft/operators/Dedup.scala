@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graft.Shared
 
 import graft.functions.TextFunctions._
 import graft.functions.HashExpressions
@@ -286,34 +287,27 @@ object Dedup {
   def admitToClusters(corpusLabels: DataFrame, batchIds: DataFrame,
                       crossPairs: DataFrame,
                       batchPairs: DataFrame): DataFrame = {
-    // Contracted cross edges, materialized ONCE (r19 pass fusion): this
+    // Contracted cross edges, shared (r19 pass fusion): this
     // subtree — whose lineage is the caller's banded candidate join, the
     // admission's dominant cost — is read by THREE independent consumers
     // (bridgeEdges via CC's edge count, and bridgeNodes on both of
     // bridgeLabels' uses below), so without the cut the banded join ran
     // three times per admission (ProfileQuery: 32 jobs / 65 s summed task
     // time for 7.4 k output rows on p92). Rows are slim (two longs,
-    // O(touched clusters + batch) — never corpus-sized). localCheckpoint,
-    // not persist, for the standard reason: a plan-keyed persist would
-    // serve one invocation's rows to the next. Lazy: CC's internal edge
-    // count is the materializing action. Blocks are reclaimed by the
-    // ContextCleaner once the returned frame is dropped (no end-of-
-    // invocation action inside this pure function to hang a release on).
-    val bridgeCross = crossPairs
+    // O(touched clusters + batch) — never corpus-sized).
+    val bridgeCross = Shared(crossPairs
       .join(corpusLabels.select(col("id").as("corpus_id"), col("cluster_id")),
         Seq("corpus_id"))
-      .select(col("cluster_id").as("id_a"), col("batch_id").as("id_b"))
-      .localCheckpoint(false)
+      .select(col("cluster_id").as("id_a"), col("batch_id").as("id_b")))
     val bridgeEdges =
       bridgeCross.unionByName(batchPairs.select(col("id_a"), col("id_b")))
     val bridgeNodes = batchIds.select(col("id"))
       .unionByName(bridgeCross.select(col("id_a").as("id")))
       .distinct()
-    // Same cut on the bridge labels: consumed by BOTH the relabel map and
-    // batchOut — un-truncated, each re-evaluates bridgeNodes' distinct
+    // The bridge labels are shared too: consumed by BOTH the relabel map
+    // and batchOut — unshared, each re-evaluates bridgeNodes' distinct
     // and (absent the cut above) the banded join under it.
-    val bridgeLabels = connectedComponents(bridgeNodes, bridgeEdges)
-      .localCheckpoint(false)
+    val bridgeLabels = Shared(connectedComponents(bridgeNodes, bridgeEdges))
     // Relabel map: bridge nodes that ARE corpus cluster labels, keyed by
     // the old label. O(touched clusters) rows -> broadcast.
     val relabel = bridgeLabels
@@ -359,16 +353,14 @@ object Dedup {
     val (touched, _) = graft.engine.NdvSizing.measuredBroadcast(
       labels.join(del, Seq("id")).select(col("cluster_id")).distinct())
     val untouched = labels.join(touched, Seq("cluster_id"), "left_anti")
-    // Touched-cluster survivors, materialized once (r19 pass fusion):
+    // Touched-cluster survivors, shared (r19 pass fusion):
     // consumed THREE times (both endpoint filters of `e` plus the CC node
     // set), each evaluation re-running the labels⋈touched⋈deletes chain —
     // on p153 that chain bottoms out in the caller's CC-output lineage.
-    // Slim (one id column, O(touched-cluster members)); lazy checkpoint,
-    // materialized by CC's internal edge count; ContextCleaner reclaims.
-    val tsurv = labels.join(touched, Seq("cluster_id"))
+    // Slim (one id column, O(touched-cluster members)).
+    val tsurv = Shared(labels.join(touched, Seq("cluster_id"))
       .join(del, Seq("id"), "left_anti")
-      .select(col("id"))
-      .localCheckpoint(false)
+      .select(col("id")))
     // Edge list restricted to touched-cluster SURVIVORS on both ends:
     // the only edges whose components can have changed.
     val e = pairs.select(col("id_a"), col("id_b"))
@@ -582,24 +574,6 @@ object Dedup {
         coalesce(col("label").cast(idType), col("id")).as("cluster_id"))
   }
 
-  /** Release the cached blocks behind a lazily local-checkpointed frame
-    * that nothing references anymore: walk the execution RDD's dependency
-    * chain to the persisted ancestor and unpersist it. The iterative CC
-    * loops call this on round N's checkpoint once round N+1 has
-    * materialized, so storage holds TWO rounds at any moment instead of
-    * every round until driver GC (ContextCleaner remains the backstop if
-    * the walk ever fails).
-    */
-  private def releaseCheckpoint(df: DataFrame): Unit = {
-    import org.apache.spark.rdd.RDD
-    import org.apache.spark.storage.StorageLevel
-    def walk(r: RDD[_]): Option[RDD[_]] =
-      if (r.getStorageLevel != StorageLevel.NONE) Some(r)
-      else r.dependencies.view.flatMap(d => walk(d.rdd)).headOption
-    try walk(df.queryExecution.toRdd).foreach(_.unpersist(blocking = false))
-    catch { case _: Exception => () }
-  }
-
   /** The CC node set of a media signature table: ids of the rows that
     * decoded (`media_id`, `decoded` columns), as `id`.
     */
@@ -640,27 +614,26 @@ object Dedup {
     */
   def connectedComponents(ids: DataFrame, pairList: DataFrame,
                           maxIters: Int = 20): DataFrame = {
-    val pairs = pairList.select(col("id_a"), col("id_b")).persist()
+    val pairs = Shared(pairList.select(col("id_a"), col("id_b")))
     val threshold = localEdgeThreshold(ids)
     if (threshold > 0 && integralIds(ids, pairList) && pairs.count() <= threshold) {
       val out = finishComponentsLocally(ids, pairs)
-      pairs.unpersist()
+      Shared.release(pairs)
       return out
     }
     // Symmetric edge list: propagate labels both directions.
-    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .persist()
-    // localCheckpoint (lazy), not persist: each round's plan references the
-    // prior round's labels twice, so un-truncated lineage doubles per round
-    // — at diameters near maxIters the logical plan alone OOMs the driver
-    // in explainString. The `changed` count that immediately follows every
-    // round is the action that materializes the checkpoint, so the
-    // truncation costs no extra job.
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id")).localCheckpoint(false)
-    // Round N's checkpoint is dead once round N+1 materializes; released
-    // eagerly so storage never holds more than two rounds.
+    val edges = Shared(
+      pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+        .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))))
+    // Every round is shared: each round's plan references the prior
+    // round's labels twice, so an unshared plan doubles per round — at
+    // diameters near maxIters the logical plan alone OOMs the driver in
+    // explainString. The `changed` count that immediately follows every
+    // round materializes it, so sharing costs no extra job.
+    var labels = Shared(edges.select(col("src").as("id")).distinct()
+      .withColumn("label", col("id")))
+    // Round N is dead once round N+1 materializes; released eagerly so
+    // storage never holds more than two rounds.
     var prevCp: DataFrame = labels
     var converged = false
     var iter = 0
@@ -669,26 +642,26 @@ object Dedup {
         .groupBy(col("src")).agg(min(col("label")).as("nmin"))
       // Carry the previous label through so convergence is read off the
       // same materialized pass — one join per round, not two.
-      val next = labels.join(neighborMin, labels("id") === neighborMin("src"), "left_outer")
-        .select(col("id"), col("label").as("_old"),
-          least(col("label"), coalesce(col("nmin"), col("label"))).as("label"))
-        .localCheckpoint(false)
+      val next = Shared(
+        labels.join(neighborMin, labels("id") === neighborMin("src"), "left_outer")
+          .select(col("id"), col("label").as("_old"),
+            least(col("label"), coalesce(col("nmin"), col("label"))).as("label")))
       val changed = next.filter(col("label") =!= col("_old")).count()
-      releaseCheckpoint(prevCp)
+      Shared.release(prevCp)
       prevCp = next
       labels = next.select(col("id"), col("label"))
       converged = changed == 0
       iter += 1
     }
-    edges.unpersist()
-    pairs.unpersist()
+    Shared.release(edges)
+    Shared.release(pairs)
     // A diameter beyond maxIters would silently split one true component
     // into several — wrong answers, undetectably — if we returned here.
     // Instead switch algorithms: star contraction's round count grows with
     // log² of the component size, not its diameter, so chain-shaped
     // components (the propagation worst case) still converge.
     if (!converged) {
-      releaseCheckpoint(prevCp)
+      Shared.release(prevCp)
       return connectedComponentsStar(ids, pairList)
     }
     // Singletons (never touched by an edge) label themselves.
@@ -710,7 +683,6 @@ object Dedup {
     */
   def connectedComponentsStar(ids: DataFrame, pairList: DataFrame,
                               maxRounds: Int = 50): DataFrame = {
-    import org.apache.spark.sql.DataFrame
     // Normalized undirected edge set: (u, v) with u < v, no self-loops.
     def normalize(df: DataFrame): DataFrame =
       df.select(least(col("u"), col("v")).as("u"),
@@ -749,19 +721,14 @@ object Dedup {
         .union(wm.filter(col("src") =!= col("__m"))
           .select(col("src").as("u"), col("__m").as("v"))))
     }
-    // localCheckpoint (not persist): each round's plan references the prior
-    // round's several times (sym twice per star op), so lineage grows
-    // multiplicatively — by round ~15 the un-truncated logical plan alone
-    // OOMs the driver. Checkpointing pins the rows AND truncates the plan;
-    // on a cluster use reliable checkpointing for executor-loss tolerance.
-    // LAZY (eager = false): the signature aggregation that immediately
-    // follows every checkpoint is itself an action, so it materializes the
-    // checkpoint as a side effect — one job per round instead of two
-    // (an eager checkpoint would run the round's plan, then signature would
-    // run a second job over the pinned rows).
-    var edges = normalize(
-      pairList.select(col("id_a").as("u"), col("id_b").as("v")))
-      .localCheckpoint(false)
+    // Every round is shared: each round's plan references the prior
+    // round's several times (sym twice per star op), so an unshared plan
+    // grows multiplicatively — by round ~15 it alone OOMs the driver. The
+    // signature aggregation that immediately follows every round is
+    // itself an action, so it materializes the shared rows as a side
+    // effect — one job per round instead of two.
+    var edges = Shared(normalize(
+      pairList.select(col("id_a").as("u"), col("id_b").as("v"))))
     // Convergence = the normalized edge set reached a fixed point, detected
     // by (count, order-independent hash-sum) — a collision would need two
     // DIFFERENT edge sets of equal size with equal 64-bit sums inside one
@@ -791,12 +758,12 @@ object Dedup {
       if (sig._1 <= threshold) {
         val out = finishComponentsLocally(ids, edges.select(
           col("u").as("id_a"), col("v").as("id_b")))
-        releaseCheckpoint(edges) // finisher collected eagerly; blocks dead
+        Shared.release(edges) // finisher collected eagerly; blocks dead
         return out
       }
-      val next = smallStar(largeStar(edges)).localCheckpoint(false)
+      val next = Shared(smallStar(largeStar(edges)))
       val nsig = signature(next)
-      releaseCheckpoint(edges)
+      Shared.release(edges)
       edges = next
       converged = nsig == sig
       sig = nsig
@@ -863,7 +830,7 @@ object Dedup {
         // Single-pass sizing: each bs row is one (doc, distinct-shingle)
         // pair (ShingleHashes emits per-doc distinct hashes), so count(bs)
         // = Σ per-doc distinct counts ≥ the global distinct count — a
-        // narrow map-side count instead of r10's distinct().persist() +
+        // narrow map-side count instead of r10's persisted distinct +
         // count() + bloom-over-cached-distinct (a wide shuffle plus a
         // cached second pass). Overestimating n only WIDENS the filter
         // (effective fpp drops below the requested one); the bloom is then

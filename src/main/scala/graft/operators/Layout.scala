@@ -193,7 +193,7 @@ object Layout {
       .parquet(path).drop("__file")
 
   /** The curated-sink round trip: an eager [[writeCurated]] of `df` to
-    * `path`, then `release` (the caller's caches of `df`'s inputs) in a
+    * `path`, then `release` (frees the caller's shared inputs of `df`) in a
     * `finally`, then the schema-pinned [[readCurated]] read-back.
     */
   def curatedRoundTrip(df: DataFrame, path: String, partitionCol: String,

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Shared
 
 /** Shared sub-sequence containment machinery — ONE audited
   * implementation for every temporally-ordered perceptual-hash modality
@@ -59,7 +60,7 @@ object SequenceContainment {
   /** See object doc. `df` columns: idCol, posCol, nCol, hashCol.
     *
     * `shareUpstream` (default true): materialize the capped-window rows
-    * once (localCheckpoint) so the three internal consumers share a
+    * once ([[Shared]]) so the three internal consumers share a
     * single evaluation of the caller's upstream — right when that
     * upstream is expensive (media decode). A caller whose upstream is
     * CHEAP relative to the rows it yields (p112: synthesized audio
@@ -110,39 +111,21 @@ object SequenceContainment {
                         shareUpstream: Boolean)
       : DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // localCheckpoint (r18 optimization round): three consumers read
-    // this subtree — the surviving-count aggregate and BOTH sides of the
+    // Shared (r18 optimization round): three consumers read this
+    // subtree — the surviving-count aggregate and BOTH sides of the
     // alignment self-join. Exchange reuse dedupes them only when AQE
     // happens to canonicalize all three reads onto one exchange; at
     // local[32] the profile showed the plant/decode/window upstream (the
     // operator's dominant cost — 219 s summed task time for p100's GIF
     // encode+demux) evaluated a SECOND time (+27.5 s). The rows here are
-    // slim (id, pos, n, hash, side) — hash-sized, never payloads — the
-    // same per-clip-cardinality class every signature table lands at
-    // 100 TB. localCheckpoint, NOT persist: a plan-keyed persist would
-    // survive into the next invocation of the same query (a bench
-    // iteration would read the previous iteration's cache — timing
-    // artifact, not engine speed); the checkpoint is scoped to THIS
-    // DataFrame instance, so every invocation recomputes the upstream
-    // exactly once and all three consumers share it. Lazy (eager=false):
-    // the caller's first action materializes it — no extra job.
+    // slim (id, pos, n, hash, side) — hash-sized, never payloads.
     // Gated on `shareUpstream` (r19): a cheap-upstream caller skips the
     // materialization barrier entirely — see [[pairs]].
-    // Checkpoint blocks are NOT explicitly released (there is no "end of
-    // invocation" action inside this pure function to hang a release on);
-    // rows are slim (id, pos, n, hash, side — per-element-hash, never
-    // payloads) and the ContextCleaner reclaims them once the returned
-    // frame is unreferenced. Fleet-scale note: localCheckpoint blocks
-    // live on executor storage only — on executor loss this query fails
-    // and is re-run rather than recomputed from lineage, acceptable here
-    // because the checkpoint is invocation-scoped (minutes, not a
-    // long-lived intermediate) and the alternative is paying the decode
-    // upstream 3× per invocation on every run.
     val cappedRaw = wins
       .withColumn("__bs", count(lit(1)).over(Window.partitionBy(col("__h"))))
       .filter(col("__bs") <= maxBucketSize).drop("__bs")
     val capped =
-      if (shareUpstream) cappedRaw.localCheckpoint(false) else cappedRaw
+      if (shareUpstream) Shared(cappedRaw) else cappedRaw
     // Per-id surviving counts: one slim row per clip. Small at fixture
     // scale but per-CLIP-cardinality at corpus scale, so NO forced
     // broadcast hint (the r17 verdict: a hint here rested on Catalyst's

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Shared
 
 import graft.engine.Tables
 import graft.functions.{HashExpressions, TextFunctions => TF}
@@ -49,30 +50,18 @@ object Pipeline {
   private def emb(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "embeddings")
 
-  // Lazy checkpoint for decode-derived SIGNATURE frames consumed by
-  // several plan branches (r19): the banded pair join reads its input
-  // three times (bucket pass + both exact-verify sides) and the CC node
-  // set a fourth — without a cut those are four SEPARATE instances of
-  // the decode subtree (no block sharing between distinct RDD instances,
-  // so the media decode runs four times per modality). localCheckpoint
-  // collapses them onto one RDD whose partitions compute once — the
-  // SequenceContainment/p100 recipe; NOT a plan-keyed persist, which
-  // would serve one bench iteration's rows to the next. Signature rows
-  // are slim (id + 4 band words + flags). Applied per query where an
-  // interleaved ConfAb A/B measured a win; blocks are invocation-scoped,
-  // reclaimed by the ContextCleaner.
-  // Unlike a MEMORY_AND_DISK persist, localCheckpoint TRUNCATES lineage:
-  // a lost block cannot be recomputed, so losing an executor fails the
-  // job instead of re-running the decode. On the parsed-WARC frames of
-  // p142, p145, p146 and p151 the checkpointed rows carry the full
-  // payloads, not slim signatures.
-  private def ckSigs(df: DataFrame): DataFrame = df.localCheckpoint(false)
+  // Decode-derived SIGNATURE frames consumed by several plan branches are
+  // [[Shared]] (r19): the banded pair join reads its input three times
+  // (bucket pass + both exact-verify sides) and the CC node set a fourth,
+  // and without sharing those are four separate instances of the decode
+  // subtree, so the media decode runs four times per modality. Applied
+  // per query where an interleaved ConfAb A/B measured a win.
 
   /** The pair capstones' export: pairs joined to their media's near-dup
     * cluster (`labels`: id, cluster_id), caption pools per canonical
     * (cluster-minimum) media id, landed through the curated sink in 4
     * shards and read back in canonical order. `release` frees the
-    * caller's caches once the write is done.
+    * caller's shared frames once the write is done.
     */
   private def captionPools(pairs: DataFrame, labels: DataFrame,
                            idCol: String, canonicalCol: String, out: String)
@@ -418,7 +407,7 @@ object Pipeline {
     // as p09 (measured overlap on this corpus: 0.87-1.0). ----
     "p15_winnow_fingerprints" -> ((s, dir) => {
       HashExpressions.register(s)
-      // The pair list is materialized ONCE (localCheckpoint; output is
+      // The pair list is shared (output is
       // |pairs| rows — tiny next to the corpus): it feeds three consumers
       // below, and without materialization each re-evaluates the whole
       // minhash band-shuffle + verify DAG (driver benches measured 5-8 s
@@ -428,14 +417,13 @@ object Pipeline {
       // too so the a-side and b-side joins share one evaluation — at
       // 100 TB this is the floor: one corpus pass for pair generation,
       // one corpus scan for the semi-join, winnowing |pair-docs| texts.
-      val pairs = Dedup.nearDupPairs(docsFanned(s, dir), "doc_id", "text",
-        shingleLen = 5, threshold = 0.5).localCheckpoint()
+      val pairs = Shared(Dedup.nearDupPairs(docsFanned(s, dir), "doc_id",
+        "text", shingleLen = 5, threshold = 0.5))
       val ids = pairs.select(explode(array(col("id_a"), col("id_b")))
         .as("doc_id")).distinct()
-      val wf = docs(s, dir).join(ids, Seq("doc_id"), "left_semi")
+      val wf = Shared(docs(s, dir).join(ids, Seq("doc_id"), "left_semi")
         .select(col("doc_id"),
-          HashExpressions.winnowFingerprints(col("text"), 5, 4).as("wf"))
-        .localCheckpoint()
+          HashExpressions.winnowFingerprints(col("text"), 5, 4).as("wf")))
       pairs
         .join(wf.select(col("doc_id").as("id_a"), col("wf").as("wf_a")), Seq("id_a"))
         .join(wf.select(col("doc_id").as("id_b"), col("wf").as("wf_b")), Seq("id_b"))
@@ -1267,8 +1255,8 @@ object Pipeline {
       // maxBucketSize explicit: the all-pairs oracle equality below is the
       // point of this query, so the scale cap (default 1000) must be a
       // no-op here by construction, not by fixture luck.
-      // ckSigs measured NEUTRAL here (ConfAb 0.97/1.01 over 8 reps):
-      // pairs-only shape, 3 reads, no CC consumer — left raw.
+      // Sharing the signatures measured NEUTRAL here (ConfAb 0.97/1.01
+      // over 8 reps): pairs-only shape, 3 reads, no CC consumer — left raw.
       ImageHash.nearDupPairs(
           ImageHash.dhashSignatures(base.unionByName(copies)),
           maxBucketSize = Long.MaxValue)
@@ -1393,7 +1381,7 @@ object Pipeline {
       val copies = Multimodal
         .resizePooled(base.filter(col("media_id") % 5 === 0), 1)
         .withColumn("media_id", col("media_id") + CopyIdOffset)
-      val sigs = ckSigs(ImageHash.dhashSignatures(base.unionByName(copies)))
+      val sigs = Shared(ImageHash.dhashSignatures(base.unionByName(copies)))
       // explicit uncapped: the recursive-CTE CC oracle is the ALL-PAIRS
       // graph's answer, same reasoning as p75.
       Dedup.uncappedClusters(sigs,
@@ -1438,7 +1426,7 @@ object Pipeline {
       // maxBucketSize explicit: all-pairs oracle equality is the point,
       // so the scale cap (default 1000) must be a no-op by construction.
       AudioHash.nearDupPairs(
-          ckSigs(AudioHash.fingerprints(base.unionByName(copies))),
+          Shared(AudioHash.fingerprints(base.unionByName(copies))),
           maxBucketSize = Long.MaxValue)
         .orderBy(col("id_a"), col("id_b"))
     }),
@@ -1454,7 +1442,7 @@ object Pipeline {
       val copies = Multimodal
         .resampleAudioDecimated(base.filter(col("media_id") % 5 === 0), 1)
         .withColumn("media_id", col("media_id") + CopyIdOffset)
-      val sigs = ckSigs(AudioHash.fingerprints(base.unionByName(copies)))
+      val sigs = Shared(AudioHash.fingerprints(base.unionByName(copies)))
       Dedup.uncappedClusters(sigs,
         (d, cap) => AudioHash.nearDupPairs(d, maxBucketSize = cap))
         .select(col("id"), col("cluster_id"),
@@ -1594,7 +1582,8 @@ object Pipeline {
           base.filter(col("media_id") % 5 === 0), 1)
         .withColumn("media_id", col("media_id") + CopyIdOffset)
       // maxBucketSize explicit: all-pairs oracle equality is the point.
-      // ckSigs measured NEUTRAL here (ConfAb 1.04) — pairs-only shape.
+      // Sharing the signatures measured NEUTRAL here (ConfAb 1.04) —
+      // pairs-only shape.
       VideoHash.nearDupPairs(
           VideoHash.fingerprints(base.unionByName(copies), everyN = 2),
           maxBucketSize = Long.MaxValue)
@@ -1612,7 +1601,7 @@ object Pipeline {
       val copies = Multimodal.resizeVideoPooled(
           base.filter(col("media_id") % 5 === 0), 1)
         .withColumn("media_id", col("media_id") + CopyIdOffset)
-      val sigs = ckSigs(VideoHash.fingerprints(base.unionByName(copies),
+      val sigs = Shared(VideoHash.fingerprints(base.unionByName(copies),
         everyN = 2))
       // explicit uncapped: the recursive-CTE CC oracle is the ALL-PAIRS
       // graph's answer, same reasoning as p81/p84.
@@ -1638,12 +1627,11 @@ object Pipeline {
     "p91_crawl_curation_capstone" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
       // Parse ONCE, route three ways: the parsed records feed the image,
-      // audio, and html branches — persist so the WARC plant+parse isn't
+      // audio, and html branches — shared so the WARC plant+parse isn't
       // re-executed per branch (at 100 TB you'd land the parsed records
       // once for the same reason; the eager sink write below lets the
-      // cache release before the query returns).
-      val recs = Warc.responses(Warc.plantMixedWarcsFp(docs(s, dir)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // shared rows go before the query returns).
+      val recs = Shared(Warc.responses(Warc.plantMixedWarcsFp(docs(s, dir))))
       def survivors(sigs: DataFrame,
                     pairs: (DataFrame, Long) => DataFrame, kind: String) =
         Dedup.uncappedClusters(sigs, pairs)
@@ -1651,11 +1639,11 @@ object Pipeline {
           .select(lit(kind).as("kind"), col("id"), col("cluster_id"))
       // uncapped pairs: the oracle is the all-pairs CC answer (p81/p84
       // reasoning); the fp plants bound natural pair volume by design.
-      val isigs = ckSigs(
+      val isigs = Shared(
         ImageHash.dhashSignatures(Warc.mediaPayloads(recs, "image")))
       val isurv = survivors(isigs,
         (d, cap) => ImageHash.nearDupPairs(d, maxBucketSize = cap), "image")
-      val asigs = ckSigs(
+      val asigs = Shared(
         AudioHash.fingerprints(Warc.mediaPayloads(recs, "audio")))
       val asurv = survivors(asigs,
         (d, cap) => AudioHash.nearDupPairs(d, maxBucketSize = cap), "audio")
@@ -1681,7 +1669,7 @@ object Pipeline {
       // write (the sink IS part of the operator under test)
       val out = Layout.sinkDir(s, "p91:" + dir)
       Layout.curatedRoundTrip(curated, out, "kind", Seq("id"),
-          filesPerPartition = 2)(recs.unpersist(false))
+          filesPerPartition = 2)(Shared.release(recs))
         .orderBy(col("kind"), col("id"))
     }),
 
@@ -1908,7 +1896,7 @@ object Pipeline {
     // recursive-CTE CC, zero knowledge of WARC framing or routing. ----
     "p102_crawl_video_dedup" -> ((s, dir) => {
       val recs = Warc.responses(Warc.plantVideoWarcs(docs(s, dir)))
-      val sigs = ckSigs(VideoHash.fingerprints(
+      val sigs = Shared(VideoHash.fingerprints(
         Warc.mediaPayloads(recs, "video"),
         everyN = 2))
       // maxBucketSize explicit: all-pairs oracle equality is the point.
@@ -1969,15 +1957,14 @@ object Pipeline {
     // the disk hop. Eager write at construction (p86 convention). ----
     "p104_shard_export" -> ((s, dir) => {
       graft.functions.Bpe.registerBig(s)
-      // Persist the token counts: packByBudget's two-phase prefix sum
+      // Share the token counts: packByBudget's two-phase prefix sum
       // evaluates its input twice (per-bucket totals, then the window
-      // job) and the sink write a third time — without the cache the
-      // BPE scan (the expensive stage) reruns each time. At 100 TB
+      // job) and the sink write a third time — unshared, the BPE scan
+      // (the expensive stage) reruns each time. At 100 TB
       // you'd materialize token counts once for the same reason.
-      val toks = docs(s, dir).select(col("doc_id"),
+      val toks = Shared(docs(s, dir).select(col("doc_id"),
         size(graft.functions.Bpe.bpeEncodeBig(TF.normText(col("text"))))
-          .cast("long").as("n_toks"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .cast("long").as("n_toks")))
       // Budget sized so a shard is a real training shard, not a
       // file-commit microbench: ~20k tokens/shard keeps the partitioned
       // write at dozens of leaf dirs per SF, not hundreds.
@@ -1985,7 +1972,7 @@ object Pipeline {
         budget = 20000L)
       val out = Layout.sinkDir(s, "p104:" + dir)
       Layout.curatedRoundTrip(packed, out, "shard", Seq("doc_id"))(
-          toks.unpersist(false))
+          Shared.release(toks))
         .groupBy(col("shard"))
         .agg(count(lit(1)).as("n_docs"),
           sum(col("n_toks")).cast("long").as("total_toks"),
@@ -2214,25 +2201,24 @@ object Pipeline {
     // or routing — including the temporal majority-fold video CTEs. ----
     "p114_crawl_capstone_full" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val recs = Warc.responses(Warc.plantFullWarcsFp(docs(s, dir)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val recs = Shared(Warc.responses(Warc.plantFullWarcsFp(docs(s, dir))))
       def survivors(sigs: DataFrame,
                     pairs: (DataFrame, Long) => DataFrame, kind: String) =
         Dedup.uncappedClusters(sigs, pairs)
           .filter(col("id") === col("cluster_id"))
           .select(lit(kind).as("kind"), col("id"), col("cluster_id"))
-      // ckSigs (r19): four decode passes per modality -> one; ConfAb
-      // measured p114 A=5.94 s vs B=6.20 s (5 reps) with summed task
-      // time 95 -> 79 s.
-      val isigs = ckSigs(
+      // Shared signatures (r19): four decode passes per modality -> one;
+      // ConfAb measured p114 A=5.94 s vs B=6.20 s (5 reps) with summed
+      // task time 95 -> 79 s.
+      val isigs = Shared(
         ImageHash.dhashSignatures(Warc.mediaPayloads(recs, "image")))
       val isurv = survivors(isigs,
         (d, cap) => ImageHash.nearDupPairs(d, maxBucketSize = cap), "image")
-      val asigs = ckSigs(
+      val asigs = Shared(
         AudioHash.fingerprints(Warc.mediaPayloads(recs, "audio")))
       val asurv = survivors(asigs,
         (d, cap) => AudioHash.nearDupPairs(d, maxBucketSize = cap), "audio")
-      val vsigs = ckSigs(
+      val vsigs = Shared(
         VideoHash.fingerprints(Warc.mediaPayloads(recs, "video"), everyN = 2))
       val vsurv = survivors(vsigs,
         (d, cap) => VideoHash.nearDupPairs(d, maxBucketSize = cap), "video")
@@ -2256,7 +2242,7 @@ object Pipeline {
         .unionByName(tsurv)
       val out = Layout.sinkDir(s, "p114:" + dir)
       Layout.curatedRoundTrip(curated, out, "kind", Seq("id"),
-          filesPerPartition = 2)(recs.unpersist(false))
+          filesPerPartition = 2)(Shared.release(recs))
         .orderBy(col("kind"), col("id"))
     }),
 
@@ -2503,16 +2489,15 @@ object Pipeline {
           explode(filter(split(TF.normText(col("text")), " "),
             w => length(w) > 0)).as("word"))
         .filter(col("word").rlike(BpeTrain.WordPattern))
-      val toks = words.join(kept, Seq("doc_id"))
+      val toks = Shared(words.join(kept, Seq("doc_id"))
         .join(sizes, Seq("word"))
         .groupBy(col("doc_id"))
-        .agg(sum(col("n_syms")).cast("long").as("n_toks"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .agg(sum(col("n_syms")).cast("long").as("n_toks")))
       val packed = Sampling.packByBudget(toks, "doc_id", "n_toks",
         budget = 20000L)
       val out = Layout.sinkDir(s, "p122:" + dir)
       Layout.curatedRoundTrip(packed, out, "shard", Seq("doc_id"))(
-          toks.unpersist(false))
+          Shared.release(toks))
         .groupBy(col("shard"))
         .agg(count(lit(1)).as("n_docs"),
           sum(col("n_toks")).cast("long").as("total_toks"),
@@ -3137,11 +3122,10 @@ object Pipeline {
     // decoded caption, the alt fallback, the gate, and the join
     // closed-form from the id arithmetic — it never parses a page. ----
     "p142_image_text_pairs" -> ((s, dir) => {
-      // ckSigs on the parsed-WARC frame (r19): three consumers (pages'
-      // html decode, the dhash decode side, the target-uri join side)
-      // each re-ran the WARC plant+parse — same cut as p157's recs
-      // persist.
-      val recs = ckSigs(Warc.responses(Warc.plantPairedWarcs(docs(s, dir))))
+      // Shared parsed-WARC frame (r19): three consumers (pages' html
+      // decode, the dhash decode side, the target-uri join side) each
+      // re-ran the WARC plant+parse — same cut as p157's recs.
+      val recs = Shared(Warc.responses(Warc.plantPairedWarcs(docs(s, dir))))
       val pages = Warc.htmlPages(recs)
       val imgs = Warc.withTargetUri(
         ImageHash.dhashSignatures(Warc.mediaPayloads(recs, "image")),
@@ -3163,18 +3147,16 @@ object Pipeline {
     // pool. Oracle: planted pairs + dhash words + recursive CC, all
     // closed-form. ----
     "p143_paired_crawl_capstone" -> ((s, dir) => {
-      val recs = Warc.responses(Warc.plantPairedWarcs(docs(s, dir)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val recs = Shared(Warc.responses(Warc.plantPairedWarcs(docs(s, dir))))
       val pages = Warc.htmlPages(recs)
-      // Slim persisted signatures: the pair join, the CC seed and the
-      // band pairs all consume them — uncached each would re-run the
-      // PNG decode (recs caches only parsed WARC bytes). Released with
+      // Slim shared signatures: the pair join, the CC seed and the
+      // band pairs all consume them — unshared each would re-run the
+      // PNG decode (recs holds only parsed WARC bytes). Released with
       // recs after the sink write.
-      val sigs = ImageHash.dhashSignatures(
+      val sigs = Shared(ImageHash.dhashSignatures(
           Warc.mediaPayloads(recs, "image"))
         .select(col("media_id"), col("dhash"), col("b0"), col("b1"),
-          col("b2"), col("b3"), col("decoded"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          col("b2"), col("b3"), col("decoded")))
       val imgs = Warc.withTargetUri(sigs, recs, "image",
         "image_id", "img_url")
       val pairs = Html.imageTextPairs(pages, "page_id", "html",
@@ -3186,10 +3168,10 @@ object Pipeline {
       val labels = Dedup.uncappedClusters(sigs,
         (d, cap) => ImageHash.nearDupPairs(d, maxBucketSize = cap))
       // the p86 sink discipline: eager write (the export IS part of the
-      // pipeline under test), then the cache releases before return.
+      // pipeline under test), then the shared frames are released.
       captionPools(pairs, labels, "image_id", "canonical_image",
           Layout.sinkDir(s, "p143:" + dir)) {
-        sigs.unpersist(false); recs.unpersist(false)
+        Shared.release(sigs); Shared.release(recs)
       }
     }),
 
@@ -3234,8 +3216,8 @@ object Pipeline {
     // and joined on the canonical URL across two different messy
     // variants. The oracle recomputes everything closed-form. ----
     "p145_audio_text_pairs" -> ((s, dir) => {
-      // ckSigs on the parsed-WARC frame — the p142 rationale.
-      val recs = ckSigs(
+      // Shared parsed-WARC frame — the p142 rationale.
+      val recs = Shared(
         Warc.responses(Warc.plantAudioPairedWarcs(docs(s, dir))))
       val pages = Warc.htmlPages(recs)
       val clips = Warc.withTargetUri(
@@ -3261,8 +3243,8 @@ object Pipeline {
     // on the canonical URL. The oracle recomputes everything
     // closed-form. ----
     "p146_video_text_pairs" -> ((s, dir) => {
-      // ckSigs on the parsed-WARC frame — the p142 rationale.
-      val recs = ckSigs(
+      // Shared parsed-WARC frame — the p142 rationale.
+      val recs = Shared(
         Warc.responses(Warc.plantVideoPairedWarcs(docs(s, dir))))
       val pages = Warc.htmlPages(recs)
       val clips = Warc.withTargetUri(
@@ -3308,21 +3290,20 @@ object Pipeline {
       val pages = docsFanned(s, dir)
         .select(col("doc_id"),
           Html.plantedPageWithFigures(col("doc_id"), col("text")).as("html"))
-      // Persist the per-page costs: packByBudget's two-phase prefix sum
+      // Share the per-page costs: packByBudget's two-phase prefix sum
       // evaluates its input twice and the sink write a third time —
-      // without the cache the parse+extract stage (the expensive one)
+      // unshared, the parse+extract stage (the expensive one)
       // reruns each time (the p104 rationale).
-      val costs = Html.interleavedDoc(pages, "doc_id", "html")
+      val costs = Shared(Html.interleavedDoc(pages, "doc_id", "html")
         .groupBy(col("page_id"))
         .agg(sum(when(col("kind") === "image", lit(16))
             .otherwise(col("n_words"))).cast("long").as("n_toks"),
-          count(when(col("kind") === "image", lit(1))).as("n_images"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          count(when(col("kind") === "image", lit(1))).as("n_images")))
       val packed = Sampling.packByBudget(costs, "page_id", "n_toks",
         budget = 5000L)
       val out = Layout.sinkDir(s, "p148:" + dir)
       Layout.curatedRoundTrip(packed, out, "shard", Seq("page_id"))(
-          costs.unpersist(false))
+          Shared.release(costs))
         .groupBy(col("shard"))
         .agg(count(lit(1)).as("n_pages"),
           sum(col("n_toks")).cast("long").as("total_toks"),
@@ -3347,7 +3328,7 @@ object Pipeline {
       val recs = Warc.responses(Warc.plantPairedWarcs(docs(s, dir)))
       // Static side left UNMATERIALIZED (r19, measured): the incremental
       // planner does re-evaluate this subtree per micro-batch (~27 s
-      // summed task time vs 3.5 s wall), but a ckSigs checkpoint
+      // summed task time vs 3.5 s wall), but sharing it
       // measured a consistent LOSS in the interleaved A/B — B/A 0.98 at
       // 32 cores, 0.92 at 8 (5 reps each): the serial materialization
       // barrier delays the first batch more than the per-batch
@@ -3383,17 +3364,16 @@ object Pipeline {
     "p150_hard_negatives" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val recs = Warc.responses(Warc.plantPairedWarcs(docs(s, dir)))
-      // Persist the slim signature table: it feeds the band pairs, the
-      // CC seed AND the ranking join — without the cache each consumer
-      // re-runs the WARC parse + PNG decode (the expensive stage). At
+      // Share the slim signature table: it feeds the band pairs, the
+      // CC seed AND the ranking join — unshared, each consumer re-runs
+      // the WARC parse + PNG decode (the expensive stage). At
       // 100 TB you'd land signatures to parquet once for the same
       // reason (the p92 discipline).
-      val sigs = ImageHash.dhashSignatures(
+      val sigs = Shared(ImageHash.dhashSignatures(
           Warc.mediaPayloads(recs, "image"))
         .filter(col("decoded"))
         .select(col("media_id"), col("dhash"), col("b0"), col("b1"),
-          col("b2"), col("b3"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          col("b2"), col("b3"), col("decoded")))
       val labels = Dedup.connectedComponents(
         sigs.select(col("media_id").as("id")),
         ImageHash.nearDupPairs(sigs, maxBucketSize = Long.MaxValue))
@@ -3404,7 +3384,7 @@ object Pipeline {
         .select(col("media_id").as("probe_id"),
           col("dhash").as("q_hash"), col("cluster_id").as("q_cluster"))
       // Size-derived panel strategy (r19): the theta join's sides carry
-      // no usable size estimates (cache + CC-output lineage, Catalyst
+      // no usable size estimates (shared + CC-output lineage, Catalyst
       // guesses ~868 GB), so without real stats it falls back to a
       // CartesianProduct. The panel is a corpus/64 sample, so its safe
       // physical shape depends on CORPUS size:
@@ -3418,10 +3398,8 @@ object Pipeline {
       //    broadcast hint survives BroadcastGuard while the panel is
       //    small, and past the guard's ceiling the cartesian streams a
       //    multi-split parquet panel — no single partition grows with N.
-      // localCheckpoint cannot do this: LogicalRDD.fromDataset carries the
-      // ORIGIN plan's 868 GB estimate into the checkpoint node, so the hint
-      // still dies. The write overwrites a per-fixture directory (the
-      // p86/p101 sink discipline), so nothing is served across bench runs.
+      // The write overwrites a per-fixture directory (the p86/p101 sink
+      // discipline), so nothing is served across bench runs.
       val landPanel = !graft.engine.Tables.isNarrowScan(s, dir, "documents")
       val panelPath = Layout.sinkDir(s, "p150panel:" + dir) + "/panel"
       if (landPanel) probes0.write.mode("overwrite").parquet(panelPath)
@@ -3435,13 +3413,9 @@ object Pipeline {
           bit_count(col("q_hash").bitwiseXOR(col("dhash"))).cast("int"))
       val w = Window.partitionBy(col("probe_id"))
         .orderBy(col("dist"), col("media_id"))
-      // CC ran its actions eagerly (labels is localCheckpoint'd), so
-      // the decode has already executed ONCE into the cache; the
-      // returned plan's ranking join reads the cached ~16-byte rows.
-      // The persist is deliberately not released: unpersisting here
-      // would force the final job to re-decode (the cache is the only
-      // thing standing between it and the codec), and the table is
-      // signature-sized, not corpus-sized.
+      // CC ran its actions eagerly, so the decode has already executed
+      // ONCE into the shared rows; the returned plan's ranking join reads
+      // those ~16-byte rows.
       cands.withColumn("rn", row_number().over(w))
         .filter(col("rn") <= 3)
         .select(col("probe_id"), col("media_id").as("negative_id"),
@@ -3459,8 +3433,8 @@ object Pipeline {
     // the per-language counts, sqrt reweighting, and the hash cutoff
     // closed-form. ----
     "p151_pair_language_mixture" -> ((s, dir) => {
-      // ckSigs on the parsed-WARC frame — the p142 rationale.
-      val recs = ckSigs(Warc.responses(Warc.plantPairedWarcs(docs(s, dir))))
+      // Shared parsed-WARC frame — the p142 rationale.
+      val recs = Shared(Warc.responses(Warc.plantPairedWarcs(docs(s, dir))))
       val pages = Warc.htmlPages(recs)
       val imgs = Warc.withTargetUri(
         ImageHash.dhashSignatures(Warc.mediaPayloads(recs, "image")),
@@ -3503,10 +3477,9 @@ object Pipeline {
     // FROM-SCRATCH rebuild over the survivors and must match the
     // incremental repair exactly. ----
     "p153_pair_deletion" -> ((s, dir) => {
-      val recs = Warc.responses(Warc.plantPairedWarcs(docs(s, dir)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val recs = Shared(Warc.responses(Warc.plantPairedWarcs(docs(s, dir))))
       val pages = Warc.htmlPages(recs)
-      // Persisted (r18 optimization round, reversing the part-2 revert):
+      // Shared (r18 optimization round, reversing the part-2 revert):
       // whole-invocation profiling showed 73 jobs / 147 s of summed task
       // time, ~10 of them full PNG-decode passes re-derived from the
       // cached WARC rows — propagateDeletes and the pair join each
@@ -3515,10 +3488,9 @@ object Pipeline {
       // 11.7 s wall / 147 s task time vs persisted (see below) — the
       // part-2 "persisted slower" reading was taken across a drifting
       // host window. Slim rows only (media_id, dhash bits, decoded).
-      val sigs = ImageHash.dhashSignatures(
+      val sigs = Shared(ImageHash.dhashSignatures(
           Warc.mediaPayloads(recs, "image"))
-        .filter(col("decoded"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .filter(col("decoded")))
       // Residual task-time attribution (r19, measured, left as-is): the
       // first action here is CC's edge count over the banded self-join,
       // whose plan reads `sigs` three times (buckets + both exact-verify
@@ -3534,12 +3506,12 @@ object Pipeline {
       // local[32] the concurrent duplicate passes land on otherwise-idle
       // cores, while the populate's single-chain pass is pure added
       // critical path. The redundancy costs CPU, not wall; rejected.
-      // ndPairs persisted too: both CC calls (labels0 and
+      // ndPairs shared too: both CC calls (labels0 and
       // propagateDeletes' touched-cluster CC) materialize their own
       // internal copy and release it on exit, so the banded-hamming
       // self-join otherwise runs twice.
-      val ndPairs = ImageHash.nearDupPairs(sigs, maxBucketSize = Long.MaxValue)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val ndPairs = Shared(
+        ImageHash.nearDupPairs(sigs, maxBucketSize = Long.MaxValue))
       val labels0 = Dedup.connectedComponents(
         sigs.select(col("media_id").as("id")), ndPairs)
       val deletes = sigs.filter(col("media_id") % 12 === 0)
@@ -3553,10 +3525,10 @@ object Pipeline {
         .join(deletes.select(col("id").as("image_id")),
           Seq("image_id"), "left_anti")
       // the p143 sink discipline: the post-delete pool IS the refreshed
-      // export; eager write, then the fixture cache releases.
+      // export; eager write, then the shared frames are released.
       captionPools(pairs, labels, "image_id", "canonical_image",
           Layout.sinkDir(s, "p153:" + dir))(
-        Seq(recs, sigs, ndPairs).foreach(_.unpersist(false)))
+        Seq(recs, sigs, ndPairs).foreach(Shared.release))
     }),
 
     // ---- per-host PAIR-YIELD funnel (the p73 monitoring class for the
@@ -3603,10 +3575,10 @@ object Pipeline {
     // caption pool, landed through the curated sink. Oracle: planted
     // pairs + fingerprint words + recursive CC, all closed-form. ----
     "p155_audio_paired_capstone" -> ((s, dir) => {
-      val recs = Warc.responses(Warc.plantAudioPairedWarcs(docs(s, dir)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val recs =
+        Shared(Warc.responses(Warc.plantAudioPairedWarcs(docs(s, dir))))
       val pages = Warc.htmlPages(recs)
-      val sigs = ckSigs(AudioHash.fingerprints(
+      val sigs = Shared(AudioHash.fingerprints(
         Warc.mediaPayloads(recs, "audio")))
       val clips = Warc.withTargetUri(sigs, recs, "audio",
         "audio_id", "clip_url")
@@ -3617,7 +3589,7 @@ object Pipeline {
       val labels = Dedup.uncappedClusters(sigs,
         (d, cap) => AudioHash.nearDupPairs(d, maxBucketSize = cap))
       captionPools(pairs, labels, "audio_id", "canonical_clip",
-          Layout.sinkDir(s, "p155:" + dir))(recs.unpersist(false))
+          Layout.sinkDir(s, "p155:" + dir))(Shared.release(recs))
     }),
 
     // ---- the VIDEO paired capstone (the WebVid-shape end of the
@@ -3628,10 +3600,10 @@ object Pipeline {
     // dHash + CC under the (id/10)*10 copy rule) → captions per
     // canonical clip through the curated sink. ----
     "p156_video_paired_capstone" -> ((s, dir) => {
-      val recs = Warc.responses(Warc.plantVideoPairedWarcs(docs(s, dir)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val recs =
+        Shared(Warc.responses(Warc.plantVideoPairedWarcs(docs(s, dir))))
       val pages = Warc.htmlPages(recs)
-      val sigs = ckSigs(VideoHash.fingerprints(
+      val sigs = Shared(VideoHash.fingerprints(
         Warc.mediaPayloads(recs, "video"),
         everyN = 2))
       val clips = Warc.withTargetUri(sigs, recs, "video",
@@ -3642,7 +3614,7 @@ object Pipeline {
       val labels = Dedup.uncappedClusters(sigs,
         (d, cap) => VideoHash.nearDupPairs(d, maxBucketSize = cap))
       captionPools(pairs, labels, "video_id", "canonical_clip",
-          Layout.sinkDir(s, "p156:" + dir))(recs.unpersist(false))
+          Layout.sinkDir(s, "p156:" + dir))(Shared.release(recs))
     }),
 
     // ---- MIXED-modality pair router (one crawl, three pair
@@ -3655,8 +3627,8 @@ object Pipeline {
     // consistently. The oracle unions the three closed-form pair twins
     // with the page-wide index arithmetic. ----
     "p157_mixed_pair_router" -> ((s, dir) => {
-      val recs = Warc.responses(Warc.plantAllPairedWarcs(docs(s, dir)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val recs =
+        Shared(Warc.responses(Warc.plantAllPairedWarcs(docs(s, dir))))
       val pages = Warc.htmlPages(recs)
       def mediaOf(kind: String, idCol: String) = {
         val m = Warc.mediaPayloads(recs, kind)
@@ -3678,10 +3650,8 @@ object Pipeline {
       // so without a cut each branch re-scanned every page's HTML
       // (ProfileQuery: three ~5-9 s 32-task figure stages out of six
       // heavy leaf stages / ~50 s summed task time). Exploded spans are
-      // figure SNIPPETS (captions + media tags, not whole pages);
-      // a ckSigs lazy localCheckpoint, with the same invocation-scoped
-      // lifetime as the §6 signature checkpoints.
-      val spans = ckSigs(Html.figureSpans(pages, "page_id", "html"))
+      // figure SNIPPETS (captions + media tags, not whole pages).
+      val spans = Shared(Html.figureSpans(pages, "page_id", "html"))
       shaped(Html.imageTextPairsFrom(spans,
           mediaOf("image", "image_id"), "image_id", "m_url", "decoded"),
           "image_id", "image")

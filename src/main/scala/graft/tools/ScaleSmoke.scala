@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Shared
 
 import graft.engine.{GraftSession, Tables}
 import graft.functions.{Bpe, FastText, TextFunctions}
@@ -86,12 +87,12 @@ object ScaleSmoke {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val docs1 = Tables.load(spark, sfDir, "documents")
-      .select(col("doc_id"), col("text")).cache()
-    val emb1 = Tables.load(spark, sfDir, "embeddings")
-      .select(col("vec_id"), col("embedding")).cache()
-    val docsN = amplifyDocs(docs1, factor).cache()
-    val embN = amplifyEmb(emb1, factor).cache()
+    val docs1 = Shared(Tables.load(spark, sfDir, "documents")
+      .select(col("doc_id"), col("text")))
+    val emb1 = Shared(Tables.load(spark, sfDir, "embeddings")
+      .select(col("vec_id"), col("embedding")))
+    val docsN = Shared(amplifyDocs(docs1, factor))
+    val embN = Shared(amplifyEmb(emb1, factor))
     val (d1, dN) = (docs1.count(), docsN.count())
     val (e1, eN) = (emb1.count(), embN.count())
     println(s"[scale] docs $d1 -> $dN, embeddings $e1 -> $eN (${factor}x)")
@@ -134,8 +135,8 @@ object ScaleSmoke {
     // The 1x side is also marker-inserted (factor=1): copies carry 2x the
     // tokens of the raw text, so a raw-text baseline would overstate the
     // exponent by log_f(2) from per-doc work alone.
-    val docs1Stable = amplifyDocsClusterStable(docs1, 1).cache()
-    val docsNStable = amplifyDocsClusterStable(docs1, factor).cache()
+    val docs1Stable = Shared(amplifyDocsClusterStable(docs1, 1))
+    val docsNStable = Shared(amplifyDocsClusterStable(docs1, factor))
     docs1Stable.count(); docsNStable.count()
     bench2(df => Dedup.bestOfCluster(df, "doc_id", "text",
         score = length(col("text")).cast("double")).count(),

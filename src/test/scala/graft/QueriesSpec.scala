@@ -5,6 +5,7 @@ import java.nio.file.{Files, Path, Paths}
 import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.graft.SparkInternals
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -23,6 +24,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * Every run writes the normalized plan texts to
   * `target/plan-fingerprints/<name>.txt` and the full name → hash table to
   * `target/plan-fingerprints/fingerprints.tsv`.
+  *
+  * Leak gate, the reference's `tests/stateful_data_cleanup.rs` practice:
+  * no query may add a CacheManager entry, and once the spec's frames are
+  * unreachable the ContextCleaner must have taken back every RDD the
+  * queries persisted.
   */
 class QueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
   import SparkTestSession._
@@ -39,9 +45,16 @@ class QueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val committed = readTsv(committedFile)
   private val current = TrieMap.empty[String, String]
+  private var persistedAtStart = Set.empty[Int]
+
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    persistedAtStart = spark.sparkContext.getPersistentRDDs.keySet.toSet
+  }
 
   SparkEntry.queries.foreach { case (name, fn) =>
     test(s"$name runs, returns rows, schema is stable") {
+      val cachedBefore = SparkInternals.cachedPlans(spark)
       val df = fn(spark, sf01)
       val fields = df.schema.fields
       assert(fields.nonEmpty, "empty schema")
@@ -58,6 +71,12 @@ class QueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
       Files.createDirectories(outDir)
       val dump = outDir.resolve(s"$name.txt")
       Files.writeString(dump, PlanFingerprint.report(texts))
+      val cachedAdded = SparkInternals.cachedPlans(spark)
+        .filterNot(c => cachedBefore.exists(_ eq c))
+      if (cachedAdded.nonEmpty)
+        fail(s"$name left CacheManager entries over:\n" + cachedAdded
+          .map(_.plan.treeString.linesIterator.take(3).mkString("\n"))
+          .mkString("\n"))
       val want = committed.get(name)
       assert(want.contains(fp),
         s"$name: plan fingerprint $fp != committed ${want.getOrElse("(none)")}" +
@@ -71,6 +90,22 @@ class QueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
     // LSH buckets that DuckDB recomputes, so even the approximate ANN
     // answer is differentially verified.
     assert(noOracle.isEmpty, s"queries without oracle: $noOracle")
+  }
+
+  test("no persisted RDD outlives the queries once unreachable") {
+    val sc = spark.sparkContext
+    def leftover = sc.getPersistentRDDs.filter { case (id, _) =>
+      !persistedAtStart(id) }
+    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    while (sc.getPersistentRDDs.size > persistedAtStart.size &&
+           System.nanoTime() < deadline) {
+      System.gc()
+      Thread.sleep(250)
+    }
+    assert(sc.getPersistentRDDs.size <= persistedAtStart.size,
+      "persisted RDDs left behind:\n" + leftover.values
+        .map(r => s"rdd ${r.id} created at ${SparkInternals.creationSite(r)}")
+        .mkString("\n"))
   }
 
   /** Queries this run did not reach keep their committed hash, so the
