@@ -42,11 +42,10 @@ class SharedSpec extends AnyFunSuite {
     // with the same analyzed plan hold different rows.
     def stamped = spark.range(0, 4, 1, 2)
       .select(col("id"), unix_micros(current_timestamp()).as("t"))
-    val (a, _) = shared(stamped)
+    val a = Shared(stamped)
     val rowsA = a.collect().toSeq
     Thread.sleep(5)
-    val (b, _) = shared(stamped)
-    val rowsB = b.collect().toSeq
+    val rowsB = Shared(stamped).collect().toSeq
     assert(rowsA != rowsB, "the second frame read the first frame's rows")
     assert(a.collect().toSeq == rowsA, "the first frame lost its own rows")
     val added = SparkInternals.cachedPlans(spark)
