@@ -407,8 +407,8 @@ object Pipeline {
     // as p09 (measured overlap on this corpus: 0.87-1.0). ----
     "p15_winnow_fingerprints" -> ((s, dir) => {
       HashExpressions.register(s)
-      // The pair list is shared (output is
-      // |pairs| rows — tiny next to the corpus): it feeds three consumers
+      // The pair list is shared (output is |pairs| rows — tiny next to
+      // the corpus): it feeds three consumers
       // below, and without materialization each re-evaluates the whole
       // minhash band-shuffle + verify DAG (driver benches measured 5-8 s
       // of pure recompute at sf0.1 for three rounds). Winnow fingerprints
