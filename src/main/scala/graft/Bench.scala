@@ -1,5 +1,5 @@
 package graft
-import graft.engine.GraftSession
+import graft.engine.{ConfValue, GraftSession}
 
 /** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints one compact JSON line. Failures are NOT swallowed — a failed query
@@ -49,10 +49,7 @@ object Bench {
     // GraftSession.clusterConf translation run in local mode) go through
     // the identical bench harness, stamped in provenance below.
     val overrides = sys.env.getOrElse("SPARK_GRAFT_CONF", "")
-    overrides.split(",").filter(_.nonEmpty).foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      b.config(k, v)
-    }
+    ConfValue.overrides(overrides).foreach { case (k, v) => b.config(k, v) }
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // JVM/codegen warmup outside the timed loop: the first query otherwise

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -24,11 +23,8 @@ object Verify {
     // (`tests/tpch_correctness_test.rs:15,144-146`): e.g.
     // SPARK_GRAFT_CONF="spark.sql.adaptive.enabled=false" must yield the
     // same full-corpus oracle result as the default AQE-on run.
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(",").filter(_.nonEmpty)
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        b.config(k, v)
-      })
+    sys.env.get("SPARK_GRAFT_CONF").foreach(graft.engine.ConfValue
+      .overrides(_).foreach { case (k, v) => b.config(k, v) })
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

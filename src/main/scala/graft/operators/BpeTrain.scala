@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Shared
 
 /** BPE merge-table TRAINING (Sennrich et al., "Neural Machine
   * Translation of Rare Words with Subword Units", ACL 2016 — the
@@ -33,18 +34,19 @@ import org.apache.spark.sql.functions._
   * Spark's UTF-16 `substring` and SQL codepoint `substr` trivially
   * agreed).
   *
-  * Scale shape: the trainer iterates over the DISTINCT-WORD vocabulary
-  * (Heaps-law-bounded — millions of rows at 100 TB, not the corpus),
-  * built by one distributed count with map-side combine. Each merge
-  * round is one distributed pair-count aggregate (shuffle carries the
-  * distinct-pair table) plus a ONE-ROW driver exchange (the selected
-  * merge — the k-means centroid-exchange analog; the per-rank
-  * sequential dependency is inherent to BPE). The rewrite is a narrow
-  * per-row fold, no shuffle. Merge expressions chain across rounds, so
-  * round t re-derives rounds 1..t-1 on the fly — quadratic in the
-  * budget over a vocab-sized input, the standard trade against
-  * materializing the vocab between rounds (which `tokenizedVocab`
-  * callers can do themselves if the budget is large).
+  * Loop shape: the trainer iterates over the DISTINCT-WORD vocabulary,
+  * built by one distributed count with map-side combine. It reads that
+  * vocabulary once, into a [[org.apache.spark.sql.graft.Shared]] frame of
+  * (freq, syms) that keeps only words of two or more symbols. Each merge
+  * round is then one distributed pair-count aggregate over the current
+  * frame (the shuffle carries the distinct-pair table), a ONE-ROW driver
+  * exchange (the selected merge; the per-rank sequential dependency is
+  * inherent to BPE), and one narrow per-row fold that applies that merge
+  * to build the next round's frame. A word that collapses to one symbol
+  * drops out, since it can never form a pair again. Round t thus folds
+  * each surviving word once, not t times, and never re-reads the input.
+  * The previous round's frame is released once the next round's
+  * aggregate has read it, so training leaves no stored frame behind.
   */
 object BpeTrain {
 
@@ -95,30 +97,44 @@ object BpeTrain {
     * remains (degenerate corpora; the EmptySweep contract).
     */
   def train(vocab: DataFrame, budget: Int): Model = {
+    // (freq, syms) of the words that still have a pair, stored.
+    def multiSymbol(df: DataFrame, syms: Column): DataFrame =
+      Shared(df.select(col("freq"), syms.as("syms"))
+        .filter(size(col("syms")) >= 2))
     val out = Seq.newBuilder[Merge]
-    var syms: Column = initialSyms(col("word"))
-    var r = 1
-    var exhausted = false
-    while (r <= budget && !exhausted) {
-      val best = vocab.select(col("freq"), syms.as("__syms"))
-        .filter(size(col("__syms")) >= 2)
-        .select(col("freq"), explode(zip_with(
-          slice(col("__syms"), lit(1), size(col("__syms")) - 1),
-          slice(col("__syms"), lit(2), size(col("__syms")) - 1),
-          (a, b) => struct(a.as("l"), b.as("r")))).as("p"))
-        .groupBy(col("p.l").as("lhs"), col("p.r").as("rhs"))
-        .agg(sum(col("freq")).as("cnt"))
-        .orderBy(col("cnt").desc, col("lhs"), col("rhs"))
-        .limit(1)
-        .collect()
-      if (best.isEmpty) exhausted = true
-      else {
-        val m = Merge(r, best(0).getString(0), best(0).getString(1),
-          best(0).getLong(2))
-        out += m
-        syms = applyMerge(syms, m)
-        r += 1
+    var cur: DataFrame = null
+    var prev: DataFrame = null
+    try {
+      cur = multiSymbol(vocab, initialSyms(col("word")))
+      var r = 1
+      var exhausted = false
+      while (r <= budget && !exhausted) {
+        val best = cur
+          .select(col("freq"), explode(zip_with(
+            slice(col("syms"), lit(1), size(col("syms")) - 1),
+            slice(col("syms"), lit(2), size(col("syms")) - 1),
+            (a, b) => struct(a.as("l"), b.as("r")))).as("p"))
+          .groupBy(col("p.l").as("lhs"), col("p.r").as("rhs"))
+          .agg(sum(col("freq")).as("cnt"))
+          .orderBy(col("cnt").desc, col("lhs"), col("rhs"))
+          .limit(1)
+          .collect()
+        // `cur` is stored now; the frame it was folded from is not read again.
+        if (prev != null) { Shared.release(prev); prev = null }
+        if (best.isEmpty) exhausted = true
+        else {
+          val m = Merge(r, best(0).getString(0), best(0).getString(1),
+            best(0).getLong(2))
+          out += m
+          if (r < budget) {
+            prev = cur
+            cur = multiSymbol(cur, applyMerge(col("syms"), m))
+          }
+          r += 1
+        }
       }
+    } finally {
+      Seq(prev, cur).filter(_ != null).foreach(Shared.release)
     }
     Model(out.result())
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.graft.Shared
 
+import graft.engine.ConfValue
 import graft.functions.TextFunctions._
 import graft.functions.HashExpressions
 
@@ -510,9 +511,9 @@ object Dedup {
     * once the edge set fits in one process, O(E α(E)) union-find beats any
     * number of additional shuffle rounds.
     */
-  private def localEdgeThreshold(df: DataFrame): Long =
-    df.sparkSession.conf
-      .get("spark.graft.cc.localEdgeThreshold", (1L << 20).toString).toLong
+  private[graft] def localEdgeThreshold(df: DataFrame): Long =
+    ConfValue.get(df.sparkSession, "spark.graft.cc.localEdgeThreshold",
+      1L << 20)(_.toLong)
 
   /** Both endpoints (and the node ids) must be integral for the driver
     * finisher's LongMap union-find; non-integral ids just stay on the

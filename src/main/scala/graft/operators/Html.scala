@@ -93,7 +93,7 @@ object Html {
     * of the differential). Caption-less figures fall back to the alt
     * text and FAIL the word-count quality gate by construction.
     */
-  def plantedFigures(id: Column, text: Column): Column = {
+  def plantedFigures(id: Column): Column = {
     val n = nFigures(id)
     def fig(j: Column): Column = {
       val tgt = figTarget(id, j).cast("string")
@@ -126,7 +126,7 @@ object Html {
     * [[blockExtract]]'s segmentation is unchanged by construction.
     */
   def plantedPageWithFigures(id: Column, text: Column): Column =
-    plantedPageWith(id, text, plantedFigures(id, text))
+    plantedPageWith(id, text, plantedFigures(id))
 
   /** The planted `<audio>` figure of a page — the AudioCaps-shape
     * fixture: every ODD id carries one `<figure><audio src>` whose src
@@ -216,7 +216,7 @@ object Html {
     * `allModalities = true`).
     */
   def plantedPageWithAllFigures(id: Column, text: Column): Column =
-    plantedPageWith(id, text, concat(plantedFigures(id, text),
+    plantedPageWith(id, text, concat(plantedFigures(id),
       plantedAudioFigures(id), plantedVideoFigures(id)))
 
   private def plantedPageWith(id: Column, text: Column,

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -256,9 +256,7 @@ object Similarity {
               idCol: String = "vec_id", vecCol: String = "embedding",
               queryIdCol: String = "query_id"): DataFrame = {
     import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.linalg.{Vector, Vectors}
-    import org.apache.spark.sql.Row
-    val spark = corpus.sparkSession
+    import org.apache.spark.ml.linalg.Vectors
     val toVec = org.apache.spark.sql.functions.udf(
       (a: Seq[Float]) => Vectors.dense(a.map(_.toDouble).toArray))
     val feat = corpus.select(col(idCol).as("vec_id"), col(vecCol).as("v"))

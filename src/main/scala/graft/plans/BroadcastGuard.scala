@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.{HintInfo, Join, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 
+import graft.engine.ConfValue
+
 /** Optimizer rule: strip user broadcast hints whose build side is estimated
   * larger than `spark.graft.broadcastGuard.maxBytes` (default 256 MiB).
   *
@@ -20,8 +22,8 @@ case class BroadcastGuard(spark: SparkSession) extends Rule[LogicalPlan] {
 
   val MaxBytesKey = "spark.graft.broadcastGuard.maxBytes"
 
-  private def maxBytes: BigInt =
-    BigInt(spark.conf.getOption(MaxBytesKey).getOrElse((256L * 1024 * 1024).toString))
+  private[graft] def maxBytes: BigInt =
+    ConfValue.get(spark, MaxBytesKey, BigInt(256L * 1024 * 1024))(BigInt(_))
 
   // By the time injected rules run, EliminateResolvedHint has already moved
   // hints onto the Join node (JoinHint.leftHint/rightHint) — match there.

@@ -7,6 +7,8 @@ import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
+import graft.engine.ConfValue
+
 /** Spark analog of the reference's PartialReduce planner rule
   * (`src/distributed_planner/partial_reduce_below_network_shuffles.rs:14-101`):
   * one extra merge aggregation between the partial aggregate and the
@@ -31,8 +33,10 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
   */
 case class PartialReduce(session: SparkSession) extends Rule[SparkPlan] {
 
+  private[graft] def enabled: Boolean =
+    ConfValue.get(session, "spark.graft.partialReduce", false)(_.toBoolean)
+
   override def apply(plan: SparkPlan): SparkPlan = {
-    val enabled = session.conf.get("spark.graft.partialReduce", "false").toBoolean
     if (!enabled) plan
     else plan.transformUp {
       case ex: ShuffleExchangeExec => ex.child match {

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.SparkEntry
-import graft.engine.GraftSession
+import graft.engine.{ConfValue, GraftSession}
 
 /** Interleaved same-JVM config A/B (optimization round, guide §1): flips
   * planning-time SQL confs between reps of the same query so host-window
@@ -18,12 +18,9 @@ object ConfAb {
     val sfDir = args(0)
     val reps = args(1).toInt
     val names = args.drop(2)
-    val abConf = sys.env.getOrElse("SPARK_GRAFT_AB_CONF",
+    val abConf = ConfValue.overrides(sys.env.getOrElse("SPARK_GRAFT_AB_CONF",
       "spark.sql.join.preferSortMergeJoin=false," +
-        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold=67108864")
-      .split(",").filter(_.nonEmpty).map { kv =>
-        val Array(k, v) = kv.split("=", 2); (k, v)
-      }.toSeq
+        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold=67108864"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.builder(s"local[$cpus]", "graft-confab")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -110,7 +110,7 @@ object CostModel {
       case _: Sort =>
         val in = childRows.head
         mk(in, in * math.max(1.0, math.log(in) / math.log(2.0)))
-      case w: Window =>
+      case _: Window =>
         val in = childRows.head
         mk(in, in * (1.5 + math.max(1.0, math.log(in) / math.log(2.0))))
       case l: GlobalLimit =>

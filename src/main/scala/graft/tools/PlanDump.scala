@@ -3,7 +3,7 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 
 import graft.SparkEntry
-import graft.engine.GraftSession
+import graft.engine.{ConfValue, GraftSession}
 
 /** Dump `.explain("formatted")` for named queries to files — the
   * plan-artifact generator for the optimization rounds
@@ -24,11 +24,8 @@ object PlanDump {
       .config("spark.sql.shuffle.partitions", cpus)
     // Same override hook as Verify: lets a conf-gated optimization's
     // BEFORE plan be dumped by flipping its toggle (r19).
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(",").filter(_.nonEmpty)
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        b.config(k, v)
-      })
+    sys.env.get("SPARK_GRAFT_CONF").foreach(ConfValue.overrides(_)
+      .foreach { case (k, v) => b.config(k, v) })
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Files.createDirectories(Paths.get(outDir))

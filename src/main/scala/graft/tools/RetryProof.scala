@@ -116,7 +116,7 @@ object RetryProof {
       .config("spark.sql.shuffle.partitions", "8")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val guard = udf((tag: String, _row: String) => FailOnce.passOrThrowOnce(tag))
+    val guard = udf((tag: String, _: String) => FailOnce.passOrThrowOnce(tag))
     // The guard must not be constant-folded or pushed past the work it
     // guards: it takes the relation's FIRST column as a real argument, so
     // the predicate is row-level inside the guarded stage by construction
@@ -281,7 +281,7 @@ object RetryProof {
       val tag = "fetch@" + System.nanoTime()
       val pre = org.apache.spark.graft.ShuffleFailureInjector.registeredShuffleIds()
       val fetchGuard =
-        udf((t: String, n: Long) => FetchFailOnce.passOrFetchFail(t, pre))
+        udf((t: String, _: Long) => FetchFailOnce.passOrFetchFail(t, pre))
       val (rows, failed, fetched) = withFailureCount(spark) {
         q.filter(fetchGuard(lit(tag), col("n"))).collect()
       }

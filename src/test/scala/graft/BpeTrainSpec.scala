@@ -9,7 +9,10 @@ import graft.operators.BpeTrain
   * plain-Scala reference implementation of classic BPE (naive pair
   * counts, greedy left-to-right non-overlapping rewrite), the
   * overlap-run corner (`aaaa`), chained merges (a merged symbol merging
-  * again), determinism, early exhaustion, and degradation.
+  * again), seeded random vocabularies at every budget up to 12,
+  * determinism, early exhaustion, and degradation. The trainer reads its
+  * input once and leaves no persisted RDD behind, whether it runs its
+  * budget out, exhausts the pairs or fails.
   */
 class BpeTrainSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -110,6 +113,64 @@ class BpeTrainSpec extends AnyFunSuite {
     import spark.implicits._
     val empty = Seq.empty[(String, Long)].toDF("word", "freq")
     assert(BpeTrain.train(empty, 5).merges.isEmpty)
+  }
+
+  test("the input vocabulary is read once, not once per merge round") {
+    import spark.implicits._
+    val v = Map("their" -> 10L, "there" -> 8L, "then" -> 6L, "the" -> 20L,
+      "rat" -> 5L, "rate" -> 4L, "pirate" -> 3L, "at" -> 7L, "a" -> 9L)
+    val reads = spark.sparkContext.longAccumulator("bpe-vocab-reads")
+    val counted = spark.sparkContext.parallelize(v.toSeq, 4)
+      .map { row => reads.add(1); row }.toDF("word", "freq")
+    val m = BpeTrain.train(counted, 6)
+    assert(m.merges.length == 6)
+    assert(reads.sum == v.size, s"read ${reads.sum} rows of ${v.size}")
+  }
+
+  /** Seeded vocabulary over a 3-letter alphabet: short words repeat
+    * pairs, so several collapse to one symbol while training goes on.
+    */
+  private def randomVocab(seed: Long): Map[String, Long] = {
+    val rnd = new scala.util.Random(seed)
+    Seq.fill(40)(Seq.fill(1 + rnd.nextInt(7))("abc"(rnd.nextInt(3))).mkString
+        -> (1L + rnd.nextInt(20)))
+      .groupMapReduce(_._1)(_._2)(_ + _)
+  }
+
+  test("seeded random vocabularies match the reference for budgets 1-12, " +
+    "and training leaves no persisted RDD behind") {
+    val sc = spark.sparkContext
+    for (seed <- Seq(7L, 19L)) {
+      val v = randomVocab(seed)
+      val df = vocabDf(v)
+      val (full, _) = refTrain(v, 12)
+      // some multi-letter word is down to one symbol while merges remain
+      assert((1 until full.length).exists(b => refTrain(v, b)._2.exists {
+        case (w, syms) => w.length > 1 && syms.length == 1 }),
+        s"seed $seed: no word collapses mid-training")
+      for (budget <- 1 to 12) {
+        val before = sc.getPersistentRDDs.keySet
+        val got = BpeTrain.train(df, budget)
+        assert(got.merges.map(x => (x.lhs, x.rhs, x.cnt)) ==
+          refTrain(v, budget)._1, s"seed $seed, budget $budget")
+        assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
+          s"seed $seed, budget $budget left persisted RDDs")
+      }
+    }
+  }
+
+  test("an exhausted run and a failed run leave no persisted RDD behind") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val exhausted = BpeTrain.train(vocabDf(Map("ab" -> 3L, "cd" -> 2L)), 10)
+    assert(exhausted.merges.length == 2)
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
+    val failing = sc.parallelize(Seq("ab" -> 1L, "bc" -> 2L), 2)
+      .map { row => if (row._1 == "bc") sys.error("unreadable row"); row }
+      .toDF("word", "freq")
+    intercept[Exception](BpeTrain.train(failing, 3))
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
   }
 
   test("wordVocab restricts to post-norm alphanumeric whitespace tokens " +

@@ -1,0 +1,102 @@
+package graft
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.engine.ConfValue
+import graft.operators.Dedup
+import graft.plans.{BroadcastGuard, PartialReduce}
+
+/** Every `spark.graft.*` key the engine parses takes a valid value, and a
+  * malformed one (empty or garbage) falls back to the default with one
+  * WARN naming the key and the value. Each key is read through the site
+  * that uses it, and a query that reaches that site runs under each
+  * value without throwing.
+  */
+class ConfValueSpec extends AnyFunSuite {
+  import SparkTestSession._
+
+  /** A key, one valid value with what it parses to, the default, the
+    * site's reader, and a query that reaches the site.
+    */
+  private case class Key(key: String, valid: String, parsed: Any,
+                         default: Any, read: SparkSession => Any,
+                         query: SparkSession => Any)
+
+  private val keys = Seq(
+    Key("spark.graft.partialReduce", "true", true, false,
+      s => PartialReduce(s).enabled,
+      s => s.range(0, 100, 1, 4).groupBy(col("id") % 3).count().collect()),
+    Key("spark.graft.cc.localEdgeThreshold", "0", 0L, 1L << 20,
+      s => Dedup.localEdgeThreshold(s.range(1).toDF()),
+      s => {
+        import s.implicits._
+        Dedup.connectedComponents(Seq(1L, 2L, 3L).toDF("id"),
+          Seq((1L, 2L)).toDF("id_a", "id_b")).collect()
+      }),
+    Key(BroadcastGuard(spark).MaxBytesKey, "1024", BigInt(1024),
+      BigInt(256L * 1024 * 1024),
+      s => BroadcastGuard(s).maxBytes,
+      s => s.range(10).join(broadcast(s.range(5)), "id").collect()))
+
+  /** WARN messages logged by [[ConfValue]] while `body` runs. */
+  private def warnings(body: => Unit): Seq[String] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val app = new AbstractAppender("conf-value-spec", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.WARN &&
+            e.getLoggerName == ConfValue.getClass.getName.stripSuffix("$"))
+          seen.add(e.getMessage.getFormattedMessage)
+    }
+    app.start()
+    val root = LogManager.getRootLogger.asInstanceOf[CoreLogger]
+    root.addAppender(app)
+    try body finally { root.removeAppender(app); app.stop() }
+    seen.asScala.toSeq
+  }
+
+  private def withConf[T](key: String, value: String)(body: => T): T = {
+    spark.conf.set(key, value)
+    try body finally spark.conf.unset(key)
+  }
+
+  for (k <- keys) {
+    test(s"${k.key}: a valid value is read, unset gives the default") {
+      assert(k.read(spark) == k.default)
+      withConf(k.key, k.valid) {
+        assert(k.read(spark) == k.parsed)
+        k.query(spark)
+      }
+    }
+
+    for ((label, bad) <- Seq("an empty" -> "", "a garbage" -> "12x;not-a-value")) {
+      test(s"${k.key}: $label value falls back to the default with " +
+        "one WARN naming the key and the value") {
+        val warned = warnings {
+          withConf(k.key, bad) {
+            assert(k.read(spark) == k.default)
+            k.query(spark)
+            assert(k.read(spark) == k.default)
+          }
+        }
+        val named = warned.filter(w => w.contains(k.key) &&
+          w.contains("\"" + bad + "\""))
+        assert(named.size == 1, s"warnings: $warned")
+      }
+    }
+  }
+
+  test("SPARK_GRAFT_CONF-style overrides skip an entry without '='") {
+    assert(ConfValue.overrides("a.b=1,oops,,c.d=x=y") ==
+      Seq("a.b" -> "1", "c.d" -> "x=y"))
+    assert(ConfValue.overrides("").isEmpty)
+  }
+}
