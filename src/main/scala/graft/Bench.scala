@@ -42,7 +42,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.cpus
     val b = GraftSession.builder(s"local[$cpus]", "graft-bench")
       .config("spark.sql.shuffle.partitions", cpus)
     // Same override hook as Verify: lets the cluster-conf A/B (the
@@ -175,8 +175,7 @@ object Bench {
       //     0.3 s of task time — REPRODUCIBLE driver-round cost, by
       //     design; many short serial stages legitimately dwarf the span)
       //     from reading as machine noise.
-      val slots =
-        math.max(1.0, scala.util.Try(cpus.toDouble).getOrElse(4.0))
+      val slots = cpus.toDouble
       val stageSpanSec = stages.map(st =>
         math.max(st.maxMs.toDouble, st.runTimeMs / slots)).sum / 1000.0
       // Wall floor 1.0 → 0.25 s (r19): the r18 PERF carried 0.19–0.43×

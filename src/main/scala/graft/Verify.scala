@@ -15,7 +15,7 @@ object Verify {
         Some(name => entries.contains(name) ||
           entries.exists(e => name.startsWith(e + "_")))
       } else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = graft.engine.GraftSession.cpus
     val b = graft.engine.GraftSession.builder(s"local[$cpus]", "graft-verify")
       .config("spark.sql.shuffle.partitions", cpus)
     // Optional conf overrides for mode-flip parity runs — the analog of the

@@ -99,6 +99,13 @@ object GraftSession {
     b
   }
 
+  /** Local-mode thread count of the command-line tools: `SPARK_GRAFT_CPUS`
+    * if it holds a positive integer, otherwise the JVM's available
+    * processors (what the test suite and perfbench use).
+    */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption)
+    .filter(_ > 0).getOrElse(Runtime.getRuntime.availableProcessors())
+
   def local(threads: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val spark = builder(s"local[$threads]").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -8,6 +8,8 @@ import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.engine.AppState
+
 /** TRUE subword tokenization (planted-vocab greedy longest-match, the
   * WordPiece family) as a codegen'd Catalyst expression — replacing the
   * regex proxy ([[TextFunctions.bpeTokenCount]], "BPE-ish") wherever a
@@ -258,14 +260,8 @@ object Bpe {
       copy(child = c)
   }
 
-  // One broadcast per application (the Queries.countMemo discipline:
-  // keyed by applicationId, not the session object).
-  private val bigVocabMemo = scala.collection.concurrent.TrieMap
-    .empty[String, org.apache.spark.broadcast.Broadcast[
-      java.util.HashMap[java.lang.Long, Integer]]]
-
   private def bigVocabBc(spark: SparkSession) =
-    bigVocabMemo.getOrElseUpdate(spark.sparkContext.applicationId,
+    AppState.memo(spark, "bpe.bigVocab")(
       spark.sparkContext.broadcast(buildBigVocab()))
 
   def registerBig(spark: SparkSession): Unit = {

@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.engine.AppState
+
 /** fastText-style linear quality-classifier INFERENCE as a codegen'd
   * expression — the standard model-based curation component after the
   * statistical filters (Gopher/C4 rules, perplexity, DSIR): hashed
@@ -236,13 +238,8 @@ object FastText {
     call_function(name, text)
   }
 
-  // One broadcast per application (the Bpe.bigVocabMemo discipline:
-  // keyed by applicationId, not the session object).
-  private val weightsMemo = scala.collection.concurrent.TrieMap
-    .empty[String, org.apache.spark.broadcast.Broadcast[Array[Int]]]
-
   private def weightsBc(spark: SparkSession) =
-    weightsMemo.getOrElseUpdate(spark.sparkContext.applicationId,
+    AppState.memo(spark, "fastText.weights")(
       spark.sparkContext.broadcast(buildWeights()))
 
   def register(spark: SparkSession): Unit = {

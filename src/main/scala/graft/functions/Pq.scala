@@ -10,6 +10,8 @@ import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.graft.Shared
 import org.apache.spark.sql.types._
 
+import graft.engine.AppState
+
 /** Product quantization (PQ) for embedding vectors — the standard
   * vector-store compression behind large-scale ANN (Jégou et al.,
   * "Product Quantization for Nearest Neighbor Search", PAMI 2011; the
@@ -473,24 +475,12 @@ object Pq {
         r: Expression): PqLutResidual = copy(left = l, right = r)
   }
 
-  // One broadcast per application (the Bpe.bigVocabMemo discipline:
-  // keyed by applicationId, not the session object).
-  // Memo maps key by applicationId and never evict: one entry per
-  // application lifetime (one app per JVM in every real deployment);
-  // Spark's ContextCleaner reclaims the broadcast itself when the app
-  // stops. Same discipline for the FastText/Bpe/KMeans/Pipeline memos.
-  private val codebookMemo = scala.collection.concurrent.TrieMap
-    .empty[String, org.apache.spark.broadcast.Broadcast[Array[Double]]]
-
   private def codebookBc(spark: SparkSession) =
-    codebookMemo.getOrElseUpdate(spark.sparkContext.applicationId,
+    AppState.memo(spark, "pq.codebook")(
       spark.sparkContext.broadcast(buildCodebook()))
 
-  private val coarseMemo = scala.collection.concurrent.TrieMap
-    .empty[String, org.apache.spark.broadcast.Broadcast[Array[Double]]]
-
   private def coarseBc(spark: SparkSession) =
-    coarseMemo.getOrElseUpdate(spark.sparkContext.applicationId,
+    AppState.memo(spark, "pq.coarse")(
       spark.sparkContext.broadcast(buildCoarseCodebook()))
 
   private val regCounter = new java.util.concurrent.atomic.AtomicLong()

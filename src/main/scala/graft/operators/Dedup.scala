@@ -592,6 +592,17 @@ object Dedup {
                        nearDupPairs: (DataFrame, Long) => DataFrame): DataFrame =
     connectedComponents(decodedIds(sigs), nearDupPairs(sigs, Long.MaxValue))
 
+  /** The survivor table of a dedup: every [[uncappedClusters]] member as
+    * (`id`, `cluster_id`, `is_survivor`), ordered by `id`; the survivor is
+    * the cluster's minimum id, so each cluster keeps exactly one member.
+    */
+  def survivors(sigs: DataFrame,
+                nearDupPairs: (DataFrame, Long) => DataFrame): DataFrame =
+    uncappedClusters(sigs, nearDupPairs)
+      .select(col("id"), col("cluster_id"),
+        (col("id") === col("cluster_id")).as("is_survivor"))
+      .orderBy(col("id"))
+
   /** Connected components over ANY undirected pair list (`id_a`, `id_b`
     * columns; `ids` supplies the full node set so singletons label
     * themselves): every node labeled with the min id reachable through

@@ -21,7 +21,7 @@ object ConfAb {
     val abConf = ConfValue.overrides(sys.env.getOrElse("SPARK_GRAFT_AB_CONF",
       "spark.sql.join.preferSortMergeJoin=false," +
         "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold=67108864"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus
     val spark = GraftSession.builder(s"local[$cpus]", "graft-confab")
       .config("spark.sql.shuffle.partitions", cpus)
       .getOrCreate()

@@ -32,7 +32,7 @@ object FloatAudit {
     val sfDir = args(0)
     val only: Option[Set[String]] =
       if (args.length > 1) Some(args(1).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = GraftSession.cpus
     val spark = GraftSession.builder(s"local[$cpus]", "graft-float-audit")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

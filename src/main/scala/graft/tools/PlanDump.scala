@@ -19,7 +19,7 @@ import graft.engine.{ConfValue, GraftSession}
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, suffix, rest @ _*) = args.toSeq.toArray[String]
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus
     val b = GraftSession.builder(s"local[$cpus]", "graft-plandump")
       .config("spark.sql.shuffle.partitions", cpus)
     // Same override hook as Verify: lets a conf-gated optimization's

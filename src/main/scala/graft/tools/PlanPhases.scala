@@ -17,7 +17,7 @@ object PlanPhases {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
     val names = args.tail
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus
     val spark = GraftSession.builder(s"local[$cpus]", "graft-planphases")
       .config("spark.sql.shuffle.partitions", cpus)
       .getOrCreate()

@@ -24,7 +24,7 @@ object ProfileQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
     val names = args.tail
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus
     val spark = GraftSession.builder(s"local[$cpus]", "graft-profile")
       .config("spark.sql.shuffle.partitions", cpus)
       .getOrCreate()
@@ -71,7 +71,7 @@ object ProfileQuery {
       spark.sparkContext.removeSparkListener(listener)
       val totRun = stages.values.map(_._2).sum / 1000.0
       val span = stages.values.map { case (tasks, run, _, _, _) =>
-        if (tasks > 0) run.toDouble / math.min(tasks, cpus.toInt) else 0.0
+        if (tasks > 0) run.toDouble / math.min(tasks, cpus) else 0.0
       }.sum / 1000.0
       println(f"[profile] $n%-30s wall=$wall%7.2f s  jobs=${jobs.get}%4d  " +
         f"stages=${stages.size}%4d  taskRun=$totRun%7.2f s  span~$span%6.2f s  rows=$cnt")

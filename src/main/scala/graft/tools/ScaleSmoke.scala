@@ -81,7 +81,7 @@ object ScaleSmoke {
   def main(args: Array[String]): Unit = {
     val factor = args.headOption.map(_.toInt).getOrElse(20)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
+    val cpus = GraftSession.cpus
     val spark = GraftSession.builder(s"local[$cpus]", "graft-scale-smoke")
       .config("spark.sql.shuffle.partitions", cpus)
       .getOrCreate()

@@ -114,7 +114,7 @@ object Shell {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = GraftSession.cpus
     val spark = GraftSession.builder(s"local[$cpus]", "graft-shell")
       .config("spark.sql.shuffle.partitions", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
