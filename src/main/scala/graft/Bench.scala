@@ -40,6 +40,10 @@ object Bench {
     "p75_image_neardup_pairs", "p76_warc_records", "p78_bpe_encode",
     "h01", "h09", "h18", "h21")
 
+  /** Timed iterations per query: a positive integer, else 2. */
+  private[graft] def iters(raw: Option[String]): Int =
+    ConfValue.positiveInt("SPARK_GRAFT_BENCH_ITERS", raw, 2)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = GraftSession.cpus
@@ -66,7 +70,7 @@ object Bench {
     // SPARK_GRAFT_BENCH_AGG=p50 switches to the reference's exact
     // methodology (median of the iterations) for A/B runs; the driver's
     // default run keeps iters=2/agg=min so BENCH_r* stays comparable.
-    val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "2").toInt.max(1)
+    val iters = this.iters(sys.env.get("SPARK_GRAFT_BENCH_ITERS"))
     val agg = sys.env.getOrElse("SPARK_GRAFT_BENCH_AGG", "min")
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     // Family-sorted iteration + one UNTIMED warm pass per family: queries

@@ -13,6 +13,9 @@ import org.apache.spark.sql.SparkSession
   *    (key, value) that names both.
   *  - [[overrides]] reads a `SPARK_GRAFT_CONF`-style list
   *    (`k1=v1,k2=v2`). An entry without `=` is skipped with a WARN.
+  *  - [[positiveInt]] reads a count from an environment variable. A
+  *    value that is not a positive integer gives the default, with the
+  *    same one WARN.
   */
 object ConfValue extends Logging {
 
@@ -27,6 +30,13 @@ object ConfValue extends Logging {
           logWarning(s"malformed $key=\"$raw\"; using the default $default")
         default
       })
+
+  def positiveInt(name: String, raw: Option[String], default: => Int): Int =
+    raw.fold(default)(v => v.toIntOption.filter(_ > 0).getOrElse {
+      if (warned.add(name -> v))
+        logWarning(s"malformed $name=\"$v\"; using the default $default")
+      default
+    })
 
   def overrides(spec: String): Seq[(String, String)] =
     spec.split(",").toSeq.filter(_.nonEmpty).flatMap { kv =>

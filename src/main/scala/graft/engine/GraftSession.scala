@@ -103,8 +103,8 @@ object GraftSession {
     * if it holds a positive integer, otherwise the JVM's available
     * processors (what the test suite and perfbench use).
     */
-  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption)
-    .filter(_ > 0).getOrElse(Runtime.getRuntime.availableProcessors())
+  def cpus: Int = ConfValue.positiveInt("SPARK_GRAFT_CPUS",
+    sys.env.get("SPARK_GRAFT_CPUS"), Runtime.getRuntime.availableProcessors())
 
   def local(threads: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val spark = builder(s"local[$threads]").getOrCreate()

@@ -1,12 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.Catalyst.{column, expression}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.SparkSession
 
 /** Custom Catalyst expressions for the hash-sketch operators Spark lacks as
   * built-ins (SURVEY.md §7 "custom Expression beats UDF"): SimHash and
@@ -513,10 +511,10 @@ object HashExpressions {
       extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
     // Children must already be LONG: `AbstractDataType` (and so
     // ExpectsInputTypes' inputTypes) is private[sql] on this Spark build, so
-    // implicit coercion can't be declared here. Instead every registration
-    // site wraps the arguments in Cast(_, LongType) (see `register` below and
-    // GraftExtensions), keeping interpreted eval and codegen consistent for
-    // integer-literal SQL arguments.
+    // implicit coercion can't be declared here. Instead both constructors
+    // cast the arguments to LONG (`interleaveBits` below and the SQL builder
+    // in GraftExtensions), keeping interpreted eval and codegen consistent
+    // for integer-literal SQL arguments.
     override def dataType: DataType = LongType
     override def prettyName: String = "interleave_bits"
 
@@ -572,114 +570,33 @@ object HashExpressions {
       copy(child = c)
   }
 
-  // Registry-routed like every other expression here, but through ONE
-  // fixed registration: the filter bytes travel as a BINARY literal
-  // argument the builder evaluates at analysis time. A per-filter closure
-  // registration would leak each (up to maxFilterBytes) byte array into
-  // sessionState.functionRegistry forever; a literal lives and dies with
-  // the plan that carries it.
-  def bloomContainsLong(key: Column, bloomData: Array[Byte]): Column = {
-    val spark = SparkSession.active
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_contains_long",
-      exprs => BloomContainsLong(exprs.head,
-        exprs(1).eval(InternalRow.empty).asInstanceOf[Array[Byte]]),
-      "scala_udf")
-    org.apache.spark.sql.functions.call_function(
-      "bloom_contains_long", key, org.apache.spark.sql.functions.lit(bloomData))
-  }
+  def bloomContainsLong(key: Column, bloomData: Array[Byte]): Column =
+    column(BloomContainsLong(expression(key), bloomData))
 
-  /** Register SQL-callable forms on a session; `Column` accessors below go
-    * through the registry so they work on any Spark build without relying on
-    * non-public Column constructors.
-    */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash64(exprs.head), "scala_udf")
-    VectorExpressions.register(spark)
-    def intArg(exprs: Seq[Expression], i: Int): Int =
-      exprs(i).eval(InternalRow.empty).asInstanceOf[Int]
-    reg.createOrReplaceTempFunction(
-      "minhash_signature",
-      exprs => MinHashSignature(exprs.head, intArg(exprs, 1), intArg(exprs, 2)),
-      "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "ascii_sum", exprs => AsciiSum(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "nfc_normalize", exprs => NfcNormalize(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "interleave_bits",
-      exprs => InterleaveBits(
-        org.apache.spark.sql.catalyst.expressions.Cast(exprs(0), LongType),
-        org.apache.spark.sql.catalyst.expressions.Cast(exprs(1), LongType)),
-      "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "byte_stride",
-      exprs => ByteStride(exprs.head,
-        exprs(1).eval(InternalRow.empty).asInstanceOf[Int]),
-      "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "winnow_fingerprints",
-      exprs => WinnowFingerprints(exprs.head,
-        exprs(1).eval(InternalRow.empty).asInstanceOf[Int],
-        exprs(2).eval(InternalRow.empty).asInstanceOf[Int]),
-      "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "minhash_bands",
-      exprs => MinHashBandHashes(exprs.head,
-        intArg(exprs, 1), intArg(exprs, 2), intArg(exprs, 3)),
-      "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "shingle_hashes",
-      exprs => ShingleHashes(exprs.head, intArg(exprs, 1)),
-      "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "hyperplane_lsh",
-      exprs => {
-        val bits = exprs(1).eval(InternalRow.empty).asInstanceOf[Int]
-        val seed = exprs(2).eval(InternalRow.empty) match {
-          case i: Int => i.toLong
-          case l: Long => l
-        }
-        HyperplaneLsh(exprs.head, bits, seed)
-      },
-      "scala_udf")
-  }
+  def simhash64(tokens: Column): Column = column(SimHash64(expression(tokens)))
 
-  def simhash64(tokens: Column): Column = call_function("simhash64", tokens)
+  def asciiSum(text: Column): Column = column(AsciiSum(expression(text)))
 
-  def asciiSum(text: Column): Column = call_function("ascii_sum", text)
-
-  def nfcNormalize(text: Column): Column = call_function("nfc_normalize", text)
+  def nfcNormalize(text: Column): Column = column(NfcNormalize(expression(text)))
 
   def interleaveBits(x: Column, y: Column): Column =
-    call_function("interleave_bits", x.cast("long"), y.cast("long"))
+    column(InterleaveBits(expression(x.cast("long")), expression(y.cast("long"))))
 
   def byteStride(data: Column, n: Int): Column =
-    call_function("byte_stride", data, org.apache.spark.sql.functions.lit(n))
+    column(ByteStride(expression(data), n))
 
   def winnowFingerprints(text: Column, k: Int = 5, w: Int = 4): Column =
-    call_function("winnow_fingerprints", text,
-      org.apache.spark.sql.functions.lit(k),
-      org.apache.spark.sql.functions.lit(w))
+    column(WinnowFingerprints(expression(text), k, w))
 
   def minhashSignature(tokens: Column, shingleLen: Int, k: Int): Column =
-    call_function("minhash_signature", tokens,
-      org.apache.spark.sql.functions.lit(shingleLen),
-      org.apache.spark.sql.functions.lit(k))
+    column(MinHashSignature(expression(tokens), shingleLen, k))
 
   def shingleHashes(tokens: Column, shingleLen: Int): Column =
-    call_function("shingle_hashes", tokens,
-      org.apache.spark.sql.functions.lit(shingleLen))
+    column(ShingleHashes(expression(tokens), shingleLen))
 
   def minhashBands(tokens: Column, shingleLen: Int, k: Int, r: Int): Column =
-    call_function("minhash_bands", tokens,
-      org.apache.spark.sql.functions.lit(shingleLen),
-      org.apache.spark.sql.functions.lit(k),
-      org.apache.spark.sql.functions.lit(r))
+    column(MinHashBandHashes(expression(tokens), shingleLen, k, r))
 
   def hyperplaneLsh(vec: Column, nBits: Int, seed: Long): Column =
-    call_function("hyperplane_lsh", vec,
-      org.apache.spark.sql.functions.lit(nBits), org.apache.spark.sql.functions.lit(seed))
+    column(HyperplaneLsh(expression(vec), nBits, seed))
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Catalyst.{column, expression}
 import org.apache.spark.sql.graft.Shared
 import org.apache.spark.sql.types._
 
@@ -122,24 +123,12 @@ object KMeans {
     def k: Int = if (dim == 0) 0 else centroids.length / dim
   }
 
-  private val regCounter = new java.util.concurrent.atomic.AtomicLong()
-
-  /** Column of squared-L2 distances to a broadcast codebook. Registered
-    * under a fresh temp-function name per call ([[Pq.register]]'s
-    * mechanism; unique names because — unlike the planted-codebook
-    * functions — different models coexist in one session).
-    */
-  def distsColumn(vec: Column, bc: Broadcast[Array[Double]], dim: Int,
-                  spark: SparkSession): Column = {
-    val name = s"km_dists_${regCounter.incrementAndGet()}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => CentroidDists(exprs.head, bc, dim), "scala_udf")
-    call_function(name, vec)
-  }
+  /** Column of squared-L2 distances to a broadcast codebook. */
+  def distsColumn(vec: Column, bc: Broadcast[Array[Double]], dim: Int): Column =
+    column(CentroidDists(expression(vec), bc, dim))
 
   /** Distance column against a trained model's final centroids. */
-  def dists(vec: Column, m: Model, spark: SparkSession): Column =
-    distsColumn(vec, m.bc, m.dim, spark)
+  def dists(vec: Column, m: Model): Column = distsColumn(vec, m.bc, m.dim)
 
   /** Train — see object doc. Runs eagerly (1 seed job + 2 jobs per
     * iteration, each a small driver exchange); an empty or
@@ -191,7 +180,7 @@ object KMeans {
       var t = 1
       while (t <= iters) {
         val bc = spark.sparkContext.broadcast(cents)
-        val dl = distsColumn(col("__v"), bc, dim, spark)
+        val dl = distsColumn(col("__v"), bc, dim)
         val assigned = valid
           .select(col(vecCol).as("__v"))
           .select(col("__v"), dl.as("__dl"))

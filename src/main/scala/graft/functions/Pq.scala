@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graft.Catalyst.{column, expression}
 import org.apache.spark.sql.graft.Shared
 import org.apache.spark.sql.types._
 
@@ -475,39 +475,26 @@ object Pq {
         r: Expression): PqLutResidual = copy(left = l, right = r)
   }
 
-  private def codebookBc(spark: SparkSession) =
+  private[graft] def codebookBc(spark: SparkSession) =
     AppState.memo(spark, "pq.codebook")(
       spark.sparkContext.broadcast(buildCodebook()))
 
-  private def coarseBc(spark: SparkSession) =
+  private[graft] def coarseBc(spark: SparkSession) =
     AppState.memo(spark, "pq.coarse")(
       spark.sparkContext.broadcast(buildCoarseCodebook()))
 
-  private val regCounter = new java.util.concurrent.atomic.AtomicLong()
-
-  /** Encode against a TRAINED codebook broadcast — fresh temp-function
-    * name per call (several trained codebooks may coexist in one
-    * session; the KMeans.distsColumn mechanism). Same kernel, same
-    * WSCG shape as the planted-table path.
+  /** Encode against a TRAINED codebook broadcast (several trained
+    * codebooks may coexist in one session). Same kernel, same WSCG shape
+    * as the planted-table path.
     */
   def encodeWith(vec: Column,
-      bc: org.apache.spark.broadcast.Broadcast[Array[Double]],
-      spark: SparkSession): Column = {
-    val name = s"pq_encode_trained_${regCounter.incrementAndGet()}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => PqEncode(exprs.head, bc), "scala_udf")
-    call_function(name, vec)
-  }
+      bc: org.apache.spark.broadcast.Broadcast[Array[Double]]): Column =
+    column(PqEncode(expression(vec), bc))
 
   /** ADC lookup table against a TRAINED codebook broadcast. */
   def lutWith(vec: Column,
-      bc: org.apache.spark.broadcast.Broadcast[Array[Double]],
-      spark: SparkSession): Column = {
-    val name = s"pq_lut_trained_${regCounter.incrementAndGet()}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => PqLut(exprs.head, bc), "scala_udf")
-    call_function(name, vec)
-  }
+      bc: org.apache.spark.broadcast.Broadcast[Array[Double]]): Column =
+    column(PqLut(expression(vec), bc))
 
   /** A trained product quantizer: `codebook` in the [[buildCodebook]]
     * flat layout, `snapshots(t)` after iteration t (0 = seeds),
@@ -594,7 +581,7 @@ object Pq {
       var t = 1
       while (t <= iters) {
         val bc = spark.sparkContext.broadcast(cur)
-        val enc = encodeWith(col("__v"), bc, spark)
+        val enc = encodeWith(col("__v"), bc)
         val assigned = valid.select(col(vecCol).as("__v"))
           .select(col("__v"), enc.getField("code").as("__code"),
             round(enc.getField("err"), 6)
@@ -636,50 +623,28 @@ object Pq {
       spark.sparkContext.broadcast(cur))
   }
 
-  def register(spark: SparkSession): Unit = {
-    val bc = codebookBc(spark)
-    val cbc = coarseBc(spark)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pq_encode", exprs => PqEncode(exprs.head, bc), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pq_lut", exprs => PqLut(exprs.head, bc), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pq_coarse_dists", exprs => PqCoarseDists(exprs.head, cbc), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pq_residual_encode",
-      exprs => PqResidualEncode(exprs.head, cbc, bc), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pq_residual_lut",
-      exprs => PqLutResidual(exprs(0), exprs(1), cbc, bc), "scala_udf")
-  }
-
   /** Encode a float-array embedding column → struct(code, err). */
-  def encode(vec: Column): Column = {
-    register(SparkSession.active)
-    call_function("pq_encode", vec)
-  }
+  def encode(vec: Column): Column =
+    column(PqEncode(expression(vec), codebookBc(SparkSession.active)))
 
   /** ADC lookup table for a float-array query column. */
-  def lut(vec: Column): Column = {
-    register(SparkSession.active)
-    call_function("pq_lut", vec)
-  }
+  def lut(vec: Column): Column =
+    column(PqLut(expression(vec), codebookBc(SparkSession.active)))
 
   /** Coarse-centroid distance array for a float-array column. */
-  def coarseDists(vec: Column): Column = {
-    register(SparkSession.active)
-    call_function("pq_coarse_dists", vec)
-  }
+  def coarseDists(vec: Column): Column =
+    column(PqCoarseDists(expression(vec), coarseBc(SparkSession.active)))
 
   /** Residual IVF-PQ encode: struct(cell, code, err). */
   def residualEncode(vec: Column): Column = {
-    register(SparkSession.active)
-    call_function("pq_residual_encode", vec)
+    val spark = SparkSession.active
+    column(PqResidualEncode(expression(vec), coarseBc(spark), codebookBc(spark)))
   }
 
   /** Per-cell residual ADC LUT for a (query vec, probed cell) pair. */
   def residualLut(vec: Column, cell: Column): Column = {
-    register(SparkSession.active)
-    call_function("pq_residual_lut", vec, cell)
+    val spark = SparkSession.active
+    column(PqLutResidual(expression(vec), expression(cell),
+      coarseBc(spark), codebookBc(spark)))
   }
 }

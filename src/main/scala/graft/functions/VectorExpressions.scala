@@ -1,11 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, RuntimeReplaceable}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graft.Catalyst.{column, expression}
 import org.apache.spark.sql.types._
 
 /** Native dot-product expression for embedding arrays.
@@ -70,10 +69,10 @@ object VectorExpressions {
                        aF: Boolean, bF: Boolean): java.lang.Double
 
     // Element kind per side: Some(true)=float, Some(false)=double, None =
-    // not directly foldable. Int/long/NULL arguments are handled at the
-    // REGISTRATION sites by wrapping in Cast(_, array<double>) — same
-    // pattern as InterleaveBits, since declaring ExpectsInputTypes is not
-    // possible on this Spark build (AbstractDataType is private[sql]).
+    // not directly foldable. Int/long/NULL arguments are cast to
+    // array<double> by [[coerce]] in the constructors [[dotExpr]] and
+    // [[l2sqExpr]], since declaring ExpectsInputTypes is not possible on
+    // this Spark build (AbstractDataType is private[sql]).
     private def kind(e: Expression): Option[Boolean] = e.dataType match {
       case ArrayType(FloatType, _) => Some(true)
       case ArrayType(DoubleType, _) => Some(false)
@@ -84,8 +83,8 @@ object VectorExpressions {
     private def fail(e: Expression): Nothing =
       throw new IllegalArgumentException(
         s"$prettyName expects array<float> or array<double> children, got " +
-          s"${e.dataType.simpleString}; cast the argument (SQL registration " +
-          "sites do this automatically)")
+          s"${e.dataType.simpleString}; build it through dotExpr " +
+          "or l2sqExpr, which cast it")
 
     override def dataType: DataType = DoubleType
     // The kernel returns null for length mismatch / null elements even when
@@ -106,14 +105,12 @@ object VectorExpressions {
       })
   }
 
-  /** Registration-site coercion: float/double arrays pass through; every
-    * other argument (array<int>, array<long>, NULL literals, …) is cast to
-    * array<double>, preserving the HOF form's semantics — int arrays fold
-    * numerically, NULL stays NULL. Unresolved arguments (SQL analysis in
-    * progress) defer to a cast too, which is a no-op once resolved to a
-    * float/double array... so only apply it when the type is KNOWN to need
-    * it; unresolved stays bare and resolves via the expression's own
-    * lazy check.
+  /** Argument coercion for the vector constructors: float/double arrays
+    * pass through; every other argument (array<int>, array<long>, NULL
+    * literals, …) is cast to array<double>, preserving the HOF form's
+    * semantics — int arrays fold numerically, NULL stays NULL. [[Coerced]]
+    * applies it once the arguments are resolved; an argument whose type is
+    * still unknown is left bare.
     */
   private def coerce(e: Expression): Expression = {
     val needsCast =
@@ -225,68 +222,38 @@ object VectorExpressions {
       copy(child = c)
   }
 
-  /** Coerced constructors — the single builder both registration paths
-    * (session extension injection and temp-function registration) share.
+  /** Builds its expression from the [[coerce]]d arguments once they are
+    * resolved. A Column argument is usually still an unresolved attribute
+    * when the accessor builds the expression, so its element type is
+    * unknown until analysis; the optimizer then puts `replacement` in this
+    * node's place, so every optimized and physical plan shows the coerced
+    * expression itself.
+    */
+  private case class Coerced(children: Seq[Expression],
+      override val prettyName: String, build: Seq[Expression] => Expression)
+      extends Expression with RuntimeReplaceable {
+    lazy val replacement: Expression = build(children.map(coerce))
+    override protected def stringArgs: Iterator[Any] = children.iterator
+    override protected def withNewChildrenInternal(
+        c: IndexedSeq[Expression]): Coerced = copy(children = c)
+  }
+
+  /** Coerced constructors, shared by the Column accessors below and the
+    * SQL builders in [[graft.engine.GraftExtensions]].
     */
   def dotExpr(a: Expression, b: Expression): Expression =
-    DotProduct(coerce(a), coerce(b))
+    Coerced(Seq(a, b), "dot_f", c => DotProduct(c(0), c(1)))
   def l2sqExpr(a: Expression, b: Expression): Expression =
-    L2Squared(coerce(a), coerce(b))
+    Coerced(Seq(a, b), "l2sq_f", c => L2Squared(c(0), c(1)))
   def signProjectExpr(a: Expression, outDims: Int, seed: Long): Expression =
-    SignProject(coerce(a), outDims, seed)
+    Coerced(Seq(a), "sign_project", c => SignProject(c(0), outDims, seed))
 
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_f", exprs => dotExpr(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "l2sq_f", exprs => l2sqExpr(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sign_project", exprs => {
-        val row = org.apache.spark.sql.catalyst.InternalRow.empty
-        // SQL integer literals may arrive as INT or BIGINT — accept both
-        // for dims (as for seed), failing with the argument name rather
-        // than a bare ClassCastException at analysis.
-        val dims = exprs(1).eval(row) match {
-          case i: Int => i
-          case l: Long => l.toInt
-          case other => throw new IllegalArgumentException(
-            s"sign_project: dims must be an integer literal, got $other")
-        }
-        val seed = exprs(2).eval(row) match {
-          case i: Int => i.toLong
-          case l: Long => l
-          case other => throw new IllegalArgumentException(
-            s"sign_project: seed must be an integer literal, got $other")
-        }
-        signProjectExpr(exprs(0), dims, seed)
-      }, "scala_udf")
-  }
+  def dotF(a: Column, b: Column): Column =
+    column(dotExpr(expression(a), expression(b)))
 
-  // The Column API resolves through the function registry (public-API-only
-  // expression construction — same rationale as HashExpressions.register).
-  // Sessions built via GraftSession get the functions injected; for any
-  // OTHER session, registering idempotently on the active one keeps
-  // VectorFunctions.dot/cosine and every Similarity operator self-contained
-  // — before round 6 these were registry-free HOF expressions, and that
-  // zero-setup contract must survive the codegen swap.
-  private def ensureRegistered(): Unit =
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .foreach(register)
+  def l2sqF(a: Column, b: Column): Column =
+    column(l2sqExpr(expression(a), expression(b)))
 
-  def dotF(a: Column, b: Column): Column = {
-    ensureRegistered()
-    call_function("dot_f", a, b)
-  }
-
-  def l2sqF(a: Column, b: Column): Column = {
-    ensureRegistered()
-    call_function("l2sq_f", a, b)
-  }
-
-  def signProjectF(vec: Column, outDims: Int, seed: Long): Column = {
-    ensureRegistered()
-    call_function("sign_project", vec,
-      org.apache.spark.sql.functions.lit(outDims),
-      org.apache.spark.sql.functions.lit(seed))
-  }
+  def signProjectF(vec: Column, outDims: Int, seed: Long): Column =
+    column(signProjectExpr(expression(vec), outDims, seed))
 }

@@ -69,7 +69,6 @@ object Dedup {
   def minhashCandidates(df: DataFrame, idCol: String, textCol: String,
                         shingleLen: Int = 5, k: Int = 64, r: Int = 2,
                         maxBucketSize: Int = 1000): DataFrame = {
-    HashExpressions.register(df.sparkSession)
     val toks = df.select(col(idCol).as("id"), tokens(col(textCol)).as("toks"))
       .filter(size(col("toks")) >= shingleLen)
     val bands = toks.select(col("id"),
@@ -108,7 +107,6 @@ object Dedup {
   def lshBucketStats(df: DataFrame, idCol: String, textCol: String,
                      shingleLen: Int = 5, k: Int = 64, r: Int = 2,
                      maxBucketSize: Int = 1000): DataFrame = {
-    HashExpressions.register(df.sparkSession)
     val toks = df.select(col(idCol).as("id"), tokens(col(textCol)).as("toks"))
       .filter(size(col("toks")) >= shingleLen)
     toks.select(col("id"),
@@ -160,7 +158,6 @@ object Dedup {
                    k: Int = 64, r: Int = 2, shingleLen: Int = 5,
                    threshold: Double = 0.5,
                    maxBucketSize: Int = 1000): DataFrame = {
-    HashExpressions.register(df.sparkSession)
     val toksDf = df.select(col(idCol).as("id"), tokens(col(textCol)).as("toks"))
       .filter(size(col("toks")) >= shingleLen)
     val sigs = toksDf.select(col("id"),
@@ -197,7 +194,6 @@ object Dedup {
                               shingleLen: Int = 5, threshold: Double = 0.5,
                               k: Int = 64, r: Int = 2,
                               maxBucketSize: Int = 1000): DataFrame = {
-    HashExpressions.register(corpus.sparkSession)
     def bands(df: DataFrame): DataFrame =
       df.select(col(idCol).as("id"), tokens(col(textCol)).as("toks"))
         .filter(size(col("toks")) >= shingleLen)
@@ -873,7 +869,6 @@ object Dedup {
                                 shingleLen: Int, minContainment: Double,
                                 prune: (DataFrame, DataFrame) => DataFrame)
       : DataFrame = {
-    HashExpressions.register(corpus.sparkSession)
     val cs = corpus.select(col(idCol).as("cid"),
       explode(HashExpressions.shingleHashes(tokens(col(textCol)), shingleLen)).as("sh"))
     val bs = benchmark
@@ -918,7 +913,6 @@ object Dedup {
   def dupSpanCoverage(df: DataFrame, idCol: String, textCol: String,
                       windowLen: Int = 8): DataFrame = {
     require(windowLen >= 2, s"windowLen=$windowLen must be >= 2")
-    HashExpressions.register(df.sparkSession)
     val spans = df.select(col(idCol).as("id"),
         explode(HashExpressions.shingleHashes(tokens(col(textCol)), windowLen)).as("h"))
     val dupHashes = spans.groupBy(col("h"))

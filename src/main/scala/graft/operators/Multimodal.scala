@@ -796,7 +796,6 @@ object Multimodal {
     * narrow binary-in/binary-out expression with metadata kept consistent.
     */
   def resizeStub(media: DataFrame, factor: Int): DataFrame = {
-    graft.functions.HashExpressions.register(media.sparkSession)
     media
       .withColumn("data", graft.functions.HashExpressions.byteStride(col("data"), factor))
       .withColumn("meta", struct(

@@ -330,7 +330,6 @@ object Pipeline {
     // (64-bit sigs; near-dup docs share token distributions). The pair
     // list itself is exact, so DuckDB derives every output column. ----
     "p09_simhash_sigs" -> ((s, dir) => {
-      HashExpressions.register(s)
       // docsFanned KEPT (r19, re-adjudicated with data): the r18 verdict
       // flagged this call as an unrestored fan-out loser (driver 0.80×,
       // builder detail 1.48× slower) and r19 duly applied the revert —
@@ -365,7 +364,6 @@ object Pipeline {
     // histogram is computed (groupBy bucket), then checked — every vector
     // lands in exactly one bucket and every bucket id is in [0, 2^nBits). ----
     "p11_embedding_lsh_buckets" -> ((s, dir) => {
-      HashExpressions.register(s)
       Similarity.bucketed(emb(s, dir), nBits = 8)
         .groupBy(col("bucket"))
         .agg(count(lit(1)).as("n"))
@@ -401,7 +399,6 @@ object Pipeline {
     // winnowed fingerprint sets — same oracle-derivable pair-list pattern
     // as p09 (measured overlap on this corpus: 0.87-1.0). ----
     "p15_winnow_fingerprints" -> ((s, dir) => {
-      HashExpressions.register(s)
       // The pair list is shared (output is |pairs| rows — tiny next to
       // the corpus): it feeds three consumers
       // below, and without materialization each re-evaluates the whole
@@ -616,7 +613,6 @@ object Pipeline {
     // PLANTED (e + U+0301, i + U+0308) and must compose; char counts
     // before/after pin the contraction ----
     "p31_unicode_normalize" -> ((s, dir) => {
-      HashExpressions.register(s)
       // Decomposed on purpose: 'e' + U+0301, 'i' + U+0308 — NFC must
       // contract them to the precomposed forms.
       val enriched = concat(col("text"), lit(" cafe\u0301 nai\u0308ve"))
@@ -1318,7 +1314,6 @@ object Pipeline {
     // its bag. Two-stage select keeps the encode kernel at once-per-row.
     // Narrow, shuffle-free, whole-stage codegen. ----
     "p78_bpe_encode" -> ((s, dir) => {
-      graft.functions.Bpe.register(s)
       docs(s, dir)
         .select(col("doc_id"),
           graft.functions.Bpe.bpeEncode(TF.normText(col("text"))).as("__ids"))
@@ -1339,7 +1334,6 @@ object Pipeline {
     // two-phase prefix-sum packer as p21, parameterized by the BPE weight
     // column. ----
     "p79_bpe_packing" -> ((s, dir) => {
-      graft.functions.Bpe.register(s)
       val withBpe = docs(s, dir).select(col("doc_id"),
         graft.functions.Bpe.bpeCount(TF.normText(col("text"))).as("n_bpe"))
       Sampling.packByBudget(withBpe, "doc_id", "n_bpe", budget = 5000L)
@@ -1510,7 +1504,6 @@ object Pipeline {
     // recursive walk; the order-sensitive positional checksum again
     // makes the token sequence (not just its bag) the thing compared. ----
     "p87_bpe_big_vocab" -> ((s, dir) => {
-      graft.functions.Bpe.registerBig(s)
       docs(s, dir)
         .select(col("doc_id"),
           graft.functions.Bpe.bpeEncodeBig(TF.normText(col("text")))
@@ -1701,7 +1694,6 @@ object Pipeline {
     // a wrong broadcast entry, hash step, or bigram combine breaks the
     // per-doc score exactly. ----
     "p93_quality_classifier" -> ((s, dir) => {
-      graft.functions.FastText.register(s)
       val toks = filter(split(TF.normText(col("text")), " "),
         t => length(t) > 0)
       docs(s, dir)
@@ -1720,7 +1712,6 @@ object Pipeline {
     // classifier gate, reported as per-stage survivor counts. The
     // standard curation cascade ends with exactly this model stage. ----
     "p94_classifier_funnel" -> ((s, dir) => {
-      graft.functions.FastText.register(s)
       val scored = docs(s, dir).select(
         size(filter(split(TF.normText(col("text")), " "),
           t => length(t) > 0)).as("n_toks"),
@@ -1939,7 +1930,6 @@ object Pipeline {
     // proves the last-mile export end to end: budgets, boundaries, and
     // the disk hop. Eager write at construction (p86 convention). ----
     "p104_shard_export" -> ((s, dir) => {
-      graft.functions.Bpe.registerBig(s)
       // Share the token counts: packByBudget's two-phase prefix sum
       // evaluates its input twice (per-bucket totals, then the window
       // job) and the sink write a third time — unshared, the BPE scan
@@ -2046,7 +2036,7 @@ object Pipeline {
     // addReferenceObj exactly like the planted-codebook kernels). ----
     "p108_kmeans_assign" -> ((s, dir) => {
       val m = kmModel(s, dir)
-      val dl = graft.functions.KMeans.dists(col("embedding"), m, s)
+      val dl = graft.functions.KMeans.dists(col("embedding"), m)
       emb(s, dir)
         .filter(col("embedding").isNotNull && size(col("embedding")) >= 64)
         .select(col("vec_id"), dl.as("__dl"))
@@ -2240,7 +2230,7 @@ object Pipeline {
       val FT = graft.functions.FastText
       docs(s, dir)
         .select(when(col("lang") === "en", 1).otherwise(0).as("p"),
-          explode(FT.features(TF.normText(col("text")), s)).as("feat"))
+          explode(FT.features(TF.normText(col("text")))).as("feat"))
         .groupBy(col("feat"))
         .agg(sum(col("p")).as("n_pos"), sum(lit(1) - col("p")).as("n_neg"))
         .select(col("feat").cast("bigint").as("feat"),
@@ -2260,7 +2250,7 @@ object Pipeline {
       val bc = ftModel(s, dir)
       docs(s, dir)
         .select(col("doc_id"),
-          FT.scoreWith(TF.normText(col("text")), bc, s).as("score"))
+          FT.scoreWith(TF.normText(col("text")), bc).as("score"))
         .select(col("doc_id"), col("score"), (col("score") > 0).as("kept"))
         .orderBy(col("doc_id"))
     }),
@@ -2300,11 +2290,11 @@ object Pipeline {
         .filter(col("embedding").isNotNull && size(col("embedding")) >= 64)
       val e = if (mo.codebook.isEmpty) base.limit(0) else base
       val codes = e.select(col("vec_id"),
-        P.encodeWith(col("embedding"), mo.bc, s)
+        P.encodeWith(col("embedding"), mo.bc)
           .getField("code").as("pq_code"))
       val qs = e.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("qid"),
-          P.lutWith(col("embedding"), mo.bc, s).as("lut"))
+          P.lutWith(col("embedding"), mo.bc).as("lut"))
       val adc = (0 until P.M).map { m =>
         element_at(col("lut"),
           (lit(m * P.K + 1) + shiftright(col("pq_code"), 4 * m)
@@ -2383,7 +2373,7 @@ object Pipeline {
           concat(array(lit(0.5f)), slice(col("embedding"), 2, 63))
             .as("embedding"))
       val all = base.unionByName(exactCopies).unionByName(nearCopies)
-      val dl = graft.functions.KMeans.dists(col("embedding"), m, s)
+      val dl = graft.functions.KMeans.dists(col("embedding"), m)
       val assigned = all.select(col("vec_id"), col("embedding"),
         (array_position(dl, array_min(dl)) - 1).cast("bigint").as("cell"))
       Similarity.semanticDedup(assigned, tau = 1.0)
@@ -2408,19 +2398,19 @@ object Pipeline {
       val e = emb(s, dir)
         .filter(col("embedding").isNotNull && size(col("embedding")) >= 64)
       val live = if (pq.codebook.isEmpty) e.limit(0) else e
-      def dl = graft.functions.KMeans.dists(col("embedding"), km, s)
+      def dl = graft.functions.KMeans.dists(col("embedding"), km)
       val corpusIdx = s.read
         .schema("vec_id BIGINT, cell INT, pq_code BIGINT")
         .parquet(p121Fixture(s, dir))
       val batchIdx = live.filter(col("vec_id") % 17 === 3)
         .select(col("vec_id"),
           (array_position(dl, array_min(dl)) - 1).cast("int").as("cell"),
-          P.encodeWith(col("embedding"), pq.bc, s).getField("code")
+          P.encodeWith(col("embedding"), pq.bc).getField("code")
             .as("pq_code"))
       val index = corpusIdx.unionByName(batchIdx)
       val qs = live.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("qid"),
-          P.lutWith(col("embedding"), pq.bc, s).as("lut"),
+          P.lutWith(col("embedding"), pq.bc).as("lut"),
           slice(sort_array(transform(dl,
             (d, l) => struct(d.as("d"), l.as("l")))), 1, 4).as("probes"))
         .select(col("qid"), col("lut"), explode(col("probes")).as("probe"))
@@ -2457,7 +2447,7 @@ object Pipeline {
       val FT = graft.functions.FastText
       val scored = docs(s, dir)
         .select(col("doc_id"),
-          (FT.scoreWith(TF.normText(col("text")), ftModel(s, dir), s)
+          (FT.scoreWith(TF.normText(col("text")), ftModel(s, dir))
             + lit(1000000000L)).as("s2"))
       val thr = scored.agg(
         expr("sum(s2) div greatest(count(1), 1)").as("thr"))
@@ -2498,7 +2488,7 @@ object Pipeline {
     "p123_cluster_balanced_sample" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val m = kmModel(s, dir)
-      val dl = graft.functions.KMeans.dists(col("embedding"), m, s)
+      val dl = graft.functions.KMeans.dists(col("embedding"), m)
       emb(s, dir)
         .filter(col("embedding").isNotNull && size(col("embedding")) >= 64)
         .select(col("vec_id"),
@@ -2554,10 +2544,10 @@ object Pipeline {
       val e = emb(s, dir)
         .filter(col("embedding").isNotNull && size(col("embedding")) >= 64)
       val live = if (pq.codebook.isEmpty) e.limit(0) else e
-      def dl = graft.functions.KMeans.dists(col("embedding"), km, s)
+      def dl = graft.functions.KMeans.dists(col("embedding"), km)
       live.select(
           (array_position(dl, array_min(dl)) - 1).cast("bigint").as("cell"),
-          round(P.encodeWith(col("embedding"), pq.bc, s).getField("err"), 6)
+          round(P.encodeWith(col("embedding"), pq.bc).getField("err"), 6)
             .cast("decimal(38,6)").as("err"))
         .groupBy(col("cell"))
         .agg(count(lit(1)).as("n_vecs"),
@@ -2585,11 +2575,11 @@ object Pipeline {
       val res = residualFrame(s, dir)
       val live = if (rpq.codebook.isEmpty) res.limit(0) else res
       val codes = live.select(col("vec_id"), col("cell"),
-        P.encodeWith(col("resv"), rpq.bc, s).getField("code").as("pq_code"))
+        P.encodeWith(col("resv"), rpq.bc).getField("code").as("pq_code"))
       val e = emb(s, dir)
         .filter(col("embedding").isNotNull && size(col("embedding")) >= 64)
       val eLive = if (rpq.codebook.isEmpty) e.limit(0) else e
-      def dl = graft.functions.KMeans.dists(col("embedding"), km, s)
+      def dl = graft.functions.KMeans.dists(col("embedding"), km)
       val qs = eLive.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("qid"), col("embedding"),
           slice(sort_array(transform(dl,
@@ -2601,7 +2591,7 @@ object Pipeline {
         .join(broadcast(kmCentroidsDf(s, km)), Seq("cell"))
         .select(col("qid"), col("cell"),
           P.lutWith(zip_with(col("embedding"), col("cv"),
-            (x, c) => (x.cast("double") - c).cast("float")), rpq.bc, s)
+            (x, c) => (x.cast("double") - c).cast("float")), rpq.bc)
             .as("lut"))
       val adc = (0 until P.M).map { m =>
         element_at(col("lut"),
@@ -2744,7 +2734,7 @@ object Pipeline {
           concat(array_repeat(lit(0.9f), 8), slice(col("embedding"), 9, 56))
             .as("embedding"))
       val batch = exactCopies.unionByName(nearCopies).unionByName(fresh)
-      def dl = graft.functions.KMeans.dists(col("embedding"), m, s)
+      def dl = graft.functions.KMeans.dists(col("embedding"), m)
       def assign(df: DataFrame): DataFrame =
         df.select(col("vec_id"), col("embedding"),
           (array_position(dl, array_min(dl)) - 1).cast("bigint").as("cell"))
@@ -2766,7 +2756,7 @@ object Pipeline {
       val FT = graft.functions.FastText
       val scored = docs(s, dir)
         .select(col("doc_id"),
-          FT.scoreWith(TF.normText(col("text")), ftModel(s, dir), s)
+          FT.scoreWith(TF.normText(col("text")), ftModel(s, dir))
             .as("score"))
       scored
         .withColumn("rnk", row_number().over(
@@ -2831,7 +2821,7 @@ object Pipeline {
             .as("embedding"))
       val train = e.filter(col("vec_id") % 50 =!= 0)
         .unionByName(contamExact).unionByName(contamNear)
-      def dl = graft.functions.KMeans.dists(col("embedding"), m, s)
+      def dl = graft.functions.KMeans.dists(col("embedding"), m)
       def assign(df: DataFrame): DataFrame =
         df.select(col("vec_id"), col("embedding"),
           (array_position(dl, array_min(dl)) - 1).cast("bigint").as("cell"))
@@ -2856,7 +2846,7 @@ object Pipeline {
       val e = emb(s, dir)
         .filter(col("embedding").isNotNull && size(col("embedding")) >= 64)
         .select(col("vec_id"), slice(col("embedding"), 1, 64).as("embedding"))
-      def dl = graft.functions.KMeans.dists(col("embedding"), m, s)
+      def dl = graft.functions.KMeans.dists(col("embedding"), m)
       def assign(df: DataFrame): DataFrame =
         df.select(col("vec_id"), col("embedding"),
           (array_position(dl, array_min(dl)) - 1).cast("bigint").as("cell"))
@@ -2912,7 +2902,7 @@ object Pipeline {
       val e = emb(s, dir)
         .filter(col("embedding").isNotNull && size(col("embedding")) >= 64)
       val live = if (pq.codebook.isEmpty) e.limit(0) else e
-      val enc = P.encodeWith(col("embedding"), pq.bc, s)
+      val enc = P.encodeWith(col("embedding"), pq.bc)
       live.select(col("vec_id"),
           enc.getField("code").as("pq_code"),
           round(enc.getField("err"), 6).as("rec_err"))
@@ -2938,7 +2928,7 @@ object Pipeline {
           concat(array(lit(0.5f)), slice(col("embedding"), 2, 63))
             .as("embedding"))
       val all = base.unionByName(exactCopies).unionByName(nearCopies)
-      val dl = graft.functions.KMeans.dists(col("embedding"), m, s)
+      val dl = graft.functions.KMeans.dists(col("embedding"), m)
       val probed = all.select(col("vec_id"), col("embedding"),
         transform(slice(sort_array(transform(dl,
             (d, l) => struct(d.as("d"), l.as("l")))), 1, 2),
@@ -2968,7 +2958,7 @@ object Pipeline {
           concat(array_repeat(lit(0.9f), 8), slice(col("embedding"), 9, 56))
             .as("embedding"))
       val batch = exactCopies.unionByName(nearCopies).unionByName(fresh)
-      def dl = graft.functions.KMeans.dists(col("embedding"), m, s)
+      def dl = graft.functions.KMeans.dists(col("embedding"), m)
       val corpus = base.select(col("vec_id"), col("embedding"),
         (array_position(dl, array_min(dl)) - 1).cast("bigint").as("cell"))
       val probedBatch = batch.select(col("vec_id"), col("embedding"),
@@ -3000,10 +2990,10 @@ object Pipeline {
       val index = s.read
         .schema("vec_id BIGINT, cell INT, pq_code BIGINT")
         .parquet(p139Fixture(s, dir))
-      def dl = graft.functions.KMeans.dists(col("embedding"), km2, s)
+      def dl = graft.functions.KMeans.dists(col("embedding"), km2)
       val qs = live.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("qid"),
-          P.lutWith(col("embedding"), pq2.bc, s).as("lut"),
+          P.lutWith(col("embedding"), pq2.bc).as("lut"),
           slice(sort_array(transform(dl,
             (d, l) => struct(d.as("d"), l.as("l")))), 1, 4).as("probes"))
         .select(col("qid"), col("lut"), explode(col("probes")).as("probe"))
@@ -3059,21 +3049,21 @@ object Pipeline {
       val e = emb(s, dir)
         .filter(col("embedding").isNotNull && size(col("embedding")) >= 64)
       val live = if (pq.codebook.isEmpty) e.limit(0) else e
-      def dl = graft.functions.KMeans.dists(col("embedding"), km, s)
+      def dl = graft.functions.KMeans.dists(col("embedding"), km)
       val corpusIdx = s.read
         .schema("vec_id BIGINT, cell INT, pq_code BIGINT")
         .parquet(p121Fixture(s, dir))
       val batchIdx = live.filter(col("vec_id") % 17 === 3)
         .select(col("vec_id"),
           (array_position(dl, array_min(dl)) - 1).cast("int").as("cell"),
-          P.encodeWith(col("embedding"), pq.bc, s).getField("code")
+          P.encodeWith(col("embedding"), pq.bc).getField("code")
             .as("pq_code"))
       val index = corpusIdx.unionByName(batchIdx)
         .filter(col("vec_id") % 13 =!= 5)
       val qs = live.filter(col("vec_id") % 50 === 0 &&
           col("vec_id") % 13 =!= 5)
         .select(col("vec_id").as("qid"),
-          P.lutWith(col("embedding"), pq.bc, s).as("lut"),
+          P.lutWith(col("embedding"), pq.bc).as("lut"),
           slice(sort_array(transform(dl,
             (d, l) => struct(d.as("d"), l.as("l")))), 1, 4).as("probes"))
         .select(col("qid"), col("lut"), explode(col("probes")).as("probe"))
@@ -3177,7 +3167,7 @@ object Pipeline {
             .as("embedding"))
       val train = e.filter(col("vec_id") % 50 =!= 0)
         .unionByName(contamExact).unionByName(contamNear)
-      def dl = graft.functions.KMeans.dists(col("embedding"), m, s)
+      def dl = graft.functions.KMeans.dists(col("embedding"), m)
       val refHome = evalPanel.select(col("vec_id"), col("embedding"),
         (array_position(dl, array_min(dl)) - 1).cast("bigint").as("cell"))
       val probedTrain = train.select(col("vec_id"), col("embedding"),
@@ -3734,10 +3724,10 @@ object Pipeline {
       val (km2, pq2) = rebuiltModels(s, dir)
       val d = driftedFrame(s, dir)
       val live = if (pq2.codebook.isEmpty) d.limit(0) else d
-      def dl = graft.functions.KMeans.dists(col("embedding"), km2, s)
+      def dl = graft.functions.KMeans.dists(col("embedding"), km2)
       live.select(col("vec_id"),
           (array_position(dl, array_min(dl)) - 1).cast("int").as("cell"),
-          P.encodeWith(col("embedding"), pq2.bc, s).getField("code")
+          P.encodeWith(col("embedding"), pq2.bc).getField("code")
             .as("pq_code"))
         .write.mode("overwrite").parquet(root)
       root
@@ -3810,7 +3800,7 @@ object Pipeline {
     val m = kmModel(s, dir)
     val e = emb(s, dir)
       .filter(col("embedding").isNotNull && size(col("embedding")) >= 64)
-    def dl = graft.functions.KMeans.dists(col("embedding"), m, s)
+    def dl = graft.functions.KMeans.dists(col("embedding"), m)
     val codes = e.select(col("vec_id"),
       P.encode(col("embedding")).getField("code").as("pq_code"),
       (array_position(dl, array_min(dl)) - 1).cast("int").as("cell"))
@@ -3857,7 +3847,7 @@ object Pipeline {
     val km = kmModel(s, dir)
     val e = emb(s, dir)
       .filter(col("embedding").isNotNull && size(col("embedding")) >= 64)
-    def dl = graft.functions.KMeans.dists(col("embedding"), km, s)
+    def dl = graft.functions.KMeans.dists(col("embedding"), km)
     e.select(col("vec_id"), col("embedding"),
         (array_position(dl, array_min(dl)) - 1).cast("int").as("cell"))
       .join(broadcast(kmCentroidsDf(s, km)), Seq("cell"))
@@ -3895,10 +3885,10 @@ object Pipeline {
         .filter(col("embedding").isNotNull && size(col("embedding")) >= 64)
         .filter(col("vec_id") % 17 =!= 3)
       val base = if (pq.codebook.isEmpty) e.limit(0) else e
-      def dl = graft.functions.KMeans.dists(col("embedding"), km, s)
+      def dl = graft.functions.KMeans.dists(col("embedding"), km)
       base.select(col("vec_id"),
           (array_position(dl, array_min(dl)) - 1).cast("int").as("cell"),
-          P.encodeWith(col("embedding"), pq.bc, s).getField("code")
+          P.encodeWith(col("embedding"), pq.bc).getField("code")
             .as("pq_code"))
         .write.mode("overwrite").parquet(root)
       root

@@ -264,7 +264,6 @@ object Relational2 {
     // interleave_bits expression and mirrored bit-for-bit by the oracle's
     // unrolled shift/mask sum ----
     "q80_zorder_cells" -> ((s, dir) => {
-      graft.functions.HashExpressions.register(s)
       t(s, dir, "lineitem")
         .select(col("l_partkey"), col("l_suppkey")).distinct()
         .select(

@@ -10,7 +10,6 @@ class BpeSpec extends AnyFunSuite {
 
   private def encode(s: String): Seq[Int] = {
     import spark.implicits._
-    Bpe.register(spark)
     Seq(s).toDF("t").select(Bpe.bpeEncode(col("t")))
       .collect()(0).getSeq[Int](0)
   }
@@ -56,7 +55,6 @@ class BpeSpec extends AnyFunSuite {
   test("codegen and interpreted eval agree bit-for-bit") {
     def run(s: org.apache.spark.sql.SparkSession) = {
       import s.implicits._
-      Bpe.register(s)
       Seq((1L, "the quick brown fox ingesting other things"),
           (2L, "a2z !!! mixed 42 cases"),
           (3L, ""),
@@ -77,7 +75,6 @@ class BpeSpec extends AnyFunSuite {
     import spark.implicits._
     Seq((1L, "the thing"), (2L, "other words")).toDF("id", "text")
       .write.mode("overwrite").parquet(dir)
-    Bpe.register(spark)
     val plan = spark.read.parquet(dir)
       .selectExpr("id", "bpe_encode(text) AS ids")
       .queryExecution.executedPlan.toString()
@@ -129,7 +126,6 @@ class BpeSpec extends AnyFunSuite {
   test("big vocab: codegen and interpreted eval agree bit-for-bit") {
     def run(s: org.apache.spark.sql.SparkSession) = {
       import s.implicits._
-      Bpe.registerBig(s)
       Seq((1L, "the quick brown fox ingesting other things"),
           (2L, "aaaa eaa ea a2z !!! 42"),
           (3L, ""),
@@ -150,7 +146,6 @@ class BpeSpec extends AnyFunSuite {
     import spark.implicits._
     Seq((1L, "the thing"), (2L, "other words")).toDF("id", "text")
       .write.mode("overwrite").parquet(dir)
-    Bpe.registerBig(spark)
     val plan = spark.read.parquet(dir)
       .selectExpr("id", "bpe_encode_big(text) AS ids")
       .queryExecution.executedPlan.toString()

@@ -99,4 +99,15 @@ class ConfValueSpec extends AnyFunSuite {
       Seq("a.b" -> "1", "c.d" -> "x=y"))
     assert(ConfValue.overrides("").isEmpty)
   }
+
+  test("SPARK_GRAFT_BENCH_ITERS: a positive integer is read, anything " +
+    "else gives 2 with one WARN") {
+    assert(warnings(assert(Bench.iters(None) == 2)).isEmpty)
+    assert(warnings(assert(Bench.iters(Some("5")) == 5)).isEmpty)
+    for (bad <- Seq("", "0", "-3", "3x", "9999999999")) {
+      val w = warnings(assert(Bench.iters(Some(bad)) == 2, s"iters=\"$bad\""))
+      assert(w.size == 1 && w.head.contains("SPARK_GRAFT_BENCH_ITERS") &&
+        w.head.contains("\"" + bad + "\""), s"iters=\"$bad\" warned $w")
+    }
+  }
 }

@@ -80,7 +80,7 @@ class FastTextTrainSpec extends AnyFunSuite {
     val w = FastText.train(docs, col("text"), col("pos"))
     val bc = spark.sparkContext.broadcast(w)
     val got = docs.select(col("id"),
-        FastText.scoreWith(col("text"), bc, spark).as("s"))
+        FastText.scoreWith(col("text"), bc).as("s"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     Seq((1L, "alpha beta gamma"), (2L, "alpha beta"),
       (3L, "zeta eta theta"), (4L, "zeta eta")).foreach { case (id, t) =>
@@ -94,7 +94,7 @@ class FastTextTrainSpec extends AnyFunSuite {
     def run(s: org.apache.spark.sql.SparkSession) = {
       import s.implicits._
       Seq("a b c", "", "xy", "q q q").toDF("t")
-        .select(FastText.features(col("t"), s).as("f"))
+        .select(FastText.features(col("t")).as("f"))
         .collect().map(_.toString).sorted
     }
     val interp = spark.newSession()

@@ -48,7 +48,7 @@ class KMeansSpec extends AnyFunSuite {
     val df = corpus(60)
     val m = KMeans.train(df, "vec_id", "embedding", k = 4, dim = Dim,
       iters = 3)
-    val dl = KMeans.dists(col("embedding"), m, spark)
+    val dl = KMeans.dists(col("embedding"), m)
     val assigned = df.select(col("vec_id"), col("embedding"), dl.as("dl"))
       .select(col("vec_id"), col("embedding"),
         (array_position(col("dl"), array_min(col("dl"))) - 1).as("cell"))
@@ -178,7 +178,7 @@ class KMeansSpec extends AnyFunSuite {
         (i.toLong, v.toSeq)
       }.toDF("vec_id", "embedding")
       d.select(col("vec_id"),
-          KMeans.distsColumn(col("embedding"), m.bc, Dim, s).as("dl"))
+          KMeans.distsColumn(col("embedding"), m.bc, Dim).as("dl"))
         .selectExpr("vec_id", "dl[0]", "dl[3]")
         .collect().map(_.toString).sorted
     }
@@ -191,7 +191,7 @@ class KMeansSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("km_wscg").toString
     df.write.mode("overwrite").parquet(dir)
     val plan = spark.read.parquet(dir)
-      .select(KMeans.distsColumn(col("embedding"), m.bc, Dim, spark).as("dl"))
+      .select(KMeans.distsColumn(col("embedding"), m.bc, Dim).as("dl"))
       .queryExecution.executedPlan.toString()
     assert(plan.contains("*(1) Project"), s"fell out of WSCG:\n$plan")
   }

@@ -26,7 +26,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * `target/plan-fingerprints/fingerprints.tsv`.
   *
   * Leak gate, the reference's `tests/stateful_data_cleanup.rs` practice:
-  * no query may add a CacheManager entry, and once the spec's frames are
+  * no query may add a CacheManager entry or change the set of names in
+  * the session's function registry, and once the spec's frames are
   * unreachable the ContextCleaner must have taken back every RDD the
   * queries persisted.
   */
@@ -44,6 +45,8 @@ class QueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect { case Array(n, h) => n -> h }.toMap
 
   private lazy val committed = readTsv(committedFile)
+  private def functionNames(): Set[String] =
+    spark.sessionState.functionRegistry.listFunction().map(_.unquotedString).toSet
   private val current = TrieMap.empty[String, String]
   private var persistedAtStart = Set.empty[Int]
 
@@ -55,6 +58,7 @@ class QueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
   SparkEntry.queries.foreach { case (name, fn) =>
     test(s"$name runs, returns rows, schema is stable") {
       val cachedBefore = SparkInternals.cachedPlans(spark)
+      val functionsBefore = functionNames()
       val df = fn(spark, sf01)
       val fields = df.schema.fields
       assert(fields.nonEmpty, "empty schema")
@@ -77,6 +81,12 @@ class QueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
         fail(s"$name left CacheManager entries over:\n" + cachedAdded
           .map(_.plan.treeString.linesIterator.take(3).mkString("\n"))
           .mkString("\n"))
+      val functionsAdded = functionNames() -- functionsBefore
+      val functionsDropped = functionsBefore -- functionNames()
+      if (functionsAdded.nonEmpty || functionsDropped.nonEmpty)
+        fail(s"$name changed the session's function registry: added " +
+          s"${functionsAdded.toSeq.sorted.mkString("[", ", ", "]")}, " +
+          s"dropped ${functionsDropped.toSeq.sorted.mkString("[", ", ", "]")}")
       val want = committed.get(name)
       assert(want.contains(fp),
         s"$name: plan fingerprint $fp != committed ${want.getOrElse("(none)")}" +

@@ -29,7 +29,6 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("LSH buckets: deterministic, in-range, exactly one per vector") {
-    HashExpressions.register(spark)
     val b1 = Similarity.bucketed(corpus, nBits = 8)
       .select("vec_id", "bucket").collect().map(r => (r.getLong(0), r.getInt(1)))
     val b2 = Similarity.bucketed(corpus, nBits = 8)
@@ -128,7 +127,6 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("lshTopK recall improves with probing and beats the random baseline; " +
     "every returned cos matches the exact cos") {
-    HashExpressions.register(spark)
     val k = 10
     val exact = Similarity.bruteForceTopK(corpus, queries, k)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
@@ -182,7 +180,6 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("cosineNearDupPairs only emits pairs above threshold, symmetric-free") {
-    HashExpressions.register(spark)
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     // Near-random corpus vectors have no cos >= 0.95 pairs, which would
@@ -202,7 +199,6 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("cosineNearDupPairs finds planted duplicate vectors (LSH bucket " +
     "path: identical vectors always share a bucket)") {
-    HashExpressions.register(spark)
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     // Plant exact duplicates of vecs 0-4 under ids 10000-10004: cos = 1.0,

@@ -33,7 +33,6 @@ class SketchCodegenSpec extends AnyFunSuite {
 
   private def fixture(s: org.apache.spark.sql.SparkSession) = {
     import s.implicits._
-    HashExpressions.register(s)
     Seq(
       (1L, "the quick brown fox jumps over the lazy dog again and again"),
       (2L, "pack my box with five dozen liquor jugs right now please"),
@@ -59,7 +58,6 @@ class SketchCodegenSpec extends AnyFunSuite {
     import spark.implicits._
     def df(s: org.apache.spark.sql.SparkSession) = {
       import s.implicits._
-      HashExpressions.register(s)
       Seq((1L, Array(0.5f, -1.0f, 2.0f, 0.25f)),
           (2L, Array(-0.5f, 1.0f, -2.0f, -0.25f)),
           (3L, Array(0.0f, 0.0f, 0.0f, 0.0f)))
