@@ -46,16 +46,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = GraftSession.forMain("graft-bench")
+    // Both stamped in provenance below.
     val cpus = GraftSession.cpus
-    val b = GraftSession.builder(s"local[$cpus]", "graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-    // Same override hook as Verify: lets the cluster-conf A/B (the
-    // GraftSession.clusterConf translation run in local mode) go through
-    // the identical bench harness, stamped in provenance below.
     val overrides = sys.env.getOrElse("SPARK_GRAFT_CONF", "")
-    ConfValue.overrides(overrides).foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // JVM/codegen warmup outside the timed loop: the first query otherwise
     // absorbs ~5s of JIT + parquet-reader initialization that belongs to
     // the JVM, not the query.

@@ -5,7 +5,7 @@ package graft
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = engine.GraftSession.local(8)
+    val spark = engine.GraftSession.forMain("graft-smoke")
     val df = SparkEntry.entry(spark)
     df.show(20, false)
     println("ENTRY_ROWS=" + df.count())

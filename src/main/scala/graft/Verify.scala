@@ -15,18 +15,12 @@ object Verify {
         Some(name => entries.contains(name) ||
           entries.exists(e => name.startsWith(e + "_")))
       } else None
-    val cpus = graft.engine.GraftSession.cpus
-    val b = graft.engine.GraftSession.builder(s"local[$cpus]", "graft-verify")
-      .config("spark.sql.shuffle.partitions", cpus)
-    // Optional conf overrides for mode-flip parity runs — the analog of the
-    // reference rerunning its correctness suites with ADAPTIVE=true
+    // Mode-flip parity runs go through SPARK_GRAFT_CONF — the analog of
+    // the reference rerunning its correctness suites with ADAPTIVE=true
     // (`tests/tpch_correctness_test.rs:15,144-146`): e.g.
     // SPARK_GRAFT_CONF="spark.sql.adaptive.enabled=false" must yield the
     // same full-corpus oracle result as the default AQE-on run.
-    sys.env.get("SPARK_GRAFT_CONF").foreach(graft.engine.ConfValue
-      .overrides(_).foreach { case (k, v) => b.config(k, v) })
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.GraftSession.forMain("graft-verify")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_(name)) }

@@ -12,7 +12,9 @@ import org.apache.spark.sql.SparkSession
   *    its parser rejects gives the default and one WARN per distinct
   *    (key, value) that names both.
   *  - [[overrides]] reads a `SPARK_GRAFT_CONF`-style list
-  *    (`k1=v1,k2=v2`). An entry without `=` is skipped with a WARN.
+  *    (`k1=v1,k2=v2`). A comma inside `[...]` belongs to its value, as
+  *    in `spark.master=local-cluster[2,2,2048]`. An entry without `=` is
+  *    skipped with a WARN.
   *  - [[positiveInt]] reads a count from an environment variable. A
   *    value that is not a positive integer gives the default, with the
   *    same one WARN.
@@ -39,7 +41,7 @@ object ConfValue extends Logging {
     })
 
   def overrides(spec: String): Seq[(String, String)] =
-    spec.split(",").toSeq.filter(_.nonEmpty).flatMap { kv =>
+    spec.split(",(?![^\\[]*\\])").toSeq.filter(_.nonEmpty).flatMap { kv =>
       kv.split("=", 2) match {
         case Array(k, v) => Some(k -> v)
         case _ =>

@@ -60,38 +60,6 @@ object GraftSession {
     "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false"
   )
 
-  /** Cluster-scale conf on top of [[defaultConf]] — the arithmetic a 100 TB
-    * deployment actually needs, parameterized the way the reference sizes
-    * stages (`bytes_per_partition` × worker count):
-    *
-    *  - shuffle partitions ≈ 2-3 tasks per core across the fleet (AQE
-    *    coalesces down when a stage is small; undershooting cannot be fixed
-    *    at runtime, overshooting can);
-    *  - `maxPartitionBytes` fixed at the reference's 16 MiB-class default
-    *    scaled to 128 MiB for object-store parquet (fewer, fuller tasks;
-    *    row-group aligned);
-    *  - broadcast threshold sized to executor memory, not a constant: a
-    *    64 GiB executor can afford a 256 MiB build side, a 8 GiB one
-    *    cannot.
-    *
-    * local[32] testing uses [[defaultConf]]; this method is the documented
-    * translation to a real fleet and is exercised for arithmetic only.
-    */
-  def clusterConf(executors: Int, coresPerExecutor: Int,
-                  executorMemGiB: Int): Map[String, String] = {
-    require(executors >= 1 && coresPerExecutor >= 1 && executorMemGiB >= 1,
-      "cluster dimensions must be positive")
-    val totalCores = executors.toLong * coresPerExecutor
-    val shufflePartitions = math.min(totalCores * 3, 200000L)
-    val broadcastBytes =
-      math.min(executorMemGiB.toLong * 1024 * 1024 * 1024 / 256, 512L * 1024 * 1024)
-    defaultConf ++ Map(
-      "spark.sql.shuffle.partitions" -> shufflePartitions.toString,
-      "spark.sql.files.maxPartitionBytes" -> (128L * 1024 * 1024).toString,
-      "spark.sql.autoBroadcastJoinThreshold" -> broadcastBytes.toString,
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> (64L * 1024 * 1024).toString)
-  }
-
   def builder(master: String = "local[*]", appName: String = "graft"): SparkSession.Builder = {
     val b = SparkSession.builder().master(master).appName(appName)
       .withExtensions(new GraftExtensions)
@@ -106,9 +74,31 @@ object GraftSession {
   def cpus: Int = ConfValue.positiveInt("SPARK_GRAFT_CPUS",
     sys.env.get("SPARK_GRAFT_CPUS"), Runtime.getRuntime.availableProcessors())
 
-  def local(threads: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
-    val spark = builder(s"local[$threads]").getOrCreate()
+  /** The session of every command-line main: `local[cpus]` (with a task
+    * failure limit above 1, `local[cpus,taskFailures]`) and one shuffle
+    * partition per thread, then the main's own `conf`, then the
+    * `SPARK_GRAFT_CONF` entries. Later entries win, so
+    * `SPARK_GRAFT_CONF="spark.master=local-cluster[2,2,2048]"` moves any
+    * main onto executor JVMs without a source edit.
+    */
+  def forMain(appName: String, conf: Seq[(String, String)] = Nil,
+              taskFailures: Int = 1): SparkSession = {
+    val b = builder(appName = appName)
+    mainSettings(cpus, taskFailures, conf,
+      ConfValue.overrides(sys.env.getOrElse("SPARK_GRAFT_CONF", "")))
+      .foreach { case (k, v) => b.config(k, v) }
+    val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
+  }
+
+  /** [[forMain]]'s settings in the order they are applied. */
+  private[graft] def mainSettings(cpus: Int, taskFailures: Int,
+      conf: Seq[(String, String)],
+      overrides: Seq[(String, String)]): Seq[(String, String)] = {
+    val master =
+      if (taskFailures == 1) s"local[$cpus]" else s"local[$cpus,$taskFailures]"
+    Seq("spark.master" -> master,
+      "spark.sql.shuffle.partitions" -> cpus.toString) ++ conf ++ overrides
   }
 }

@@ -92,9 +92,7 @@ object NdvSizing {
 
   /** NDV-sized aggregation: measure the keys, pick the plan (see object
     * doc), run `aggs` grouped by `keys`. `maxPartitions` caps the computed
-    * fan-out (pass the cluster's task budget; the default matches
-    * [[GraftSession.clusterConf]]'s 3-tasks-per-core reasoning at local
-    * scale).
+    * fan-out (pass the cluster's task budget).
     *
     * @param dropNullKeys filter rows whose every key is null before the
     *        shuffle when the measured null fraction crosses

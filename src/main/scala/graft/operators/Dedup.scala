@@ -509,7 +509,11 @@ object Dedup {
     */
   private[graft] def localEdgeThreshold(df: DataFrame): Long =
     ConfValue.get(df.sparkSession, "spark.graft.cc.localEdgeThreshold",
-      1L << 20)(_.toLong)
+      1L << 20) { raw =>
+      val edges = raw.toLong
+      require(edges >= 0, "a negative edge count")
+      edges
+    }
 
   /** Both endpoints (and the node ids) must be integral for the driver
     * finisher's LongMap union-find; non-integral ids just stay on the

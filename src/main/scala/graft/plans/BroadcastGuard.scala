@@ -23,7 +23,11 @@ case class BroadcastGuard(spark: SparkSession) extends Rule[LogicalPlan] {
   val MaxBytesKey = "spark.graft.broadcastGuard.maxBytes"
 
   private[graft] def maxBytes: BigInt =
-    ConfValue.get(spark, MaxBytesKey, BigInt(256L * 1024 * 1024))(BigInt(_))
+    ConfValue.get(spark, MaxBytesKey, BigInt(256L * 1024 * 1024)) { raw =>
+      val bytes = BigInt(raw)
+      require(bytes >= 0, "a negative size")
+      bytes
+    }
 
   // By the time injected rules run, EliminateResolvedHint has already moved
   // hints onto the Join node (JoinHint.leftHint/rightHint) — match there.

@@ -21,11 +21,7 @@ object ConfAb {
     val abConf = ConfValue.overrides(sys.env.getOrElse("SPARK_GRAFT_AB_CONF",
       "spark.sql.join.preferSortMergeJoin=false," +
         "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold=67108864"))
-    val cpus = GraftSession.cpus
-    val spark = GraftSession.builder(s"local[$cpus]", "graft-confab")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.forMain("graft-confab")
     val defaults = abConf.map { case (k, _) =>
       (k, spark.conf.getOption(k)) }
     def setB(): Unit = abConf.foreach { case (k, v) => spark.conf.set(k, v) }

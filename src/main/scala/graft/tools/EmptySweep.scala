@@ -12,8 +12,7 @@ object EmptySweep {
   def main(args: Array[String]): Unit = {
     val src = "/root/testdata/sf0.001"
     val dst = "/tmp/graft-empty-fixture"
-    val spark = GraftSession.builder("local[8]", "graft-emptysweep")
-      .config("spark.sql.shuffle.partitions", "8").getOrCreate()
+    val spark = GraftSession.forMain("graft-emptysweep")
     spark.sparkContext.setLogLevel("ERROR")
     val d = new File(dst); org.apache.commons.io.FileUtils.deleteDirectory(d); d.mkdirs()
     val emptied = Set("documents", "embeddings", "events")

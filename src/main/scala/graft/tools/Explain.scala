@@ -76,10 +76,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("q03_shipping_priority")
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val spark = GraftSession.builder("local[8]", "graft-explain")
-      .config("spark.sql.shuffle.partitions", "8")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.forMain("graft-explain")
     println(s"=== EXPLAIN ANALYZE $name @ $sfDir ===")
     println(analyze(SparkEntry.queries(name)(spark, sfDir)))
     spark.stop()

@@ -32,10 +32,7 @@ object FloatAudit {
     val sfDir = args(0)
     val only: Option[Set[String]] =
       if (args.length > 1) Some(args(1).split(",").toSet) else None
-    val cpus = GraftSession.cpus
-    val spark = GraftSession.builder(s"local[$cpus]", "graft-float-audit")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.forMain("graft-float-audit")
     // Two layouts chosen to disagree in both shuffle fan-out and scan
     // splits: different partial-agg grouping, different merge order.
     val layouts = Seq(

@@ -204,10 +204,7 @@ object MetricsReport {
     val name = args.headOption.getOrElse("q03_shipping_priority")
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val format = if (args.length > 2) args(2) else "aggregated"
-    val spark = GraftSession.builder("local[8]", "graft-metrics")
-      .config("spark.sql.shuffle.partitions", "8")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.forMain("graft-metrics")
     println(s"=== TASK METRICS $name @ $sfDir ($format) ===")
     format match {
       case "per-task" =>

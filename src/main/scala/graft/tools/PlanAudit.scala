@@ -93,9 +93,7 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = GraftSession.builder("local[8]", "graft-audit")
-      .config("spark.sql.shuffle.partitions", "8")
-      .getOrCreate()
+    val spark = GraftSession.forMain("graft-audit")
     spark.sparkContext.setLogLevel("ERROR")
     // Queries whose SEMANTICS are a cross/nested-loop join over data-scaled
     // inputs — exempt by name.

@@ -25,10 +25,7 @@ object ProfileQuery {
     val sfDir = args.head
     val names = args.tail
     val cpus = GraftSession.cpus
-    val spark = GraftSession.builder(s"local[$cpus]", "graft-profile")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.forMain("graft-profile")
     names.foreach { n =>
       // one untimed warm pass (family-switch + codegen warmup, the Bench
       // discipline)

@@ -22,8 +22,8 @@ import graft.operators.{AudioHash, Dedup, Html, ImageHash, Multimodal, Sampling,
   * (MinHash), hash-keyed sampling, and the mapPartitions multimodal
   * path.
   *
-  * Mechanism: a `local[8,3]` master (maxFailures=3 — the shared test
-  * session's `local[8]` kills the job on the FIRST failure, which is why
+  * Mechanism: a `local[N,3]` master (maxFailures=3 — the shared test
+  * session's `local[N]` kills the job on the FIRST failure, which is why
   * this is a standalone main and not a spec). A fail-once UDF guard
   * (`FailOnce`) throws exactly once per (run-tag, partition) — the
   * retried attempt finds the marker and proceeds — so every partition of
@@ -112,9 +112,7 @@ object RetryProof {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = GraftSession.builder("local[8,3]", "graft-retry-proof")
-      .config("spark.sql.shuffle.partitions", "8")
-      .getOrCreate()
+    val spark = GraftSession.forMain("graft-retry-proof", taskFailures = 3)
     spark.sparkContext.setLogLevel("ERROR")
     val guard = udf((tag: String, _: String) => FailOnce.passOrThrowOnce(tag))
     // The guard must not be constant-folded or pushed past the work it
@@ -332,7 +330,7 @@ object RetryProof {
     }
     val bad = outcomes.filterNot(_.ok)
     println(s"[retry-proof] ${outcomes.size - bad.size}/${outcomes.size} ok " +
-      s"(master=local[8,3], sf=$sfDir)")
+      s"(master=${spark.sparkContext.master}, sf=$sfDir)")
     spark.stop()
     if (bad.nonEmpty) sys.exit(1)
   }

@@ -114,9 +114,7 @@ object Shell {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val cpus = GraftSession.cpus
-    val spark = GraftSession.builder(s"local[$cpus]", "graft-shell")
-      .config("spark.sql.shuffle.partitions", cpus).getOrCreate()
+    val spark = GraftSession.forMain("graft-shell")
     spark.sparkContext.setLogLevel("ERROR")
     suites("fixture")(spark, dir)
     CbPort.register(spark, dir) // `hits` never collides with bare names

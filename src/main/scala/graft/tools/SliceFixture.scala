@@ -43,8 +43,7 @@ object SliceFixture {
   def main(args: Array[String]): Unit = {
     val Array(src, dst) = args.take(2)
     val mod = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = GraftSession.builder("local[8]", "graft-slice")
-      .config("spark.sql.shuffle.partitions", "8").getOrCreate()
+    val spark = GraftSession.forMain("graft-slice")
     spark.sparkContext.setLogLevel("ERROR")
     new File(dst).mkdirs()
     new File(src).listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>

@@ -103,12 +103,7 @@ object SpillProof {
     SparkSession.getActiveSession.foreach(_.stop())
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val b = GraftSession.builder("local[8]", "graft-spill-proof")
-      .config("spark.sql.shuffle.partitions", "8")
-    extraConf.foreach { case (k, v) => b.config(k, v) }
-    val s = b.getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+    GraftSession.forMain("graft-spill-proof", extraConf)
   }
 
   def main(args: Array[String]): Unit = {

@@ -15,26 +15,29 @@ import graft.operators.Dedup
 import graft.plans.{BroadcastGuard, PartialReduce}
 
 /** Every `spark.graft.*` key the engine parses takes a valid value, and a
-  * malformed one (empty or garbage) falls back to the default with one
-  * WARN naming the key and the value. Each key is read through the site
-  * that uses it, and a query that reaches that site runs under each
-  * value without throwing.
+  * malformed one (empty, garbage or out of range) falls back to the
+  * default with one WARN naming the key and the value. The `keys` table
+  * is the list of those keys. Each key is read through the one site that
+  * uses it, and a query that reaches that site runs under each value
+  * without throwing.
   */
 class ConfValueSpec extends AnyFunSuite {
   import SparkTestSession._
 
-  /** A key, one valid value with what it parses to, the default, the
-    * site's reader, and a query that reaches the site.
+  /** A key, one valid value with what it parses to, the default, a
+    * well-formed value outside the key's range if it has one, the site's
+    * reader, and a query that reaches the site.
     */
   private case class Key(key: String, valid: String, parsed: Any,
-                         default: Any, read: SparkSession => Any,
+                         default: Any, outOfRange: Option[String],
+                         read: SparkSession => Any,
                          query: SparkSession => Any)
 
   private val keys = Seq(
-    Key("spark.graft.partialReduce", "true", true, false,
+    Key("spark.graft.partialReduce", "true", true, false, None,
       s => PartialReduce(s).enabled,
       s => s.range(0, 100, 1, 4).groupBy(col("id") % 3).count().collect()),
-    Key("spark.graft.cc.localEdgeThreshold", "0", 0L, 1L << 20,
+    Key("spark.graft.cc.localEdgeThreshold", "0", 0L, 1L << 20, Some("-1"),
       s => Dedup.localEdgeThreshold(s.range(1).toDF()),
       s => {
         import s.implicits._
@@ -42,7 +45,7 @@ class ConfValueSpec extends AnyFunSuite {
           Seq((1L, 2L)).toDF("id_a", "id_b")).collect()
       }),
     Key(BroadcastGuard(spark).MaxBytesKey, "1024", BigInt(1024),
-      BigInt(256L * 1024 * 1024),
+      BigInt(256L * 1024 * 1024), Some("-1"),
       s => BroadcastGuard(s).maxBytes,
       s => s.range(10).join(broadcast(s.range(5)), "id").collect()))
 
@@ -77,7 +80,8 @@ class ConfValueSpec extends AnyFunSuite {
       }
     }
 
-    for ((label, bad) <- Seq("an empty" -> "", "a garbage" -> "12x;not-a-value")) {
+    for ((label, bad) <- Seq("an empty" -> "", "a garbage" -> "12x;not-a-value") ++
+        k.outOfRange.map("an out-of-range" -> _)) {
       test(s"${k.key}: $label value falls back to the default with " +
         "one WARN naming the key and the value") {
         val warned = warnings {
@@ -98,6 +102,9 @@ class ConfValueSpec extends AnyFunSuite {
     assert(ConfValue.overrides("a.b=1,oops,,c.d=x=y") ==
       Seq("a.b" -> "1", "c.d" -> "x=y"))
     assert(ConfValue.overrides("").isEmpty)
+    // A comma inside [...] belongs to the value.
+    assert(ConfValue.overrides("spark.master=local-cluster[2,2,2048],a.b=1") ==
+      Seq("spark.master" -> "local-cluster[2,2,2048]", "a.b" -> "1"))
   }
 
   test("SPARK_GRAFT_BENCH_ITERS: a positive integer is read, anything " +

@@ -120,22 +120,4 @@ class ExtensionsSpec extends AnyFunSuite {
       .head().getInt(0)
     assert(mh == 8)
   }
-
-  test("clusterConf arithmetic: partitions track cores, broadcast tracks memory") {
-    import graft.engine.GraftSession
-    // A 1000-executor / 8-core / 64 GiB fleet (the 100 TB shape).
-    val big = GraftSession.clusterConf(1000, 8, 64)
-    assert(big("spark.sql.shuffle.partitions").toLong == 24000L,
-      "3 tasks/core over 8000 cores")
-    assert(big("spark.sql.autoBroadcastJoinThreshold").toLong == 256L * 1024 * 1024,
-      "64 GiB executors afford a 256 MiB build side")
-    // A small 8 GiB-executor fleet must get a proportionally smaller
-    // broadcast bound, and partitions are capped at a sane ceiling.
-    val small = GraftSession.clusterConf(10, 4, 8)
-    assert(small("spark.sql.autoBroadcastJoinThreshold").toLong == 32L * 1024 * 1024)
-    val huge = GraftSession.clusterConf(100000, 16, 64)
-    assert(huge("spark.sql.shuffle.partitions").toLong == 200000L, "ceiling applies")
-    // Cluster conf keeps the engine defaults it does not override.
-    assert(big("spark.sql.adaptive.enabled") == "true")
-  }
 }
