@@ -289,7 +289,7 @@ object Dedup {
     // admission's dominant cost — is read by THREE independent consumers
     // (bridgeEdges via CC's edge count, and bridgeNodes on both of
     // bridgeLabels' uses below), so without the cut the banded join ran
-    // three times per admission (ProfileQuery: 32 jobs / 65 s summed task
+    // three times per admission (query profile: 32 jobs / 65 s summed task
     // time for 7.4 k output rows on p92). Rows are slim (two longs,
     // O(touched clusters + batch) — never corpus-sized).
     val bridgeCross = Shared(crossPairs

@@ -94,14 +94,6 @@ object Pipeline {
       AppState.memo(s, "embCount", dir)(emb(s, dir).count())
   }
 
-  /** TEST-ONLY gate-sensitivity hook (`GRAFT_MUTATE=1`, set ONLY by
-    * `tools/mutation_check.sh`): deliberately miscompiles two queries —
-    * p66's amp_sum cast to double (the dtype-class path) and p72's
-    * n_params_kept off by one (the value/hash path) — so the differential
-    * harness is itself differentially tested: check.py MUST go red on
-    * both. Never set in any driver, bench, or CI path; the default
-    * (unset) compiles the correct queries.
-    */
   /** Offset minting re-encoded-copy media ids next to their base corpus
     * (p75/p81): a single high bit rather than a decimal constant, so copy
     * ids are provably disjoint from any realistic doc_id range (a 100 TB
@@ -131,6 +123,14 @@ object Pipeline {
     */
   private val BatchSeqIdOffset = 1L << 43
 
+  /** TEST-ONLY gate-sensitivity hook (`GRAFT_MUTATE=1`, set ONLY by
+    * `tools/mutation_check.sh`): deliberately miscompiles two queries —
+    * p66's amp_sum cast to double (the dtype-class path) and p72's
+    * n_params_kept off by one (the value/hash path) — so the differential
+    * harness is itself differentially tested: check.py MUST go red on
+    * both. Never set in any driver, bench, or CI path; the default
+    * (unset) compiles the correct queries.
+    */
   private def mutateGate: Boolean =
     sys.env.get("GRAFT_MUTATE").contains("1") ||
       sys.props.get("graft.mutate").contains("1")
@@ -3457,7 +3457,7 @@ object Pipeline {
       // time, ~10 of them full PNG-decode passes re-derived from the
       // cached WARC rows — propagateDeletes and the pair join each
       // re-evaluate the unpersisted signature lineage per action. Warm
-      // same-window A/B (ProfileQuery, sf0.1 local[32]): unpersisted
+      // same-window A/B (query profile, sf0.1 local[32]): unpersisted
       // 11.7 s wall / 147 s task time vs persisted (see below) — the
       // part-2 "persisted slower" reading was taken across a drifting
       // host window. Slim rows only (media_id, dhash bits, decoded).
@@ -3470,7 +3470,7 @@ object Pipeline {
       // sides). AQE materializes those exchanges CONCURRENTLY, and an
       // unpopulated cache is no barrier — each materialization finds a
       // cache miss and re-runs the WARC plant+parse+PNG-decode upstream
-      // itself (ProfileQuery: five 3.8–10.7 s stages each re-reading the
+      // itself (query profile: five 3.8–10.7 s stages each re-reading the
       // 32 planted WARC groups; ~100 s summed task time against a ~45 s
       // single-pass inventory). A serial pre-populate (`sigs.count()`
       // before the first action) removes the redundant passes but was
@@ -3621,7 +3621,7 @@ object Pipeline {
       // <figure> splitter regex scans the FULL page HTML and is
       // tag-agnostic — identical across the three modality branches —
       // so without a cut each branch re-scanned every page's HTML
-      // (ProfileQuery: three ~5-9 s 32-task figure stages out of six
+      // (query profile: three ~5-9 s 32-task figure stages out of six
       // heavy leaf stages / ~50 s summed task time). Exploded spans are
       // figure SNIPPETS (captions + media tags, not whole pages).
       val spans = Shared(Html.figureSpans(pages, "page_id", "html"))

@@ -6,8 +6,9 @@ import graft.engine.{ConfValue, GraftSession}
 /** Interleaved same-JVM config A/B (optimization round, guide §1): flips
   * planning-time SQL confs between reps of the same query so host-window
   * drift cancels out — the cross-window bench A/Bs this round kept
-  * producing 1.3–1.7× phantom deltas. Reports per-query medians under
-  * conf A (session default) and conf B.
+  * producing 1.3–1.7× phantom deltas. Each rep is one [[QueryProfile]]
+  * record (build plus `count()`); reports per-query medians of wall, jobs,
+  * span and orchestration under conf A (session default) and conf B.
   *
   * Usage:
   *   SPARK_GRAFT_AB_CONF="k1=v1,k2=v2" \
@@ -35,17 +36,15 @@ object ConfAb {
       try { setA(); SparkEntry.queries(n)(spark, sfDir).count()
             setB(); SparkEntry.queries(n)(spark, sfDir).count() }
       catch { case _: Throwable => () }
-      val (ta, tb) = (Array.newBuilder[Double], Array.newBuilder[Double])
+      def profiled(): QueryProfile =
+        QueryProfile.of(spark)(SparkEntry.queries(n)(spark, sfDir))(_.count())._2
+      val (pa, pb) = (Array.newBuilder[QueryProfile], Array.newBuilder[QueryProfile])
       // Guarded per query (r18 ADVICE): a query that fails after warmup
       // must not abort the whole tool run — print the failure, move on.
       try {
         (1 to reps).foreach { _ =>
-          setA()
-          val a0 = System.nanoTime(); SparkEntry.queries(n)(spark, sfDir).count()
-          ta += (System.nanoTime() - a0) / 1e9
-          setB()
-          val b0 = System.nanoTime(); SparkEntry.queries(n)(spark, sfDir).count()
-          tb += (System.nanoTime() - b0) / 1e9
+          setA(); pa += profiled()
+          setB(); pb += profiled()
         }
       } catch { case e: Throwable =>
         println(s"[conf-ab] $n FAILED: ${e.getClass.getSimpleName}: " +
@@ -53,10 +52,15 @@ object ConfAb {
       }
       setA()
       def med(xs: Array[Double]) = { val s = xs.sorted; s(s.length / 2) }
-      val (ra, rb) = (ta.result(), tb.result())
+      def side(ps: Array[QueryProfile]): String =
+        f"wall=${med(ps.map(_.wallSec))}%7.3f s " +
+          f"jobs=${med(ps.map(_.jobs.toDouble))}%4.0f " +
+          f"span=${med(ps.map(_.spanSec))}%7.3f s " +
+          f"orch=${med(ps.map(_.orchestrationSec))}%7.3f s"
+      val (ra, rb) = (pa.result(), pb.result())
       if (ra.nonEmpty && rb.nonEmpty) {
-        val (ma, mb) = (med(ra), med(rb))
-        println(f"[conf-ab] $n%-34s A=$ma%7.3f s  B=$mb%7.3f s  B/A=${mb / ma}%5.2f")
+        val ratio = med(rb.map(_.wallSec)) / med(ra.map(_.wallSec))
+        println(f"[conf-ab] $n%-34s A: ${side(ra)}  B: ${side(rb)}  B/A=$ratio%5.2f")
       }
     }
     spark.stop()

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
@@ -18,20 +18,24 @@ import graft.SparkEntry
   * plan that actually ran.
   *
   * Usage: `runMain graft.tools.Explain <queryName> [sfDir]`, or
-  * [[Explain.analyze]] programmatically (returns the rendered tree).
+  * [[Explain.analyze]] programmatically (returns the rendered tree and the
+  * [[QueryProfile]] layer line of the same run).
   */
 object Explain {
 
-  /** Execute the DataFrame and render its final adaptive plan as an
-    * ASCII stage tree with populated metrics.
+  /** Build and execute the DataFrame under a [[QueryProfile]], and render
+    * its final adaptive plan as an ASCII stage tree with populated metrics,
+    * followed by the record's layer line.
     */
-  def analyze(df: DataFrame): String = {
-    df.collect() // populate SQLMetrics and let AQE settle
+  def analyze(spark: SparkSession)(build: => DataFrame): String = {
+    // collect() populates SQLMetrics and lets AQE settle
+    val (df, profile) = QueryProfile.of(spark)(build) { df => df.collect(); df }
     val executed = df.queryExecution.executedPlan
     val sb = new StringBuilder
     val stageCounter = new java.util.concurrent.atomic.AtomicInteger(0)
     sb.append(s"== Stage ${stageCounter.getAndIncrement()} (result) ==\n")
     render(executed, 0, sb, stageCounter)
+    sb.append(s"== Layers: ${profile.layers} ==\n")
     sb.toString
   }
 
@@ -78,7 +82,7 @@ object Explain {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val spark = GraftSession.forMain("graft-explain")
     println(s"=== EXPLAIN ANALYZE $name @ $sfDir ===")
-    println(analyze(SparkEntry.queries(name)(spark, sfDir)))
+    println(analyze(spark)(SparkEntry.queries(name)(spark, sfDir)))
     spark.stop()
   }
 }

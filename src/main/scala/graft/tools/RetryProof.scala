@@ -3,8 +3,7 @@ package graft.tools
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.TaskContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.engine.{GraftSession, Tables}
@@ -28,8 +27,8 @@ import graft.operators.{AudioHash, Dedup, Html, ImageHash, Multimodal, Sampling,
   * (`FailOnce`) throws exactly once per (run-tag, partition) — the
   * retried attempt finds the marker and proceeds — so every partition of
   * the guarded stage is computed once by a FAILED task and once by its
-  * retry. A listener counts the failures; the result must be
-  * bit-identical to the unguarded baseline.
+  * retry. Each run's [[QueryProfile]] counts the failures; the result
+  * must be bit-identical to the unguarded baseline.
   *
   * Usage: `runMain graft.tools.RetryProof [sfDir]`. Exits 1 on any
   * divergence or if no task failure was actually injected.
@@ -88,26 +87,6 @@ object RetryProof {
                      fetchFailed: Long = 0) {
     def ok: Boolean =
       failedTasks > 0 && identical && (!needFetch || fetchFailed > 0)
-  }
-
-  private def withFailureCount[T](spark: SparkSession)(body: => T): (T, Long, Long) = {
-    val failed = new java.util.concurrent.atomic.AtomicLong(0)
-    val fetch = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (t.reason != org.apache.spark.Success) {
-          failed.incrementAndGet()
-          if (t.reason.isInstanceOf[org.apache.spark.FetchFailed])
-            fetch.incrementAndGet()
-        }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val r =
-      try body
-      finally spark.sparkContext.removeSparkListener(listener)
-    // listener bus is async; settle briefly
-    Thread.sleep(300)
-    (r, failed.get(), fetch.get())
   }
 
   def main(args: Array[String]): Unit = {
@@ -255,10 +234,9 @@ object RetryProof {
     val mapSide = cases.map { case (name, build) =>
       val baseline = build(identity).collect()
       val tag = name + "@" + System.nanoTime()
-      val (rows, failed, _) = withFailureCount(spark) {
-        build(df => guarded(df, tag)).collect()
-      }
-      Outcome(name, failed, rows.length,
+      val (rows, profile) =
+        QueryProfile.of(spark)(build(df => guarded(df, tag)))(_.collect())
+      Outcome(name, profile.failedTasks, rows.length,
         rows.length == baseline.length &&
           SpillProof.resultHash(rows) == SpillProof.resultHash(baseline))
     }
@@ -280,13 +258,12 @@ object RetryProof {
       val pre = org.apache.spark.graft.ShuffleFailureInjector.registeredShuffleIds()
       val fetchGuard =
         udf((t: String, _: Long) => FetchFailOnce.passOrFetchFail(t, pre))
-      val (rows, failed, fetched) = withFailureCount(spark) {
-        q.filter(fetchGuard(lit(tag), col("n"))).collect()
-      }
-      Outcome("fetch_failed", failed, rows.length,
+      val (rows, profile) = QueryProfile.of(spark)(
+        q.filter(fetchGuard(lit(tag), col("n"))))(_.collect())
+      Outcome("fetch_failed", profile.failedTasks, rows.length,
         rows.length == baseline.length &&
           SpillProof.resultHash(rows) == SpillProof.resultHash(baseline),
-        needFetch = true, fetchFailed = fetched)
+        needFetch = true, fetchFailed = profile.fetchFailed)
     }
     // TRAINER injection (round 17): training loops run multiple jobs
     // over the same input; the guard fails every input partition once
@@ -300,22 +277,20 @@ object RetryProof {
       val kmBase = graft.functions.KMeans
         .train(e, "vec_id", "embedding", k = 16, dim = 64, iters = 2)
       val kmTag = "km_train@" + System.nanoTime()
-      val (kmGot, kmFailed, _) = withFailureCount(spark) {
+      val (kmGot, kmProfile) = QueryProfile.of(spark)(
         graft.functions.KMeans.train(guarded(e, kmTag),
-          "vec_id", "embedding", k = 16, dim = 64, iters = 2)
-      }
-      val km = Outcome("km_train", kmFailed, kmGot.centroids.length,
+          "vec_id", "embedding", k = 16, dim = 64, iters = 2))(identity)
+      val km = Outcome("km_train", kmProfile.failedTasks, kmGot.centroids.length,
         kmGot.centroids.sameElements(kmBase.centroids) &&
           kmGot.inertia == kmBase.inertia)
       val vocab = graft.operators.BpeTrain.wordVocab(docs, col("text"))
       val bpeBase = graft.operators.BpeTrain.train(vocab, 4)
       val bpeTag = "bpe_train@" + System.nanoTime()
-      val (bpeGot, bpeFailed, _) = withFailureCount(spark) {
+      val (bpeGot, bpeProfile) = QueryProfile.of(spark)(
         graft.operators.BpeTrain.train(
           graft.operators.BpeTrain.wordVocab(guarded(docs, bpeTag),
-            col("text")), 4)
-      }
-      val bpe = Outcome("bpe_train", bpeFailed, bpeGot.merges.length,
+            col("text")), 4))(identity)
+      val bpe = Outcome("bpe_train", bpeProfile.failedTasks, bpeGot.merges.length,
         bpeGot.merges == bpeBase.merges)
       Seq(km, bpe)
     }

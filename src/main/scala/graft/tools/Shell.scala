@@ -93,7 +93,7 @@ object Shell {
       case ":explain" =>
         // Same arbitrary-SQL surface as the raw path (DDL shadows views).
         graft.engine.CatalogState.invalidate(spark)
-        Explain.analyze(spark.sql(rest.stripSuffix(";")))
+        Explain.analyze(spark)(spark.sql(rest.stripSuffix(";")))
       case ":q" =>
         graft.SparkEntry.queries.get(rest) match {
           case Some(fn) =>

@@ -138,10 +138,10 @@ object SpillProof {
           s"${threshold / 2},$threshold") ++
         runtimeStarvedConf(threshold))
     val outcomes = names.map { n =>
-      val (rows, stages) =
-        MetricsReport.collectWithResult(SparkEntry.queries(n)(starved, sfDir))
+      val (rows, profile) = QueryProfile.of(starved)(
+        SparkEntry.queries(n)(starved, sfDir))(_.collect())
       val (expHash, expRows) = baseline(n)
-      Outcome(n, stages.map(_.spillBytes).sum, rows.length,
+      Outcome(n, profile.spillBytes, rows.length,
         rows.length == expRows && resultHash(rows) == expHash)
     }
 

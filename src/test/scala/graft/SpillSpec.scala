@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.tools.{MetricsReport, SpillProof}
+import graft.tools.{QueryProfile, SpillProof}
 
 /** Pinned out-of-core proof (the full battery is `tools/SpillProof`,
   * which also forces the context-level sorter threshold in its own JVM):
@@ -25,13 +25,12 @@ class SpillSpec extends AnyFunSuite {
   private def proveSpill(name: String, confs: Seq[(String, String)]): Unit = {
     val fn = SparkEntry.queries(name)
     val baseline = fn(spark, sf001).collect()
-    val (rows, stages) = withConf(confs) {
-      MetricsReport.collectWithResult(fn(spark, sf001))
+    val (rows, profile) = withConf(confs) {
+      QueryProfile.of(spark)(fn(spark, sf001))(_.collect())
     }
-    val spilled = stages.map(_.spillBytes).sum
-    assert(spilled > 0,
+    assert(profile.spillBytes > 0,
       s"$name: expected spill under starved conf, got 0 bytes " +
-        s"(stages: ${stages.map(s => s"${s.stageId}:${s.spillBytes}").mkString(",")})")
+        s"(stages: ${profile.stages.map(s => s"${s.stageId}:${s.spillBytes}").mkString(",")})")
     assert(rows.length == baseline.length,
       s"$name: row count diverged under spill")
     assert(SpillProof.resultHash(rows) == SpillProof.resultHash(baseline),
