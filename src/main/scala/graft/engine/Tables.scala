@@ -1,8 +1,15 @@
 package graft.engine
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, FloatType, LongType,
+import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructType,
   TimestampNTZType, TimestampType}
 
 /** Table registry over the driver-generated parquet directories.
@@ -75,10 +82,50 @@ object Tables {
       // TimestampType (UTC session) rather than TIMESTAMP_NTZ.
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      normalizeEventTs(spark.read.parquet(s"$dir/$name.parquet"))
-    } else if (name == "embeddings")
-      normalizeEmbeddings(spark.read.parquet(s"$dir/$name.parquet"))
-    else spark.read.parquet(s"$dir/$name.parquet")
+    }
+    val df = spark.read.schema(schema(spark, dir, name))
+      .parquet(s"$dir/$name.parquet")
+    name match {
+      case "events" => normalizeEventTs(df)
+      case "embeddings" => normalizeEmbeddings(df)
+      case _ => df
+    }
+  }
+
+  /** Fixture table `name`'s schema as stored, read from its parquet footer
+    * on the driver with the converter Spark's own inference uses, under the
+    * session's current conf. Spark's inference reads the same footer inside
+    * a one-task job; reading it here lets every [[load]] build its frame
+    * with no job. A directory table gives the schema of its first data
+    * file, as Spark's non-merging inference does. Read on every call, so a
+    * regenerated fixture's new types reach the normalizers.
+    */
+  def schema(spark: SparkSession, dir: String, name: String): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val first = dataFiles(conf, dir, name).headOption.getOrElse(
+      throw new java.io.FileNotFoundException(
+        s"no parquet data file in $dir/$name.parquet"))
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(first, conf), SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(first.getPath, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
+
+  /** The data files of fixture table `name` through the Hadoop
+    * FileSystem (the fixture dir may be any Hadoop-FS URI): the file
+    * itself, or a directory table's part files in name order, skipping
+    * the `_`/`.` names Spark's file listing skips.
+    */
+  private def dataFiles(conf: Configuration, dir: String,
+                        name: String): Seq[FileStatus] = {
+    val p = new Path(s"$dir/$name.parquet")
+    val fs = p.getFileSystem(conf)
+    val st = fs.getFileStatus(p)
+    if (!st.isDirectory) Seq(st)
+    else fs.listStatus(p).toSeq.filter { f =>
+      val n = f.getPath.getName
+      f.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }.sortBy(_.getPath.getName)
   }
 
   /** Scale-adaptive fan-out for EXPENSIVE NARROW work over a small scan
@@ -155,22 +202,28 @@ object Tables {
     // the next suite register re-binds. Conversely, fixture tables
     // already bound pristine for this dir (tracked in CatalogState, reset
     // whenever a suite shadows them) are skipped, so a stretch of
-    // same-family queries stops paying a parquet footer read per table
-    // per query.
+    // same-family queries stops rebuilding the same views per query.
     if (CatalogState.suiteBound(spark)) CatalogState.invalidate(spark)
-    // The pristine-skip token carries the file's (length, lastModified)
-    // plus a hash of the parquet footer tail: an in-place fixture
-    // regeneration mid-session (plausible with the long-lived Shell)
-    // changes the token, so the table counts as missing and re-binds
-    // instead of serving the stale view. Stat alone leaves a residual —
-    // a deterministic same-size rewrite within the filesystem's mtime
-    // resolution would slip through — so the footer probe (one bounded
-    // pread of the whole metadata thrift, whose row-group offsets/stats
-    // change with the data) closes it. Two stat calls + one small pread
-    // per table per query vs a silent wrong-data hazard.
+    // The pristine-skip token carries each data file's (length,
+    // modification time) plus a hash of its parquet footer: an in-place
+    // fixture regeneration mid-session (plausible with the long-lived
+    // Shell) changes the token, so the table counts as missing and
+    // re-binds instead of serving the stale view. Stat alone leaves a
+    // residual — a deterministic same-size rewrite within the
+    // filesystem's mtime resolution would slip through — so the footer
+    // probe (one bounded pread of the whole metadata thrift, whose
+    // row-group offsets/stats change with the data) closes it. Both go
+    // through the Hadoop FileSystem, as [[tableBytes]] does: a local
+    // `java.io.File` stat of a `file:` URI or a remote path reads nothing,
+    // and every such token would match every other.
+    val conf = spark.sessionState.newHadoopConf()
     def tag(n: String): String = {
-      val f = new java.io.File(s"$dir/$n.parquet")
-      s"$n@${f.length}:${f.lastModified}:${footerProbe(f)}"
+      val token =
+        try dataFiles(conf, dir, n).map(f =>
+          s"${f.getLen}:${f.getModificationTime}:${footerProbe(conf, f)}")
+          .mkString(";")
+        catch { case _: Exception => "-2" }
+      s"$n@$token"
     }
     val tags = names.map(tag)
     val missing = CatalogState.missingFixture(spark, dir, tags)
@@ -191,26 +244,24 @@ object Tables {
     * a sentinel, which still forces a re-bind (and the bind then surfaces
     * the real error).
     */
-  private def footerProbe(f: java.io.File): Int =
+  private def footerProbe(conf: Configuration, f: FileStatus): Int =
     try {
-      val raf = new java.io.RandomAccessFile(f, "r")
+      val in = f.getPath.getFileSystem(conf).open(f.getPath)
       try {
-        val len = raf.length()
+        val len = f.getLen
         if (len < 8) -1
         else {
           val b4 = new Array[Byte](4)
-          raf.seek(len - 8)
-          raf.readFully(b4)
+          in.readFully(len - 8, b4)
           val footerLen = java.nio.ByteBuffer.wrap(b4)
             .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
           val probeLen =
             math.min(math.max(footerLen, 0).toLong + 8L, len).toInt
           val buf = new Array[Byte](probeLen)
-          raf.seek(len - probeLen)
-          raf.readFully(buf)
+          in.readFully(len - probeLen, buf)
           scala.util.hashing.MurmurHash3.bytesHash(buf, 0x9747b28c)
         }
-      } finally raf.close()
+      } finally in.close()
     } catch { case _: Exception => -2 }
 
   /** Register every table as a temp view named after the table. */

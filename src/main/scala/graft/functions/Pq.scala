@@ -519,7 +519,9 @@ object Pq {
     * Scale shape: per iteration ONE narrow WSCG encode scan + one
     * aggregation whose map-side combine bounds the shuffle at
     * M·K·SubDim rows per partition, then a ≤1024-row driver exchange —
-    * the k-means model-fitting loop at PQ granularity.
+    * the k-means model-fitting loop at PQ granularity. The inertia rides
+    * in the same aggregate: each cell's DECIMAL sum on its (m = 0, j = 0)
+    * row, added exactly on the driver ([[KMeans.exactInertia]]).
     *
     * `sampleFraction` < 1 trains on the deterministic hash-sample,
     * [[Shared]] across iterations — the [[graft.functions.KMeans.train]]
@@ -587,32 +589,38 @@ object Pq {
             round(enc.getField("err"), 6)
               .cast(org.apache.spark.sql.types.DecimalType(38, 6))
               .as("__e"))
-        val inertiaRow = assigned.agg(sum(col("__e")).cast("double"))
-          .collect()(0)
-        inertias += (if (inertiaRow.isNullAt(0)) 0.0
-                     else inertiaRow.getDouble(0))
-        val means = assigned
-          .select(col("__v"), explode(expr(
+        // One aggregate per iteration: each (m = 0, j = 0) row also
+        // carries its cell's inertia, so the frame is scanned and encoded
+        // once.
+        val rows = assigned
+          .select(col("__v"), col("__e"), explode(expr(
             s"transform(sequence(0, ${M - 1}), m -> struct(" +
               "CAST(m AS int) AS m, " +
               "CAST(shiftright(__code, m * 4) % 16 AS int) AS cell))"))
             .as("__mc"))
           .select(col("__mc.m").as("__m"), col("__mc.cell").as("__cell"),
+            col("__e"),
             posexplode(slice(col("__v"),
               col("__mc.m") * lit(SubDim) + 1, lit(SubDim)))
               .as(Seq("__j", "__e2")))
           .groupBy(col("__m"), col("__cell"), col("__j"))
           .agg((sum(col("__e2")
             .cast(org.apache.spark.sql.types.DecimalType(18, 9)))
-            .cast("double") / count(lit(1))).as("__raw"))
+            .cast("double") / count(lit(1))).as("__raw"),
+            sum(when(col("__m") === 0 && col("__j") === 0, col("__e")))
+              .as("__in"))
           .select(col("__m"), col("__cell"), col("__j"),
-            round(col("__raw"), 6).as("__cv"))
+            round(col("__raw"), 6).as("__cv"), col("__in"))
           .collect()
+        inertias += KMeans.exactInertia(rows, 4)
         val next = cur.clone()
-        means.foreach { r =>
+        rows.foreach { r =>
           next((r.getInt(0) * K + r.getInt(1)) * SubDim + r.getInt(2)) =
             r.getDouble(3)
         }
+        // This iteration's codebook broadcast is dead weight on the
+        // executors once the next codebook exists (non-blocking: the
+        // aggregate above has completed).
         bc.unpersist(blocking = false)
         cur = next
         snapshots += next

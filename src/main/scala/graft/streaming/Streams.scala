@@ -345,9 +345,9 @@ object Streams {
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
     val streamDir = stagedStreamDir(dir, "events.parquet", "events_stream")
-    val stream = spark.readStream.schema(raw.schema).parquet(streamDir.toString)
+    val stream = spark.readStream.schema(Tables.schema(spark, dir, "events"))
+      .parquet(streamDir.toString)
     // Same nanos/NTZ/timestamp normalization as the batch path.
     Tables.normalizeEventTs(stream)
   }
@@ -358,10 +358,10 @@ object Streams {
     * normalization.
     */
   def embeddingsStream(spark: SparkSession, dir: String): DataFrame = {
-    val raw = spark.read.parquet(s"$dir/embeddings.parquet")
     val streamDir =
       stagedStreamDir(dir, "embeddings.parquet", "embeddings_stream")
-    spark.readStream.schema(raw.schema).parquet(streamDir.toString)
+    spark.readStream.schema(Tables.schema(spark, dir, "embeddings"))
+      .parquet(streamDir.toString)
   }
 
   /** Read the documents table as a FILE STREAM (the crawl front door:
@@ -369,10 +369,10 @@ object Streams {
     * [[eventsStream]]; no timestamp columns, so no normalization.
     */
   def documentsStream(spark: SparkSession, dir: String): DataFrame = {
-    val raw = spark.read.parquet(s"$dir/documents.parquet")
     val streamDir =
       stagedStreamDir(dir, "documents.parquet", "documents_stream")
-    spark.readStream.schema(raw.schema).parquet(streamDir.toString)
+    spark.readStream.schema(Tables.schema(spark, dir, "documents"))
+      .parquet(streamDir.toString)
   }
 
   // Guards the set-conf → start() → restore-conf window in [[runToMemory]]

@@ -73,29 +73,39 @@ class CatalogStateSpec extends AnyFunSuite {
     assert(spark.table("customer").count() == n1)
   }
 
-  test("in-place fixture regeneration forces a rebind (no stale view)") {
+  /** Binds a one-file fixture in a fresh directory named by `name`,
+    * regenerates it in place and re-registers: the new rows must be bound,
+    * not the old view served.
+    */
+  private def regenerationRebinds(name: java.io.File => String): Unit = {
     // The pristine-skip token carries (length, mtime) — ADVICE r10: a
     // regenerated parquet file mid-session must be re-read, not served
     // from the old binding.
     import spark.implicits._
     val dir = java.nio.file.Files
       .createTempDirectory("graft-stale-test").toFile
+    val d = name(dir)
     try {
       val target = new java.io.File(dir, "documents.parquet")
       Tables.writeSingleParquet(
         Seq((1L, "one"), (2L, "two")).toDF("doc_id", "text"), target)
-      Tables.register(spark, dir.getAbsolutePath, "documents")
+      Tables.register(spark, d, "documents")
       assert(spark.table("documents").count() == 2)
       // Pristine skip: a second register with the file untouched no-ops.
-      Tables.register(spark, dir.getAbsolutePath, "documents")
+      Tables.register(spark, d, "documents")
       assert(spark.table("documents").count() == 2)
       // Regenerate in place (content + length change; mtime may or may
-      // not tick within fs resolution — length alone must suffice).
+      // not tick within fs resolution — length alone must suffice). The
+      // new file also gains a column: a stale view still reads the new
+      // rows through its old relation, but only a re-bound view has the
+      // new schema.
       Tables.writeSingleParquet(
-        Seq((1L, "one"), (2L, "two"), (3L, "three e e")).toDF("doc_id", "text"),
+        Seq((1L, "one", "en"), (2L, "two", "en"), (3L, "three e e", "fr"))
+          .toDF("doc_id", "text", "lang"),
         target)
-      Tables.register(spark, dir.getAbsolutePath, "documents")
-      assert(spark.table("documents").count() == 3,
+      Tables.register(spark, d, "documents")
+      assert(spark.table("documents").count() == 3 &&
+        spark.table("documents").columns.contains("lang"),
         "regenerated fixture must be re-bound, not served stale")
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(dir)
@@ -103,5 +113,14 @@ class CatalogStateSpec extends AnyFunSuite {
       CatalogState.invalidate(spark)
       Tables.register(spark, sf001, "documents")
     }
+  }
+
+  test("in-place fixture regeneration forces a rebind (no stale view)") {
+    regenerationRebinds(_.getAbsolutePath)
+  }
+
+  test("in-place fixture regeneration forces a rebind behind a file: URI " +
+    "fixture dir") {
+    regenerationRebinds(_.toURI.toString)
   }
 }

@@ -28,6 +28,14 @@ class KMeansSpec extends AnyFunSuite {
     }.toDF("vec_id", "embedding")
   }
 
+  /** Two groups of identical points: the empty-cell-carry corpus. */
+  private def twinGroups = {
+    import spark.implicits._
+    (Seq.fill(10)(Array(0f, 0f, 0f, 0f)) ++ Seq.fill(10)(Array(8f, 8f, 8f, 8f)))
+      .zipWithIndex.map { case (v, i) => (i.toLong, v.toSeq) }
+      .toDF("vec_id", "embedding")
+  }
+
   private def key(id: Long): Long = (id * 2654435761L) % 4294967296L
 
   test("snapshot 0 is exactly the k seed vectors ranked by the " +
@@ -100,7 +108,6 @@ class KMeansSpec extends AnyFunSuite {
 
   test("a cell that receives no vectors keeps its previous centroid " +
     "(the empty-cell carry)") {
-    import spark.implicits._
     // two tight groups near (0,0,0,0) and (8,8,8,8), plus one far
     // outlier that seeds a cell and then attracts nothing once the
     // groups' seeds converge — instead force it: 3 seeds, one of them
@@ -110,11 +117,7 @@ class KMeansSpec extends AnyFunSuite {
     // tight group. The duplicated seed's cell loses every vector to
     // the lower-indexed twin (first-min tie rule) when the twin is
     // strictly closer after the first mean step.
-    val pts = Seq.fill(10)(Array(0f, 0f, 0f, 0f)) ++
-      Seq.fill(10)(Array(8f, 8f, 8f, 8f))
-    val df = pts.zipWithIndex.map { case (v, i) => (i.toLong, v.toSeq) }
-      .toDF("vec_id", "embedding")
-    val m = KMeans.train(df, "vec_id", "embedding", k = 3, dim = Dim,
+    val m = KMeans.train(twinGroups, "vec_id", "embedding", k = 3, dim = Dim,
       iters = 3)
     // with identical points per group, at least one cell is a twin of
     // another (two seeds from one group) — its centroid must persist
@@ -126,6 +129,45 @@ class KMeansSpec extends AnyFunSuite {
     // two seeds came from one identical-point group, so two cells must
     // hold the same centroid — the starved twin carried, didn't decay
     assert(perCell.distinct.size < m.k)
+  }
+
+  test("every inertia(t-1) equals a driver re-derivation against " +
+    "snapshots(t-1): exact sum of round(min d2, 6), then doubleValue") {
+    import spark.implicits._
+    for ((df, k) <- Seq(corpus(60) -> 4, twinGroups -> 3)) {
+      val m = KMeans.train(df, "vec_id", "embedding", k = k, dim = Dim,
+        iters = 3)
+      val vecs = df.as[(Long, Seq[Float])].collect()
+      val expected = m.snapshots.init.map { c =>
+        vecs.map { case (_, v) =>
+          val d2 = (0 until c.length / Dim).map { l =>
+            (0 until Dim).foldLeft(0.0) { (acc, j) =>
+              val x = v(j).toDouble - c(l * Dim + j); acc + x * x
+            }
+          }
+          BigDecimal(d2.min).setScale(6, BigDecimal.RoundingMode.HALF_UP)
+            .bigDecimal
+        }.foldLeft(java.math.BigDecimal.ZERO)(_ add _).doubleValue
+      }
+      assert(m.inertia.map(java.lang.Double.doubleToRawLongBits) ==
+        expected.map(java.lang.Double.doubleToRawLongBits),
+        s"inertia ${m.inertia} vs re-derived $expected")
+    }
+  }
+
+  test("one Lloyd iteration runs the jobs of one grouped collect, with " +
+    "AQE on and off") {
+    val df = corpus(60)
+    def train(iters: Int) =
+      KMeans.train(df, "vec_id", "embedding", k = 4, dim = Dim, iters = iters)
+    for (aqe <- Seq("true", "false"))
+      withSessionConf("spark.sql.adaptive.enabled", aqe) {
+        val perIter = jobsOf(train(3)) - jobsOf(train(2))
+        val grouped =
+          jobsOf(df.groupBy(col("vec_id") % 4).count().collect())
+        assert(perIter == grouped,
+          s"AQE $aqe: $perIter jobs per iteration, one grouped collect $grouped")
+      }
   }
 
   test("inertia is monotonically non-increasing across iterations " +

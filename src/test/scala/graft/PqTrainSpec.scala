@@ -25,6 +25,16 @@ class PqTrainSpec extends AnyFunSuite {
     }.toDF("vec_id", "embedding")
   }
 
+  /** Two groups of identical points: most of the K seeds are twins, so
+    * cells go empty and carry.
+    */
+  private def twinGroups = {
+    import spark.implicits._
+    (Seq.fill(20)(0f) ++ Seq.fill(20)(8f)).zipWithIndex
+      .map { case (x, i) => (i.toLong, Seq.fill(Pq.Dim)(x)) }
+      .toDF("vec_id", "embedding")
+  }
+
   private def key(id: Long): Long = (id * 2654435761L) % 4294967296L
 
   test("snapshot 0 lays out the K ranked seeds' sub-vectors at " +
@@ -94,6 +104,47 @@ class PqTrainSpec extends AnyFunSuite {
       }
     }
     assert(mo.snapshots(1).sameElements(expected))
+  }
+
+  test("every inertia(t-1) equals a driver re-derivation against " +
+    "snapshots(t-1): exact sum of round(err, 6), then doubleValue") {
+    import spark.implicits._
+    for (df <- Seq(corpus(40), twinGroups)) {
+      val mo = Pq.train(df, "vec_id", "embedding", iters = 3)
+      val vecs = df.as[(Long, Seq[Float])].collect()
+      val expected = mo.snapshots.init.map { c =>
+        vecs.map { case (_, v) =>
+          val err = (0 until Pq.M).foldLeft(0.0) { (acc, m) =>
+            acc + (0 until Pq.K).map { k =>
+              (0 until Pq.SubDim).foldLeft(0.0) { (d, j) =>
+                val x = v(m * Pq.SubDim + j).toDouble -
+                  c((m * Pq.K + k) * Pq.SubDim + j)
+                d + x * x
+              }
+            }.min
+          }
+          BigDecimal(err).setScale(6, BigDecimal.RoundingMode.HALF_UP)
+            .bigDecimal
+        }.foldLeft(java.math.BigDecimal.ZERO)(_ add _).doubleValue
+      }
+      assert(mo.inertia.map(java.lang.Double.doubleToRawLongBits) ==
+        expected.map(java.lang.Double.doubleToRawLongBits),
+        s"inertia ${mo.inertia} vs re-derived $expected")
+    }
+  }
+
+  test("one Lloyd iteration runs the jobs of one grouped collect, with " +
+    "AQE on and off") {
+    val df = corpus(40)
+    def train(iters: Int) = Pq.train(df, "vec_id", "embedding", iters = iters)
+    for (aqe <- Seq("true", "false"))
+      withSessionConf("spark.sql.adaptive.enabled", aqe) {
+        val perIter = jobsOf(train(3)) - jobsOf(train(2))
+        val grouped =
+          jobsOf(df.groupBy(col("vec_id") % 4).count().collect())
+        assert(perIter == grouped,
+          s"AQE $aqe: $perIter jobs per iteration, one grouped collect $grouped")
+      }
   }
 
   test("reconstruction inertia is monotonically non-increasing and " +
