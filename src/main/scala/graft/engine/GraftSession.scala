@@ -39,8 +39,7 @@ object GraftSession {
     // Runtime skew-join splitting (the reference's dynamic task sizing
     // handles skew the same way: oversized partitions are subdivided at
     // stage boundaries). Explicit even though default-on: this engine
-    // RELIES on it for hot-key joins; Skew.saltedJoin is the manual lever
-    // beyond what AQE splits.
+    // RELIES on it for hot-key joins and has no manual salting lever.
     "spark.sql.adaptive.skewJoin.enabled" -> "true",
     "spark.sql.autoBroadcastJoinThreshold" -> (32 * 1024 * 1024).toString,
     "spark.sql.files.maxPartitionBytes" -> (16 * 1024 * 1024).toString,

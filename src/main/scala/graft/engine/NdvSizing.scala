@@ -3,8 +3,8 @@ package graft.engine
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** RUNTIME NDV/null%-driven stage sizing — the dynamic half of what
-  * [[graft.tools.CostModel]] estimates statically.
+/** RUNTIME NDV/null%-driven stage sizing: sizing decisions taken from
+  * statistics measured on the data, not estimated from the plan.
   *
   * The reference's sampler measures per-column distinct% and null% on a
   * row sample and feeds them into stage-boundary sizing before the full
@@ -125,9 +125,9 @@ object NdvSizing {
   case class JoinSizingDecision(left: KeyStats, right: KeyStats,
                                 broadcastRight: Boolean, numPartitions: Int)
 
-  /** Average on-wire row width estimate from the schema — the same
-    * defaultSize arithmetic [[graft.tools.CostModel]] uses at plan time,
-    * here paired with a MEASURED row count.
+  /** Average on-wire row width estimate from the schema (the sum of the
+    * columns' `defaultSize`, at least 8 bytes), paired with a MEASURED row
+    * count.
     */
   private def estimatedBytes(df: DataFrame, rows: Long): Long =
     rows * math.max(8, df.schema.fields.map(_.dataType.defaultSize).sum)

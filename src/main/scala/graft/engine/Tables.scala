@@ -163,7 +163,7 @@ object Tables {
 
   /** Hadoop-FS byte size of a fixture table. Hadoop FileSystem, not
     * java.io.File: the fixture dir may be any Hadoop-FS URI (file:/,
-    * hdfs:/, s3a:/ — the Streams.priorBatchDirs lesson), and a local-FS
+    * hdfs:/, s3a:/), and a local-FS
     * stat of a remote path reads 0 bytes, which would flip size-derived
     * conditions the WRONG way at cluster scale. getContentSummary
     * handles both a single parquet file and a directory-table of part

@@ -260,7 +260,4 @@ object Bpe {
   /** Encode pre-normalized text against the broadcast big vocab. */
   def bpeEncodeBig(text: Column): Column =
     column(BpeBigEncode(expression(text), bigVocabBc(SparkSession.active)))
-
-  def bpeCountBig(text: Column): Column =
-    org.apache.spark.sql.functions.size(bpeEncodeBig(text))
 }

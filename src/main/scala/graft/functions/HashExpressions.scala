@@ -500,12 +500,10 @@ object HashExpressions {
   def mortonJava(x: Long, y: Long): Long =
     spreadBits(x) | (spreadBits(y) << 1)
 
-  /** Z-order key as a native expression WITH `doGenCode`: the layout pass
-    * that rewrites 100 TB (compute key → range shuffle → sorted write) must
-    * stay inside whole-stage codegen, because it touches every row of the
-    * corpus exactly when no query is being answered — pure overhead to
-    * amortize. Mirrored in DuckDB by an unrolled shift/mask sum, so layouts
-    * are oracle-verifiable bit-for-bit.
+  /** Z-order key as a native expression WITH `doGenCode`: the key is
+    * computed for every row it clusters (q80 keys each lineitem row), so it
+    * stays inside whole-stage codegen. Mirrored in DuckDB by an unrolled
+    * shift/mask sum, so the keys are oracle-verifiable bit-for-bit.
     */
   case class InterleaveBits(left: Expression, right: Expression)
       extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
@@ -582,14 +580,8 @@ object HashExpressions {
   def interleaveBits(x: Column, y: Column): Column =
     column(InterleaveBits(expression(x.cast("long")), expression(y.cast("long"))))
 
-  def byteStride(data: Column, n: Int): Column =
-    column(ByteStride(expression(data), n))
-
   def winnowFingerprints(text: Column, k: Int = 5, w: Int = 4): Column =
     column(WinnowFingerprints(expression(text), k, w))
-
-  def minhashSignature(tokens: Column, shingleLen: Int, k: Int): Column =
-    column(MinHashSignature(expression(tokens), shingleLen, k))
 
   def shingleHashes(tokens: Column, shingleLen: Int): Column =
     column(ShingleHashes(expression(tokens), shingleLen))

@@ -57,8 +57,4 @@ object Sketches {
     override def outputEncoder: Encoder[Seq[Long]] =
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]()
   }
-
-  /** Estimated jaccard between two MinHashUnion signatures. */
-  def estJaccard(a: Seq[Long], b: Seq[Long]): Double =
-    a.zip(b).count { case (x, y) => x == y }.toDouble / a.size
 }

@@ -21,9 +21,6 @@ object VectorFunctions {
 
   def norm2(a: Column): Column = sqrt(dot(a, a))
 
-  def cosineSimilarity(a: Column, b: Column): Column =
-    dot(a, b) / (norm2(a) * norm2(b))
-
   /** Cosine from a precomputed-norm pair: join-side kernel. Inside a bucket
     * join the norms are per-VECTOR quantities — computing them once per
     * side before the join (`norm2` on a narrow projection) instead of per
@@ -37,6 +34,4 @@ object VectorFunctions {
     * the HOF form it replaced.
     */
   def l2Squared(a: Column, b: Column): Column = VectorExpressions.l2sqF(a, b)
-
-  def l2Distance(a: Column, b: Column): Column = sqrt(l2Squared(a, b))
 }

@@ -314,11 +314,4 @@ object AudioHash {
                                 BandedHamming.DefaultMaxBucketSize): DataFrame =
     BandedHamming.incrementalPairs(corpusSigs, batchSigs, "media_id", "fhash",
       radius, maxBucketSize)
-
-  /** Band-bucket size histogram — the cap-tuning diagnostic (see
-    * [[BandedHamming.bucketStats]]).
-    */
-  def bandBucketStats(sigs: DataFrame,
-                      maxBucketSize: Long = Long.MaxValue): DataFrame =
-    BandedHamming.bucketStats(sigs, maxBucketSize)
 }

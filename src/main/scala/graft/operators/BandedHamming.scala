@@ -142,20 +142,6 @@ object BandedHamming {
       .select(col("corpus_id"), col("batch_id"), col("hamming"))
   }
 
-  /** Band-bucket size histogram — the cap-tuning diagnostic, mirroring
-    * [[Dedup.lshBucketStats]]: dropped buckets are degenerate
-    * near-identical cliques whose pairs carry no new dedup information
-    * past the first k.
-    */
-  def bucketStats(sigs: DataFrame,
-                  maxBucketSize: Long = Long.MaxValue): DataFrame =
-    sigs.filter(col("decoded"))
-      .select(posexplode(array(col("b0"), col("b1"), col("b2"), col("b3")))
-        .as(Seq("band", "word")))
-      .groupBy(col("band"), col("word")).agg(count(lit(1)).as("bucket_size"))
-      .groupBy(col("bucket_size")).agg(count(lit(1)).as("n_buckets"))
-      .withColumn("dropped_by_cap", col("bucket_size") > maxBucketSize)
-
   /** All ordered pairs (x, y) with x < y from a sorted array. */
   private def pairCombos(sorted: Column) =
     flatten(transform(sorted, (x, i) =>

@@ -21,10 +21,8 @@ import graft.functions.HashExpressions
   *    shingle sets are NEVER shipped through the candidate shuffle; they are
   *    re-attached by id once per unique candidate pair. Bucket-size capping
   *    guards against degenerate-key skew (boilerplate text producing
-  *    million-doc buckets would otherwise make one reducer quadratic);
-  *    [[lshBucketStats]] reports what the cap would drop.
-  *  - SimHash: 64-bit signature per doc, candidates from 16-bit chunk
-  *    banding (hamming ≤ 3 ⇒ some chunk of 4 equal), verify by bit_count.
+  *    million-doc buckets would otherwise make one reducer quadratic).
+  *  - SimHash: 64-bit signature per doc ([[simhashSignatures]]).
   */
 object Dedup {
 
@@ -64,7 +62,7 @@ object Dedup {
     * @param maxBucketSize skew guard: LSH buckets larger than this are
     *                      dropped before pair generation (degenerate
     *                      boilerplate keys). Dropped buckets lose their
-    *                      candidate pairs — monitor with [[lshBucketStats]].
+    *                      candidate pairs.
     */
   def minhashCandidates(df: DataFrame, idCol: String, textCol: String,
                         shingleLen: Int = 5, k: Int = 64, r: Int = 2,
@@ -100,24 +98,6 @@ object Dedup {
       transform(slice(sorted, i + 2, greatest(size(sorted) - i - 1, lit(0))),
         y => struct(x.as("a"), y.as("b")))))
 
-  /** LSH bucket-size histogram for the cap diagnostic: one row per bucket
-    * size with the number of buckets of that size and whether the
-    * `maxBucketSize` cap would drop them.
-    */
-  def lshBucketStats(df: DataFrame, idCol: String, textCol: String,
-                     shingleLen: Int = 5, k: Int = 64, r: Int = 2,
-                     maxBucketSize: Int = 1000): DataFrame = {
-    val toks = df.select(col(idCol).as("id"), tokens(col(textCol)).as("toks"))
-      .filter(size(col("toks")) >= shingleLen)
-    toks.select(col("id"),
-        posexplode(HashExpressions.minhashBands(col("toks"), shingleLen, k, r))
-          .as(Seq("band", "bh")))
-      .groupBy(col("band"), col("bh")).agg(count(lit(1)).as("bucket_size"))
-      .groupBy(col("bucket_size"))
-      .agg(count(lit(1)).as("n_buckets"))
-      .withColumn("dropped_by_cap", col("bucket_size") > maxBucketSize)
-  }
-
   /** Near-duplicate pairs with EXACT shingle jaccard, LSH-accelerated:
     * candidates from [[minhashCandidates]], then shingle sets re-attached by
     * id (two hash joins on the small candidate set) and exact
@@ -147,30 +127,6 @@ object Dedup {
           size(array_union(col("sh_a"), col("sh_b"))), 6))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
-  }
-
-  /** Near-dup pairs with minhash-ESTIMATED jaccard (no exact verify pass):
-    * candidates as above, signatures re-attached by id once per unique pair.
-    * Cheaper than [[nearDupPairs]] when shingle sets are large; the estimate
-    * has stddev ≈ sqrt(j(1-j)/k).
-    */
-  def minhashPairs(df: DataFrame, idCol: String, textCol: String,
-                   k: Int = 64, r: Int = 2, shingleLen: Int = 5,
-                   threshold: Double = 0.5,
-                   maxBucketSize: Int = 1000): DataFrame = {
-    val toksDf = df.select(col(idCol).as("id"), tokens(col(textCol)).as("toks"))
-      .filter(size(col("toks")) >= shingleLen)
-    val sigs = toksDf.select(col("id"),
-      HashExpressions.minhashSignature(col("toks"), shingleLen, k).as("sig"))
-    val cand = minhashCandidates(df, idCol, textCol, shingleLen, k, r, maxBucketSize)
-    cand
-      .join(sigs.select(col("id").as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
-      .join(sigs.select(col("id").as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
-      .withColumn("est_jaccard",
-        size(filter(zip_with(col("sig_a"), col("sig_b"), (x, y) => x === y),
-          m => m)).cast("double") / k)
-      .filter(col("est_jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("est_jaccard"))
   }
 
   /** Near-dup pairs BETWEEN a new batch and an existing corpus — the
@@ -991,45 +947,6 @@ object Dedup {
   def simhashSignatures(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.select(col(idCol).as("id"),
       HashExpressions.simhash64(tokens(col(textCol))).as("simhash"))
-
-  /** SimHash near-dup pairs with hamming ≤ maxHamming, candidates via bit
-    * chunk banding. The signature splits into `maxHamming + 1` chunks, so
-    * by pigeonhole any pair within the radius shares at least one intact
-    * chunk — FULL recall at any radius, with cost rising as chunks narrow
-    * (a w-bit chunk collides on random pairs with probability 2^-w per
-    * chunk; the default radius 3 gives 16-bit chunks). Only (id, chunk,
-    * cv) is shuffled; signatures re-attach by id.
-    */
-  def simhashPairs(df: DataFrame, idCol: String, textCol: String,
-                   maxHamming: Int = 3): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 15,
-      s"maxHamming=$maxHamming out of [0,15]: chunks below 4 bits collide " +
-        "on effectively every pair — use a different sketch for wide radii")
-    val nChunks = maxHamming + 1
-    // Near-equal chunk widths covering all 64 bits (first `rem` chunks get
-    // the extra bit).
-    val baseW = 64 / nChunks
-    val rem = 64 % nChunks
-    val widths = (0 until nChunks).map(i => baseW + (if (i < rem) 1 else 0))
-    val offsets = widths.scanLeft(0)(_ + _)
-    val sigs = simhashSignatures(df, idCol, textCol)
-    val chunkCols = (0 until nChunks).map { i =>
-      val mask = if (widths(i) == 64) -1L else (1L << widths(i)) - 1
-      shiftrightunsigned(col("simhash"), offsets(i)).bitwiseAND(lit(mask))
-    }
-    val chunks = sigs.select(col("id"),
-      posexplode(array(chunkCols: _*)).as(Seq("chunk", "cv")))
-    val a = chunks.select(col("chunk"), col("cv"), col("id").as("id_a"))
-    val b = chunks.select(col("chunk"), col("cv"), col("id").as("id_b"))
-    a.join(b, Seq("chunk", "cv"))
-      .filter(col("id_a") < col("id_b"))
-      .dropDuplicates("id_a", "id_b")
-      .join(sigs.select(col("id").as("id_a"), col("simhash").as("sh_a")), Seq("id_a"))
-      .join(sigs.select(col("id").as("id_b"), col("simhash").as("sh_b")), Seq("id_b"))
-      .withColumn("hamming", bit_count(col("sh_a").bitwiseXOR(col("sh_b"))))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("id_a"), col("id_b"), col("hamming"))
-  }
 
   /** Exact n-gram jaccard similarity for all pairs of a SMALL corpus slice:
     * token-set intersection/union sizes. Quadratic by construction — the

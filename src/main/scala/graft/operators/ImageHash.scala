@@ -153,8 +153,8 @@ object ImageHash {
     *   bucket-local pair generation is quadratic (ScaleSmoke: 285 s /
     *   exponent 1.65 at 20× uncapped vs 1.08 capped). Pass
     *   `Long.MaxValue` explicitly where all-pairs oracle EQUALITY is the
-    *   point (fixture-scale differential tests); size a real cap with
-    *   [[bandBucketStats]] — dropped buckets are degenerate
+    *   point (fixture-scale differential tests); size a real cap from
+    *   the band-bucket size histogram — dropped buckets are degenerate
     *   near-identical-image cliques whose pairs quadratically dominate.
     */
   def nearDupPairs(sigs: DataFrame, radius: Int = ExactRadius,
@@ -172,16 +172,4 @@ object ImageHash {
                                 BandedHamming.DefaultMaxBucketSize): DataFrame =
     BandedHamming.incrementalPairs(corpusSigs, batchSigs, "media_id", "dhash",
       radius, maxBucketSize)
-
-  /** Band-bucket size histogram — the cap-tuning diagnostic, mirroring
-    * [[Dedup.lshBucketStats]]: at corpus scale the 16-bit band value
-    * space saturates (≥ N/65536 images per bucket by pigeonhole), so
-    * pair generation MUST run capped and this histogram is what sizes
-    * the cap (ScaleSmoke 20×, uncapped: 285 s vs 1000-capped: see §6 —
-    * the dropped buckets are degenerate near-identical cliques whose
-    * pairs carry no new dedup information past the first k).
-    */
-  def bandBucketStats(sigs: DataFrame,
-                      maxBucketSize: Long = Long.MaxValue): DataFrame =
-    BandedHamming.bucketStats(sigs, maxBucketSize)
 }

@@ -1,105 +1,21 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.HashExpressions
-
-/** Physical data-layout operators: Z-order clustering and the clustered
-  * parquet sink. At 100 TB the layout of data at rest decides how much of
-  * it queries must read — parquet row-group min/max pruning and partition
-  * pruning only bite when values are clustered, and a single-column sort
-  * clusters exactly one column. Z-ordering (interleave the bits of two key
-  * columns, range-partition + sort by the result) bounds the min/max span
-  * of BOTH columns in every file, so selective predicates on either key
-  * skip most of the corpus.
+/** Physical data-layout operators: the deterministic curated parquet sink,
+  * its read-back, and small-file compaction. Parquet row-group min/max
+  * pruning and partition pruning only bite when values are clustered, so
+  * the sink sorts every file by its key.
   *
   * The reference scopes layout to file sort order preserved through scans
   * (`/root/reference/tests/join.rs:49-62`); the write side here is the
   * complement a training-data pipeline needs to PRODUCE such data.
   *
-  * All pure declarative Spark: the Morton key is a codegen'd Catalyst
-  * expression ([[HashExpressions.InterleaveBits]]), the shuffle is one
-  * `repartitionByRange` (range bounds from Spark's reservoir sample), the
-  * sort is partition-local. Nothing here collects data to the driver.
+  * All pure declarative Spark: one shuffle per write, partition-local
+  * sorts, and nothing collected to the driver.
   */
 object Layout {
-
-  /** Morton key of two non-negative integer columns (low 32 bits each). */
-  def zkey(x: Column, y: Column): Column = HashExpressions.interleaveBits(x, y)
-
-  /** Normalize a column to [0, 65535] given its global [lo, hi]. Raw
-    * interleaving is useless when the key ranges differ in magnitude (the
-    * narrow key's bits all sit below the wide key's, so every range cut
-    * lands on wide-key bits only and the narrow key never clusters —
-    * caught by `LayoutSpec`); equal-width normalization is the same move
-    * Delta's OPTIMIZE ZORDER makes with per-column range ids. Double math:
-    * overflow-safe for any long range, and bucketing needs no exactness.
-    */
-  private def scaled16(c: Column, lo: Long, hi: Long): Column = {
-    val width = math.max(1L, hi - lo).toDouble
-    least(lit(65535L), greatest(lit(0L),
-      ((c.cast("double") - lo.toDouble) / width * 65535.0).cast("long")))
-  }
-
-  private def zkeyScaled(df: DataFrame, xCol: String, yCol: String): Column = {
-    // One tiny stats aggregate to the driver (4 scalars) — the same
-    // driver-sized statistics exchange AQE performs.
-    val r = df.agg(
-      min(col(xCol).cast("long")), max(col(xCol).cast("long")),
-      min(col(yCol).cast("long")), max(col(yCol).cast("long"))).head()
-    // min/max aggregates are NULL on an empty frame or an all-null key
-    // column; fail with an actionable message instead of an opaque NPE
-    // deep inside the write job.
-    require((0 to 3).forall(i => !r.isNullAt(i)),
-      s"zorder key stats unavailable: input is empty or '$xCol'/'$yCol' " +
-        "is entirely NULL — z-ordering needs at least one non-null value " +
-        "in both key columns")
-    zkey(scaled16(col(xCol), r.getLong(0), r.getLong(1)),
-         scaled16(col(yCol), r.getLong(2), r.getLong(3)))
-  }
-
-  /** Cluster a frame on the Z-order curve of (xCol, yCol): one range
-    * shuffle on the Morton key of the range-normalized columns, then a
-    * partition-local sort. Output partitions tile the curve, so each holds
-    * a compact rectangle-ish region of (x, y) space — per-file min/max
-    * spans shrink on BOTH columns (measured in `LayoutSpec`), which is
-    * what turns parquet min/max stats into actual I/O skipping.
-    */
-  def zorderByRange(df: DataFrame, numPartitions: Int,
-                    xCol: String, yCol: String): DataFrame = {
-    require(numPartitions >= 1, s"numPartitions=$numPartitions must be >= 1")
-    df.withColumn("__z", zkeyScaled(df, xCol, yCol))
-      .repartitionByRange(numPartitions, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
-  }
-
-  /** Clustered parquet sink: hive-partition directories on `partitionCols`,
-    * Z-order-cluster rows within each output task on (xCol, yCol), and
-    * bound file size with `maxRecordsPerFile` (the writer rolls files, so a
-    * skewed partition produces more files instead of one huge one). The
-    * shuffle ranges over (partitionCols, z) so each task writes few
-    * partition directories and the curve stays contiguous inside each.
-    */
-  def writeClustered(df: DataFrame, path: String, partitionCols: Seq[String],
-                     xCol: String, yCol: String, numTasks: Int,
-                     maxRecordsPerFile: Long): Unit = {
-    require(numTasks >= 1, s"numTasks=$numTasks must be >= 1")
-    require(maxRecordsPerFile >= 1,
-      s"maxRecordsPerFile=$maxRecordsPerFile must be >= 1")
-    val keyed = df.withColumn("__z", zkeyScaled(df, xCol, yCol))
-    val rangeCols = partitionCols.map(col) :+ col("__z")
-    keyed
-      .repartitionByRange(numTasks, rangeCols: _*)
-      .sortWithinPartitions(rangeCols: _*)
-      .drop("__z")
-      .write
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .partitionBy(partitionCols: _*)
-      .mode("overwrite")
-      .parquet(path)
-  }
 
   /** Root directory for curated-sink outputs whose location the caller
     * doesn't pin: `spark.graft.curatedSinkRoot` if set, else a
@@ -240,24 +156,5 @@ object Layout {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val bytes = fs.getContentSummary(p).getLength
     compact(spark.read.parquet(inPath), outPath, targetFileBytes, bytes)
-  }
-
-  /** Per-partition [min, max] of `c` — the spans parquet would store as
-    * row-group stats under the current physical layout. `spanFraction`
-    * reduces them to one number: mean fraction of the global value range a
-    * partition covers (1.0 = no clustering, ~1/P = perfect).
-    */
-  def partitionSpans(df: DataFrame, c: String): DataFrame =
-    df.select(spark_partition_id().as("pid"), col(c).cast("long").as("v"))
-      .groupBy(col("pid"))
-      .agg(min(col("v")).as("lo"), max(col("v")).as("hi"),
-           count(lit(1)).as("n_rows"))
-
-  def spanFraction(df: DataFrame, c: String): Double = {
-    val spans = partitionSpans(df, c)
-    val g = df.agg(min(col(c).cast("long")), max(col(c).cast("long"))).head()
-    val width = math.max(1L, g.getLong(1) - g.getLong(0))
-    val m = spans.agg(avg(col("hi") - col("lo"))).head().getDouble(0)
-    m / width
   }
 }

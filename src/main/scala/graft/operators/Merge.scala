@@ -35,20 +35,4 @@ object Merge {
         when(col(s"__u_$keyCol").isNotNull, col(s"__u_$c"))
           .otherwise(col(s"__b_$c")).as(c)): _*)
   }
-
-  /** Changelog compaction: collapse an append-only stream of keyed versions
-    * to the latest row per key (`versionCol` max wins; ties broken by the
-    * largest payload struct so the result is deterministic). The standard
-    * read-side of a CDC feed. One shuffle, two-phase max_by aggregation —
-    * no window sort over full history.
-    */
-  def latestByKey(changelog: DataFrame, keyCol: String,
-                  versionCol: String): DataFrame = {
-    val payload = struct(
-      col(versionCol) +: changelog.columns.filter(_ != versionCol).map(col): _*)
-    changelog
-      .groupBy(col(keyCol).as("__k"))
-      .agg(max(payload).as("__p"))
-      .select(changelog.columns.map(c => col(s"__p.$c").as(c)): _*)
-  }
 }

@@ -20,11 +20,10 @@ import org.apache.spark.sql.types._
   *    an animated container, with planted pixels closed-form so the whole
   *    chain is oracle-checked. Containers the JDK has no demuxer for
   *    (MP4/MKV/WebM) remain out of scope in this environment.
-  *  - The remaining deterministic STUBs ([[fakeDecodeFeatures]],
-  *    [[resizeStub]], [[sampleFrames]]) stand in only where no JDK codec
-  *    exists — and [[decodeImageFeatures]] degrades to a `decoded=false`
-  *    row on any payload ImageIO has no reader for, which is the no-codec
-  *    fallback contract.
+  *  - The remaining deterministic STUB ([[sampleFrames]]) stands in only
+  *    where no JDK codec exists — and [[decodeImageFeatures]] degrades to
+  *    a `decoded=false` row on any payload ImageIO has no reader for,
+  *    which is the no-codec fallback contract.
   *
   * The Spark-side shape is what matters at 100 TB either way: binary
   * payloads stay columnar in parquet, flow through narrow per-partition
@@ -244,8 +243,8 @@ object Multimodal {
     * Integer arithmetic throughout, so the result is bit-deterministic and
     * a SQL oracle can recompute the pooled pixels from the planted rule —
     * unlike `java.awt.Image.getScaledInstance`, whose resampling is
-    * implementation-defined. Rows ImageIO cannot decode fall back to
-    * [[resizeStub]]'s byte-stride behavior so mixed-modality frames keep
+    * implementation-defined. Rows ImageIO cannot decode fall back to a
+    * byte stride (every `factor`-th byte) so mixed-modality frames keep
     * flowing; images smaller than one factor×factor block (no complete
     * block to pool) pass through unchanged rather than emitting fabricated
     * pixels.
@@ -268,7 +267,7 @@ object Multimodal {
             catch { case _: Exception => null }
           val meta = r.getStruct(3)
           if (img == null) {
-            // no-codec fallback: byte stride, like resizeStub
+            // no-codec fallback: byte stride
             val strided = Array.range(0, bytes.length, factor).map(bytes(_))
             Row(r.getLong(0), r.getString(1), strided, meta)
           } else if (img.getRaster.getWidth < factor ||
@@ -760,49 +759,6 @@ object Multimodal {
           else decodedRow
         }
       }(enc)
-  }
-
-  /** STUB decode: byte histogram over 4 buckets + byte entropy proxy.
-    * ??? -- replace with a real codec (e.g. javax.imageio / ffmpeg bindings)
-    * when the runtime has them. Deterministic so tests and oracles hold.
-    * Runs per-partition (the `mapInPandas` analog in Scala is a typed
-    * mapPartitions over the binary payloads — one JVM pass, no shuffle).
-    */
-  def fakeDecodeFeatures(media: DataFrame): DataFrame = {
-    val keep = media.schema.fields.map(_.name).filterNot(_ == "data")
-    val outSchema = StructType(
-      media.schema.fields.filterNot(_.name == "data") ++ Seq(
-        StructField("byte_len", IntegerType, nullable = false),
-        StructField("histogram4", ArrayType(LongType), nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    media.mapPartitions { rows =>
-      rows.map { r =>
-        val bytes = Option(r.getAs[Array[Byte]]("data")).getOrElse(Array.emptyByteArray)
-        val hist = new Array[Long](4)
-        var i = 0
-        while (i < bytes.length) {
-          hist((bytes(i) & 0xFF) >> 6) += 1L
-          i += 1
-        }
-        Row.fromSeq(keep.map(n => r.getAs[Any](n)).toSeq ++ Seq(bytes.length, hist.toSeq))
-      }
-    }(enc)
-  }
-
-  /** RESIZE stub: downsample the binary payload by taking every `factor`-th
-    * byte, scaling the metadata dimensions to match. A real implementation
-    * would decode + resample + re-encode (codecs unavailable here — see the
-    * `???` note on [[fakeDecodeFeatures]]); the Spark contract is the
-    * narrow binary-in/binary-out expression with metadata kept consistent.
-    */
-  def resizeStub(media: DataFrame, factor: Int): DataFrame = {
-    media
-      .withColumn("data", graft.functions.HashExpressions.byteStride(col("data"), factor))
-      .withColumn("meta", struct(
-        (col("meta.width") / factor).cast(IntegerType).as("width"),
-        (col("meta.height") / factor).cast(IntegerType).as("height"),
-        col("meta.sample_rate").as("sample_rate"),
-        col("meta.format").as("format")))
   }
 
   /** Deterministic planted animated-GIF generator: one MULTI-FRAME GIF per

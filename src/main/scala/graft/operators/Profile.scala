@@ -70,9 +70,8 @@ object Profile {
     * `keyCol` with their row counts, corpus share, and skew factor
     * (count / mean-count-per-distinct-value). The question every shuffle
     * plan at 100 TB hangs on — "is this key safe to partition by, or does
-    * one value own a reducer?" — answered BEFORE the job runs; feed the
-    * flagged values to [[graft.operators.Skew.saltedJoin]] or AQE's skew
-    * handling.
+    * one value own a reducer?" — answered BEFORE the job runs; AQE's
+    * skew-join split handles the flagged values at run time.
     *
     * Shape: one map-side-combined (key) count — shuffle carries one row
     * per distinct key — then the corpus totals fold in from a single-row

@@ -14,10 +14,10 @@ import graft.functions.HashExpressions
   *    set, one narrow pass over the corpus + a TopK per query
   *    (`Window`+`row_number`, which Spark executes as partial top-k per
   *    partition before the shuffle). Baseline and verifier.
-  *  - [[lshTopK]]: the 100 TB path — random-hyperplane LSH bucket join.
-  *    Corpus is bucketed once (narrow, cacheable); a query only scans its own
-  *    bucket (and optionally multi-probe neighbors), so cost per query is
-  *    corpus/2^nBits instead of corpus.
+  *  - [[axisLshTopK]]: axis-sign LSH bucket join. Corpus is bucketed once
+  *    (narrow, cacheable); a query only scans its own bucket (and optionally
+  *    multi-probe neighbors), so cost per query is corpus/2^nBits instead of
+  *    corpus.
   */
 object Similarity {
 
@@ -50,46 +50,6 @@ object Similarity {
     corpus.select(col(idCol).as("vec_id"), col(vecCol).as("v"),
       HashExpressions.hyperplaneLsh(col(vecCol), nBits, seed).as("bucket"))
 
-  /** ANN top-k via multi-probe LSH bucket equi-join: each query scans its
-    * own bucket plus every bucket within hamming distance `probeHamming` of
-    * it (sign-flip probing — the standard recall lever for hyperplane LSH:
-    * the nearest misses sit in buckets differing by one or two hyperplane
-    * signs). Cost per query ≈ Σ_{i≤probeHamming} C(nBits, i) / 2^nBits of
-    * the corpus; recall < 1 by construction — raise probeHamming or lower
-    * nBits for recall, the reverse for speed.
-    */
-  def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-              nBits: Int = 12, seed: Long = 42L, probeHamming: Int = 1,
-              idCol: String = "vec_id", vecCol: String = "embedding",
-              queryIdCol: String = "query_id"): DataFrame = {
-    require(probeHamming >= 0 && probeHamming <= 2, "probeHamming in [0,2]")
-    val c = bucketed(corpus, nBits, seed, idCol, vecCol)
-    val masks: Seq[Int] = {
-      val h0 = Seq(0)
-      val h1 = if (probeHamming >= 1) (0 until nBits).map(1 << _) else Nil
-      val h2 = if (probeHamming >= 2)
-        (for { i <- 0 until nBits; j <- (i + 1) until nBits }
-          yield (1 << i) | (1 << j))
-      else Nil
-      h0 ++ h1 ++ h2
-    }
-    val q = queries
-      .select(col(queryIdCol).as("query_id"), col(vecCol).as("qv"),
-        norm2(col(vecCol)).as("qnrm"),
-        HashExpressions.hyperplaneLsh(col(vecCol), nBits, seed).as("b0"))
-      .select(col("query_id"), col("qv"), col("qnrm"),
-        explode(array(masks.map(m => col("b0").bitwiseXOR(lit(m))): _*)).as("bucket"))
-    val scored = c.withColumn("nrm", norm2(col("v")))
-      .join(broadcast(q), Seq("bucket"))
-      .withColumn("cos",
-        round(cosineFromNorms(col("v"), col("qv"), col("nrm"), col("qnrm")), 4))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("vec_id"), col("cos"), col("rk"))
-  }
-
   /** Axis-aligned LSH bucket: bit `b` = sign of coordinate `b`. The same
     * family as [[bucketed]] with the hyperplanes fixed to the coordinate
     * axes instead of seeded pseudo-random directions — still locality
@@ -107,10 +67,12 @@ object Similarity {
     corpus.select(col(idCol).as("vec_id"), col(vecCol).as("v"), bucket.as("bucket"))
   }
 
-  /** ANN top-k via multi-probe over axis-aligned LSH buckets — identical
-    * plan shape to [[lshTopK]] (bucket equi-join against broadcast probes,
-    * partial top-k per partition via Window), but with [[axisBucketed]]
-    * buckets so the result is exactly reproducible by a SQL oracle.
+  /** ANN top-k via multi-probe over [[axisBucketed]] buckets: each query
+    * scans its own bucket plus every bucket within hamming distance
+    * `probeHamming` of it (bucket equi-join against broadcast probes,
+    * partial top-k per partition via Window). Cost per query ≈
+    * Σ_{i≤probeHamming} C(nBits, i) / 2^nBits of the corpus, and the result
+    * is exactly reproducible by a SQL oracle.
     */
   def axisLshTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                   nBits: Int, probeHamming: Int = 1,
@@ -163,19 +125,6 @@ object Similarity {
     math.max(1, math.min(16, bits))
   }
 
-  /** Axis-bucket population histogram — the [[axisKnnGraph]] /
-    * [[axisNearPairs]] skew diagnostic, mirroring
-    * [[graft.operators.Dedup.lshBucketStats]]: one row per bucket size with
-    * the bucket count and whether `maxBucketSize` would drop it.
-    */
-  def axisBucketStats(corpus: DataFrame, nBits: Int, maxBucketSize: Int,
-                      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    axisBucketed(corpus, nBits, idCol, vecCol)
-      .groupBy(col("bucket")).agg(count(lit(1)).as("bucket_size"))
-      .groupBy(col("bucket_size"))
-      .agg(count(lit(1)).as("n_buckets"))
-      .withColumn("dropped_by_cap", col("bucket_size") > maxBucketSize)
-
   /** k-nearest-neighbor GRAPH over the whole corpus (semantic-dedup /
     * clustering substrate): for every vector, its top-k most-cosine-similar
     * other vectors, found via a bucket self-join over [[axisBucketed]]
@@ -197,8 +146,8 @@ object Similarity {
     *                      at probes × maxBucketSize per vector instead of
     *                      one reducer owning the degenerate bucket. Vectors
     *                      in dropped buckets still rank candidates reached
-    *                      through their probe buckets. Monitor what the cap
-    *                      drops with [[axisBucketStats]].
+    *                      through their probe buckets. What the cap drops
+    *                      is the [[axisBucketed]] population above it.
     */
   def axisKnnGraph(corpus: DataFrame, k: Int, nBits: Int, probeHamming: Int = 1,
                    maxBucketSize: Int = 4096,
@@ -241,56 +190,6 @@ object Similarity {
     scored.withColumn("rk", row_number().over(w))
       .filter(col("rk") <= k)
       .select(col("id_a").as("vec_id"), col("nbr_id"), col("cos"), col("rk"))
-  }
-
-  /** IVF (inverted-file) ANN: k-means cluster the corpus into `nLists`
-    * cells (the fit runs on the corpus — at 100 TB, fit on a sample; the
-    * model is just `nLists` centroid vectors, broadcast-sized by
-    * construction), assign every vector to its nearest centroid, and probe
-    * the `nProbe` nearest cells per query. Per-query cost ≈
-    * (nProbe/nLists) × corpus. Unlike hyperplane LSH, cell shapes adapt to
-    * the data distribution — better recall on clustered embeddings.
-    */
-  def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-              nLists: Int = 16, nProbe: Int = 4, seed: Long = 42L,
-              idCol: String = "vec_id", vecCol: String = "embedding",
-              queryIdCol: String = "query_id"): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.linalg.Vectors
-    val toVec = org.apache.spark.sql.functions.udf(
-      (a: Seq[Float]) => Vectors.dense(a.map(_.toDouble).toArray))
-    val feat = corpus.select(col(idCol).as("vec_id"), col(vecCol).as("v"))
-      .withColumn("features", toVec(col("v")))
-    val model = new KMeans().setK(nLists).setSeed(seed).setMaxIter(10)
-      .fit(feat.select("features"))
-    val assigned = model.transform(feat)
-      .select(col("vec_id"), col("v"), col("prediction").as("cell"))
-    val centroids = model.clusterCenters
-    // Driver-side probe selection: centroids are tiny; each query row maps
-    // to its nProbe nearest cells, then the probe list explodes into an
-    // equi-join against the assigned corpus.
-    val probeUdf = org.apache.spark.sql.functions.udf { (qv: Seq[Float]) =>
-      val q = qv.map(_.toDouble).toArray
-      centroids.zipWithIndex.map { case (c, i) =>
-        var d = 0.0
-        var j = 0
-        val ca = c.toArray
-        while (j < ca.length) { val t = ca(j) - q(j); d += t * t; j += 1 }
-        (i, d)
-      }.sortBy(_._2).take(nProbe).map(_._1)
-    }
-    val q = queries.select(col(queryIdCol).as("query_id"), col(vecCol).as("qv"),
-        norm2(col(vecCol)).as("qnrm"))
-      .withColumn("cell", explode(probeUdf(col("qv"))))
-    val scored = assigned.withColumn("nrm", norm2(col("v")))
-      .join(broadcast(q), Seq("cell"))
-      .withColumn("cos",
-        round(cosineFromNorms(col("v"), col("qv"), col("nrm"), col("qnrm")), 4))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("vec_id"), col("cos"), col("rk"))
   }
 
   /** Per-label centroids with DECIMAL-exact dimension sums (float summation
@@ -406,8 +305,7 @@ object Similarity {
   }
 
   /** All near-pairs above a cosine threshold via LSH buckets (embedding
-    * near-dup detection). One shuffle on bucket id; same skew guard rationale
-    * as [[Dedup.minhashPairs]].
+    * near-dup detection). One shuffle on bucket id.
     */
   def cosineNearDupPairs(corpus: DataFrame, minCos: Double,
                          nBits: Int = 10, seed: Long = 42L,

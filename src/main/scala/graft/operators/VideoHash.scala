@@ -242,11 +242,4 @@ object VideoHash {
                                 BandedHamming.DefaultMaxBucketSize): DataFrame =
     BandedHamming.incrementalPairs(corpusSigs, batchSigs, "media_id", "vhash",
       radius, maxBucketSize)
-
-  /** Band-bucket size histogram — the cap-tuning diagnostic (see
-    * [[BandedHamming.bucketStats]]).
-    */
-  def bandBucketStats(sigs: DataFrame,
-                      maxBucketSize: Long = Long.MaxValue): DataFrame =
-    BandedHamming.bucketStats(sigs, maxBucketSize)
 }

@@ -102,6 +102,16 @@ object Pipeline {
     */
   private val CopyIdOffset = 1L << 40
 
+  /** `base` media with a re-encoded copy of every 5th item planted next to
+    * it under id + [[CopyIdOffset]]: the near-dup corpus of the image,
+    * audio and video pair and survivor queries (p75/p81, p83/p84, p89/p90,
+    * and p92's settled corpus).
+    */
+  private def withCopies(base: DataFrame)(
+      reencode: DataFrame => DataFrame): DataFrame =
+    base.unionByName(reencode(base.filter(col("media_id") % 5 === 0))
+      .withColumn("media_id", col("media_id") + CopyIdOffset))
+
   /** Second disjoint id space: FRESH batch items (no corpus counterpart)
     * in the incremental-refresh fixtures (p88, p92 batch copies).
     */
@@ -122,18 +132,6 @@ object Pipeline {
     * batch ids (slices + copies).
     */
   private val BatchSeqIdOffset = 1L << 43
-
-  /** TEST-ONLY gate-sensitivity hook (`GRAFT_MUTATE=1`, set ONLY by
-    * `tools/mutation_check.sh`): deliberately miscompiles two queries —
-    * p66's amp_sum cast to double (the dtype-class path) and p72's
-    * n_params_kept off by one (the value/hash path) — so the differential
-    * harness is itself differentially tested: check.py MUST go red on
-    * both. Never set in any driver, bench, or CI path; the default
-    * (unset) compiles the correct queries.
-    */
-  private def mutateGate: Boolean =
-    sys.env.get("GRAFT_MUTATE").contains("1") ||
-      sys.props.get("graft.mutate").contains("1")
 
   // DuckDB twin of TF.normText.
   private val oNorm = "trim(lower(regexp_replace(text, '\\s+', ' ', 'g')))"
@@ -676,9 +674,8 @@ object Pipeline {
         .orderBy(col("corpus_id"), col("batch_id"))
     }),
 
-    // ---- sequential ingest semantics (the batch contract of
-    // streaming/Streams.dedupIngest, which StreamingSpec proves the
-    // foreachBatch stream implements): batch 0 = even doc_ids greedily
+    // ---- sequential ingest semantics (a two-batch corpus build, as a
+    // streaming ingest would run it batch by batch): batch 0 = even doc_ids greedily
     // deduplicated within itself (drop any doc near-dupping a lower even
     // id), batch 1 = odd doc_ids internally deduplicated the same way,
     // then admitted only if they near-dup nothing in batch 0's survivors.
@@ -1059,16 +1056,11 @@ object Pipeline {
     // ((v+65536)%65536 = low 16 bits, then low byte + high byte), so a
     // sign or endianness error anywhere in the plant/encode/decode chain
     // breaks this row. ----
-    "p66_audio16_decode" -> ((s, dir) => {
-      // amp_sum double-cast under GRAFT_MUTATE: the dtype-class mutation
-      // tools/mutation_check.sh asserts the gate catches.
-      val amp =
-        if (mutateGate) col("amp_sum").cast("double") else col("amp_sum")
+    "p66_audio16_decode" -> ((s, dir) =>
       Multimodal.decodeAudioFeatures(Multimodal.plantWavs16(docs(s, dir)))
         .select(col("media_id"), col("sample_rate"), col("channels"),
-          col("n_frames"), amp.as("amp_sum"), col("decoded"))
-        .orderBy(col("media_id"))
-    }),
+          col("n_frames"), col("amp_sum"), col("decoded"))
+        .orderBy(col("media_id"))),
 
     // ---- REAL 16-bit audio resample: the is16 decimation branch — per
     // CHANNEL, output frame j = truncated mean (Java `/`, toward zero;
@@ -1161,17 +1153,9 @@ object Pipeline {
     // trailing-slash/param-order/tracking-param normalization, then the
     // shared-canonical-URL count (the key a crawl dedups on BEFORE paying
     // content hashing). Only (id, canon_url) shuffles for the window. ----
-    "p72_url_canonicalize" -> ((s, dir) => {
-      val base = Urls.withCanonical(Urls.plantUrls(docs(s, dir), "doc_id"),
-        "id", "url")
-      // n_params_kept off by one under GRAFT_MUTATE: the value/hash-path
-      // mutation tools/mutation_check.sh asserts the gate catches.
-      val out =
-        if (mutateGate)
-          base.withColumn("n_params_kept", col("n_params_kept") + 1)
-        else base
-      out.orderBy(col("id"))
-    }),
+    "p72_url_canonicalize" -> ((s, dir) =>
+      Urls.withCanonical(Urls.plantUrls(docs(s, dir), "doc_id"), "id", "url")
+        .orderBy(col("id"))),
 
     // ---- the full web-crawl front-end funnel, composed: canonical-URL
     // keep-first dedup (the cheap pre-fetch key), HTML main-content
@@ -1239,17 +1223,14 @@ object Pipeline {
     // natural phase-twin pairs at sf0.1 — fixture artifact, not
     // operator workload (see plantPngsFp scaladoc). ----
     "p75_image_neardup_pairs" -> ((s, dir) => {
-      val base = Multimodal.plantPngsFp(docs(s, dir))
-      val copies = Multimodal
-        .resizePooled(base.filter(col("media_id") % 5 === 0), 1)
-        .withColumn("media_id", col("media_id") + CopyIdOffset)
+      val media = withCopies(Multimodal.plantPngsFp(docs(s, dir)))(
+        Multimodal.resizePooled(_, 1))
       // maxBucketSize explicit: the all-pairs oracle equality below is the
       // point of this query, so the scale cap (default 1000) must be a
       // no-op here by construction, not by fixture luck.
       // Sharing the signatures measured NEUTRAL here (ConfAb 0.97/1.01
       // over 8 reps): pairs-only shape, 3 reads, no CC consumer — left raw.
-      ImageHash.nearDupPairs(
-          ImageHash.dhashSignatures(base.unionByName(copies)),
+      ImageHash.nearDupPairs(ImageHash.dhashSignatures(media),
           maxBucketSize = Long.MaxValue)
         .orderBy(col("id_a"), col("id_b"))
     }),
@@ -1366,11 +1347,9 @@ object Pipeline {
     // pairs alone start: a re-encoded duplicate CLUSTER keeps exactly
     // one image. Oracle: all-pairs hamming graph + recursive-CTE CC. ----
     "p81_image_dedup_survivors" -> ((s, dir) => {
-      val base = Multimodal.plantPngsFp(docs(s, dir))
-      val copies = Multimodal
-        .resizePooled(base.filter(col("media_id") % 5 === 0), 1)
-        .withColumn("media_id", col("media_id") + CopyIdOffset)
-      val sigs = Shared(ImageHash.dhashSignatures(base.unionByName(copies)))
+      val sigs = Shared(ImageHash.dhashSignatures(
+        withCopies(Multimodal.plantPngsFp(docs(s, dir)))(
+          Multimodal.resizePooled(_, 1))))
       // explicit uncapped: the recursive-CTE CC oracle is the ALL-PAIRS
       // graph's answer, same reasoning as p75.
       Dedup.survivors(sigs,
@@ -1405,14 +1384,11 @@ object Pipeline {
     // nothing. Payloads never shuffle; pair generation moves
     // O(clips x 4) slim rows. ----
     "p83_audio_neardup_pairs" -> ((s, dir) => {
-      val base = Multimodal.plantWavsFp(docs(s, dir))
-      val copies = Multimodal
-        .resampleAudioDecimated(base.filter(col("media_id") % 5 === 0), 1)
-        .withColumn("media_id", col("media_id") + CopyIdOffset)
+      val media = withCopies(Multimodal.plantWavsFp(docs(s, dir)))(
+        Multimodal.resampleAudioDecimated(_, 1))
       // maxBucketSize explicit: all-pairs oracle equality is the point,
       // so the scale cap (default 1000) must be a no-op by construction.
-      AudioHash.nearDupPairs(
-          Shared(AudioHash.fingerprints(base.unionByName(copies))),
+      AudioHash.nearDupPairs(Shared(AudioHash.fingerprints(media)),
           maxBucketSize = Long.MaxValue)
         .orderBy(col("id_a"), col("id_b"))
     }),
@@ -1424,11 +1400,9 @@ object Pipeline {
     // exactly one clip. Oracle: all-pairs hamming graph +
     // recursive-CTE CC. ----
     "p84_audio_dedup_survivors" -> ((s, dir) => {
-      val base = Multimodal.plantWavsFp(docs(s, dir))
-      val copies = Multimodal
-        .resampleAudioDecimated(base.filter(col("media_id") % 5 === 0), 1)
-        .withColumn("media_id", col("media_id") + CopyIdOffset)
-      val sigs = Shared(AudioHash.fingerprints(base.unionByName(copies)))
+      val sigs = Shared(AudioHash.fingerprints(
+        withCopies(Multimodal.plantWavsFp(docs(s, dir)))(
+          Multimodal.resampleAudioDecimated(_, 1))))
       Dedup.survivors(sigs,
         (d, cap) => AudioHash.nearDupPairs(d, maxBucketSize = cap))
     }),
@@ -1559,15 +1533,12 @@ object Pipeline {
     // plantGifsFp (shape-varying pixel rule — the phase-twin lesson
     // applied from day one; see plantGifsFp scaladoc). ----
     "p89_video_neardup_pairs" -> ((s, dir) => {
-      val base = Multimodal.plantGifsFp(docs(s, dir))
-      val copies = Multimodal.resizeVideoPooled(
-          base.filter(col("media_id") % 5 === 0), 1)
-        .withColumn("media_id", col("media_id") + CopyIdOffset)
+      val media = withCopies(Multimodal.plantGifsFp(docs(s, dir)))(
+        Multimodal.resizeVideoPooled(_, 1))
       // maxBucketSize explicit: all-pairs oracle equality is the point.
       // Sharing the signatures measured NEUTRAL here (ConfAb 1.04) —
       // pairs-only shape.
-      VideoHash.nearDupPairs(
-          VideoHash.fingerprints(base.unionByName(copies), everyN = 2),
+      VideoHash.nearDupPairs(VideoHash.fingerprints(media, everyN = 2),
           maxBucketSize = Long.MaxValue)
         .orderBy(col("id_a"), col("id_b"))
     }),
@@ -1579,11 +1550,9 @@ object Pipeline {
     // Oracle: closed-form majority-fold words -> all-pairs hamming
     // graph -> recursive-CTE CC. ----
     "p90_video_dedup_survivors" -> ((s, dir) => {
-      val base = Multimodal.plantGifsFp(docs(s, dir))
-      val copies = Multimodal.resizeVideoPooled(
-          base.filter(col("media_id") % 5 === 0), 1)
-        .withColumn("media_id", col("media_id") + CopyIdOffset)
-      val sigs = Shared(VideoHash.fingerprints(base.unionByName(copies),
+      val sigs = Shared(VideoHash.fingerprints(
+        withCopies(Multimodal.plantGifsFp(docs(s, dir)))(
+          Multimodal.resizeVideoPooled(_, 1)),
         everyN = 2))
       // explicit uncapped: the recursive-CTE CC oracle is the ALL-PAIRS
       // graph's answer, same reasoning as p81/p84.
@@ -2830,16 +2799,14 @@ object Pipeline {
         .orderBy(col("vec_id"))
     }),
 
-    // ---- sequential vector-corpus build (the batch twin of
-    // Streams.vectorIngest, the p40 shape for the semantic family):
+    // ---- sequential vector-corpus build (the p40 shape for the
+    // semantic family):
     // batch 0 (even ids) SemDeDup'd internally becomes the corpus;
     // batch 1 (odd ids + planted exact copies of every 10th even id)
     // is internally deduped then ADMITTED — a batch-1 row dies to any
     // same-cell corpus row within tau or a smaller-id batch-1 row.
     // Output = the admitted corpus with batch provenance; the oracle
-    // replays both dedups and the admission rule. StreamingSpec proves
-    // the foreachBatch loop (idempotent b<id> replay) over the same
-    // operators. ----
+    // replays both dedups and the admission rule. ----
     "p134_sequential_vector_admit" -> ((s, dir) => {
       plantedIdGuard(s, dir)
       val m = kmModel(s, dir)
@@ -3943,10 +3910,7 @@ object Pipeline {
       val root = Layout.sinkDir(s, "p92fixture:" + dir)
       val d = docs(s, dir)
       val base = Multimodal.plantPngsFp(d)
-      val corpusCopies = Multimodal.resizePooled(
-          base.filter(col("media_id") % 5 === 0), 1)
-        .withColumn("media_id", col("media_id") + CopyIdOffset)
-      ImageHash.dhashSignatures(base.unionByName(corpusCopies))
+      ImageHash.dhashSignatures(withCopies(base)(Multimodal.resizePooled(_, 1)))
         .write.mode("overwrite").parquet(root + "/corpus_sigs")
       // settled labels: the p81 chain (uncapped — oracle equality),
       // computed from the landed sigs so the decode runs exactly once.

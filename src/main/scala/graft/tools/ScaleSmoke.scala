@@ -214,7 +214,7 @@ object ScaleSmoke {
     // minhash's default): uncapped, the 16-bit band value space saturates
     // under amplification (100k structured images → thousand-member
     // buckets → quadratic bucket-local pairs; 285 s / exponent 1.65 at
-    // 20×, workload-by-construction). bandBucketStats is the cap monitor.
+    // 20×, workload-by-construction).
     bench2(df => ImageHash.nearDupPairs(
         ImageHash.dhashSignatures(Multimodal.plantPngs(df)),
         maxBucketSize = 1000L)

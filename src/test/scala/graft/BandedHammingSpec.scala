@@ -49,3 +49,20 @@ class BandedHammingSpec extends AnyFunSuite {
       "healthy batch rows must survive a sibling clique's drop")
   }
 }
+
+object BandedHammingSpec {
+  import org.apache.spark.sql.functions._
+
+  /** Band-bucket size histogram of a banded-Hamming signature frame (b0..b3
+    * band words, decoded rows only): one row per bucket size with the
+    * number of buckets of that size and whether the `maxBucketSize` cap of
+    * [[BandedHamming.pairs]] drops them.
+    */
+  def bucketStats(sigs: DataFrame, maxBucketSize: Long): DataFrame =
+    sigs.filter(col("decoded"))
+      .select(posexplode(array(col("b0"), col("b1"), col("b2"), col("b3")))
+        .as(Seq("band", "word")))
+      .groupBy(col("band"), col("word")).agg(count(lit(1)).as("bucket_size"))
+      .groupBy(col("bucket_size")).agg(count(lit(1)).as("n_buckets"))
+      .withColumn("dropped_by_cap", col("bucket_size") > maxBucketSize)
+}

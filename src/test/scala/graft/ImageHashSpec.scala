@@ -169,7 +169,7 @@ class ImageHashSpec extends AnyFunSuite {
   test("bandBucketStats accounts for every (band, word) row; a generous " +
     "cap is a no-op at small corpus size") {
     val sigs = ImageHash.dhashSignatures(Multimodal.plantPngs(ids(60)))
-    val stats = ImageHash.bandBucketStats(sigs, maxBucketSize = 1000).collect()
+    val stats = BandedHammingSpec.bucketStats(sigs, maxBucketSize = 1000).collect()
     val total = stats.map(r =>
       r.getAs[Long]("bucket_size") * r.getAs[Long]("n_buckets")).sum
     assert(total == 60L * 4, s"histogram covers $total of ${60 * 4} rows")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,11 +7,9 @@ import graft.engine.Tables
 import graft.functions.HashExpressions
 import graft.operators.Layout
 
-/** Z-order layout: the Morton key is correct (vs a bit-by-bit reference),
-  * codegen'd, and — the point of the operator — range-partitioning by it
-  * clusters BOTH key columns at once, where a single-column sort clusters
-  * exactly one. Plus the clustered parquet sink round-trips with bounded
-  * files and hive partition dirs.
+/** Layout: the Morton key is correct (vs a bit-by-bit reference) and
+  * codegen'd; the curated sink keeps its file-count and sort contract;
+  * compaction writes the sized number of files.
   */
 class LayoutSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -55,21 +51,6 @@ class LayoutSpec extends AnyFunSuite {
     assert(folded == HashExpressions.mortonJava(3L, 5L))
   }
 
-  test("zorder fails loudly on empty and all-null input") {
-    import spark.implicits._
-    val empty = Seq.empty[(java.lang.Long, java.lang.Long)].toDF("x", "y")
-    val ex1 = intercept[IllegalArgumentException] {
-      Layout.zorderByRange(empty, 4, "x", "y").count()
-    }
-    assert(ex1.getMessage.contains("empty or"), ex1.getMessage)
-    val allNull = Seq[(java.lang.Long, java.lang.Long)](
-      (null, 1L), (null, 2L)).toDF("x", "y")
-    val ex2 = intercept[IllegalArgumentException] {
-      Layout.zorderByRange(allNull, 4, "x", "y").count()
-    }
-    assert(ex2.getMessage.contains("entirely NULL"), ex2.getMessage)
-  }
-
   test("expression stays in whole-stage codegen") {
     val plan = lineitem
       .select(HashExpressions.interleaveBits(col("l_partkey"), col("l_suppkey")))
@@ -77,55 +58,6 @@ class LayoutSpec extends AnyFunSuite {
     // Codegen'd stages print with the "*(n)" prefix in the plan string.
     assert(plan.contains("*(1) Project"), s"z-key pass must codegen:\n$plan")
     assert(!plan.contains("ScalaUDF"), "z-key must be a native expression")
-  }
-
-  test("z-order clusters BOTH columns; single-column sort only one") {
-    val df = lineitem.select(col("l_partkey"), col("l_suppkey"))
-    val parts = 16
-
-    val zed = Layout.zorderByRange(df, parts, "l_partkey", "l_suppkey").cache()
-    val oneCol = df.repartitionByRange(parts, col("l_partkey"))
-      .sortWithinPartitions(col("l_partkey")).cache()
-    try {
-      val zPart = Layout.spanFraction(zed, "l_partkey")
-      val zSupp = Layout.spanFraction(zed, "l_suppkey")
-      val sPart = Layout.spanFraction(oneCol, "l_partkey")
-      val sSupp = Layout.spanFraction(oneCol, "l_suppkey")
-      // Single-col sort: near-perfect on its key, useless on the other.
-      assert(sPart < 0.2, s"partkey sort should cluster partkey, span=$sPart")
-      assert(sSupp > 0.8, s"partkey sort cannot cluster suppkey, span=$sSupp")
-      // Z-order: materially clustered on BOTH keys.
-      assert(zPart < 0.5, s"z-order partkey span $zPart not clustered")
-      assert(zSupp < 0.5, s"z-order suppkey span $zSupp not clustered")
-    } finally { zed.unpersist(); oneCol.unpersist() }
-  }
-
-  test("clustered sink: hive dirs, bounded files, exact round-trip") {
-    val dir = Files.createTempDirectory("graft_layout").toString
-    val src = lineitem
-      .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
-        col("l_returnflag"))
-    Layout.writeClustered(src, dir, Seq("l_returnflag"),
-      "l_partkey", "l_suppkey", numTasks = 8, maxRecordsPerFile = 20000)
-
-    val flags = src.select(col("l_returnflag")).distinct()
-      .collect().map(_.getString(0)).toSet
-    val dirs = new java.io.File(dir).listFiles()
-      .filter(_.isDirectory).map(_.getName).toSet
-    assert(dirs == flags.map(f => s"l_returnflag=$f"),
-      s"hive dirs $dirs != partitions $flags")
-
-    val back = spark.read.parquet(dir)
-    assert(back.count() == src.count())
-    // Exact multiset equality via exceptAll both ways.
-    val reordered = back.select(src.columns.map(col): _*)
-    assert(reordered.exceptAll(src).isEmpty && src.exceptAll(reordered).isEmpty,
-      "round-trip must preserve every row exactly")
-
-    // maxRecordsPerFile honored.
-    val counts = spark.read.parquet(dir)
-      .groupBy(input_file_name()).count().collect().map(_.getLong(1))
-    assert(counts.forall(_ <= 20000), s"file over cap: ${counts.max}")
   }
 
   test("curated sink: exact file-count contract, sorted within files, " +

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Merge
 
-/** MERGE/upsert and changelog compaction semantics on planted frames. */
+/** MERGE/upsert semantics on planted frames. */
 class MergeSpec extends AnyFunSuite {
   import SparkTestSession._
   import spark.implicits._
@@ -36,23 +36,5 @@ class MergeSpec extends AnyFunSuite {
     assert(out.count() == 1500)
     assert(out.filter(col("name") === "upd").count() === 1000)
     assert(out.filter(col("k") < 500 && col("name") =!= "base").count() === 0)
-  }
-
-  test("latestByKey keeps the max-version row per key, deterministic ties") {
-    val log = Seq(
-      (1L, 1L, "v1"), (1L, 3L, "v3"), (1L, 2L, "v2"),
-      (2L, 7L, "only"),
-      (3L, 5L, "aa"), (3L, 5L, "zz") // tie on version: larger payload wins
-    ).toDF("k", "ver", "payload")
-    val out = Merge.latestByKey(log, "k", "ver").orderBy("k")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
-    assert(out.toSeq == Seq((1L, 3L, "v3"), (2L, 7L, "only"), (3L, 5L, "zz")))
-  }
-
-  test("latestByKey is one shuffle, no window sort") {
-    val log = Seq((1L, 1L, "x")).toDF("k", "ver", "payload")
-    val plan = Merge.latestByKey(log, "k", "ver")
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Window"), "compaction must not window-sort history")
   }
 }

@@ -20,30 +20,6 @@ class MultimodalSpec extends AnyFunSuite {
     assert(new String(row.getAs[Array[Byte]]("data"), "UTF-8") == src)
   }
 
-  test("fakeDecodeFeatures: histogram mass equals byte length") {
-    val rows = Multimodal.fakeDecodeFeatures(media)
-      .select("byte_len", "histogram4").collect()
-    assert(rows.nonEmpty)
-    rows.foreach { r =>
-      val total = r.getSeq[Long](1).sum
-      assert(total == r.getInt(0).toLong, "histogram mass != byte_len")
-    }
-  }
-
-  test("resizeStub: payload strided, metadata scaled, no shuffle in plan") {
-    val resized = Multimodal.resizeStub(media, factor = 4)
-    val r = resized.filter(col("media_id") === 0)
-      .select(col("data"), col("meta.width")).head()
-    val orig = media.filter(col("media_id") === 0)
-      .select(col("data")).head().getAs[Array[Byte]](0)
-    val out = r.getAs[Array[Byte]](0)
-    assert(out.length == (orig.length + 3) / 4)
-    out.zipWithIndex.foreach { case (b, i) => assert(b == orig(i * 4)) }
-    assert(r.getInt(1) == 16) // 64 / 4
-    assert(!resized.queryExecution.executedPlan.toString.contains("Exchange"),
-      "resize must stay a narrow transform")
-  }
-
   test("plantPngs -> decodeImageFeatures: real codec round-trip matches the rule") {
     val docs = Tables.load(spark, sf01, "documents").limit(20)
     val decoded = Multimodal.decodeImageFeatures(Multimodal.plantPngs(docs))

@@ -3,59 +3,19 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.Tables
-import graft.operators.Skew
-
+/** Hot-key joins are left to AQE's skew-join split (GraftSession.defaultConf
+  * turns it on): pin that it fires and changes no result.
+  */
 class SkewSpec extends AnyFunSuite {
   import SparkTestSession._
-
-  test("saltedJoin equals the plain join row-for-row on a skewed key") {
-    import spark.implicits._
-    // Skewed fact: 5000 rows on key 1, a handful elsewhere.
-    val fact = (Seq.fill(5000)(1) ++ (2 to 50)).zipWithIndex
-      .map { case (k, i) => (k, i.toLong) }.toDF("k", "payload")
-    val dim = (1 to 50).map(k => (k, s"dim_$k")).toDF("k", "name")
-    val plain = fact.join(dim, Seq("k")).collect().map(_.toString).sorted
-    val salted = Skew.saltedJoin(fact, dim, "k", saltFactor = 8)
-      .collect().map(_.toString).sorted
-    assert(salted.length == plain.length,
-      s"salted=${salted.length} plain=${plain.length}")
-    assert(salted.sameElements(plain))
-  }
-
-  test("the operator's salt spreads a hot key and is content-deterministic") {
-    import spark.implicits._
-    // Exercises Skew.contentSalt — the expression saltedJoin actually uses
-    // (never positional: SPARK-23207). Distinct rows of one hot key must
-    // land on many salts; re-evaluation and row-order permutation must
-    // agree per row.
-    val fact = (1 to 2000).map(i => (1, s"payload_$i")).toDF("k", "v")
-    val salted = fact.withColumn("_salt", Skew.contentSalt(fact, 8))
-    val saltCards = salted.select(countDistinct(col("_salt"))).head().getLong(0)
-    assert(saltCards == 8, s"expected 8 distinct salts, got $saltCards")
-    val a = salted.collect().map(_.toString).sorted
-    val shuffled = fact.orderBy(col("v").desc)
-    val b = shuffled.withColumn("_salt", Skew.contentSalt(shuffled, 8))
-      .collect().map(_.toString).sorted
-    assert(a.sameElements(b),
-      "salt must be a pure function of row content, independent of order")
-  }
-
-  test("keySkewProfile surfaces the hot key share") {
-    import spark.implicits._
-    val fact = (Seq.fill(900)(7) ++ (1 to 100)).map(k => (k, "p")).toDF("k", "v")
-    val top = Skew.keySkewProfile(fact, "k", topN = 1).head()
-    assert(top.getInt(0) == 7)
-    assert(top.getDouble(2) > 0.85, s"share was ${top.getDouble(2)}")
-  }
 
   test("AQE splits a skewed SMJ partition (skew=true) with identical results") {
     import spark.implicits._
     // The engine RELIES on runtime skew-splitting for hot-key joins
-    // (GraftSession.defaultConf turns skewJoin on; Skew.saltedJoin is the
-    // manual lever beyond it) — pin that it actually fires and that the
-    // split join's output matches the unsplit one. Thresholds are runtime
-    // conf, lowered so a ~3 MB hot partition counts as skewed.
+    // (GraftSession.defaultConf turns skewJoin on) — pin that it actually
+    // fires and that the split join's output matches the unsplit one.
+    // Thresholds are runtime conf, lowered so a ~3 MB hot partition counts
+    // as skewed.
     val confs = Seq(
       "spark.sql.autoBroadcastJoinThreshold" -> "-1", // force SMJ
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "65536",

@@ -246,7 +246,7 @@ class VideoHashSpec extends AnyFunSuite {
       .collect().toSet
     assert(uncapped == capped, "cap 1000 must be a no-op at fixture scale")
     assert(VideoHash.nearDupPairs(sigs, maxBucketSize = 1L).count() == 0)
-    val stats = VideoHash.bandBucketStats(sigs, maxBucketSize = 1L).collect()
+    val stats = BandedHammingSpec.bucketStats(sigs, maxBucketSize = 1L).collect()
     assert(stats.nonEmpty)
     assert(stats.filter(_.getAs[Boolean]("dropped_by_cap"))
       .map(_.getAs[Long]("n_buckets")).sum > 0)

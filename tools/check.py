@@ -11,11 +11,17 @@ vs `359.0` (float64) is a driver FAIL even though Python's `==` passes.
 This checker now compares per-column dtype classes first and fails on any
 int-vs-float (or Decimal-vs-float, etc.) pair, with a "missing bigint
 cast?" hint — the class of bug that shipped d21/d48 red in round 9.
+
+pandas reads an integral column that holds a NULL as float64 (NaN for the
+NULL) on both sides, so its dtype alone cannot tell int from double there;
+such a column is classed by its declared type instead (the parquet schema
+on the Spark side, the result type on the DuckDB side).
 """
 import sys, os, json, glob
 import duckdb
 import numbers
 import numpy as np
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pandas as pd
 import math
@@ -73,6 +79,17 @@ def dtype_class(series):
         return type(v).__name__
     return "all-null"
 
+INT_SQL_TYPES = {"TINYINT", "SMALLINT", "INTEGER", "BIGINT", "HUGEINT",
+                 "UTINYINT", "USMALLINT", "UINTEGER", "UBIGINT", "UHUGEINT"}
+
+def duck_int_columns(con, sql):
+    """Names of the integral columns of the oracle's result (bound, not run)."""
+    try:
+        rel = con.sql(sql)
+        return {c for c, t in zip(rel.columns, rel.types) if str(t) in INT_SQL_TYPES}
+    except Exception:
+        return set()
+
 def dtypes_compatible(sc, dc):
     if sc == dc: return True
     if "all-null" in (sc, dc): return True
@@ -93,11 +110,14 @@ def main(sf_dir, out_dir):
         if not files:
             print(f"FAIL {name}: no spark result");  n_fail += 1; continue
         try:
-            spark_df = pq.read_table(res_dir).to_pandas()
+            spark_tbl = pq.read_table(res_dir)
+            spark_df = spark_tbl.to_pandas()
+            spark_ints = {f.name for f in spark_tbl.schema if pa.types.is_integer(f.type)}
         except Exception as e:
             print(f"FAIL {name}: read error {e}"); n_fail += 1; continue
         try:
             duck_df = con.execute(sql).fetchdf()
+            duck_ints = duck_int_columns(con, sql)
         except Exception as e:
             print(f"FAIL {name}: oracle error {e}"); n_fail += 1; continue
         s, d = canon(spark_df), canon(duck_df)
@@ -109,6 +129,8 @@ def main(sf_dir, out_dir):
         type_bad = None
         for col in s.columns:
             sc, dc = dtype_class(s[col]), dtype_class(d[col])
+            if sc == "float" and col in spark_ints: sc = "int"
+            if dc == "float" and col in duck_ints: dc = "int"
             if not dtypes_compatible(sc, dc):
                 hint = ""
                 if {sc, dc} <= {"int", "float", "decimal"}:
