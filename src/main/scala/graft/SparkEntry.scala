@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.engine.Tables
-import graft.queries.{CbPort, DsPort, DsShapes, FunctionQueries, Pipeline, Relational, Relational2, SourceQueries, TemporalQueries, TpchPort}
+import graft.queries.{CbPort, DsPort, DsShapes, FunctionQueries, Pipeline, PipelineOracles, Relational, Relational2, SourceQueries, TemporalQueries, TpchPort}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
@@ -42,6 +42,6 @@ object SparkEntry {
   def oracleSql: Map[String, String] =
     Relational.oracles ++ Relational2.oracles ++ SourceQueries.oracles ++
       FunctionQueries.oracles ++ TemporalQueries.oracles ++
-      DsShapes.oracles ++ Pipeline.oracles ++ TpchPort.oracles ++ CbPort.oracles ++
+      DsShapes.oracles ++ PipelineOracles.oracles ++ TpchPort.oracles ++ CbPort.oracles ++
       DsPort.oracles
 }

@@ -177,10 +177,6 @@ object Tables {
         .getContentSummary(p).getLength
     } catch { case _: Exception => Long.MaxValue }
 
-  /** [[isNarrow]] for fixture table `name`'s scan. */
-  def isNarrowScan(spark: SparkSession, dir: String, name: String): Boolean =
-    isNarrow(spark, tableBytes(spark, dir, name))
-
   /** [[load]] + [[fanOutIfNarrow]] keyed on `keyCol` — the entry point
     * for corpora feeding expensive narrow operators (text shingling,
     * vector math). Separate from [[load]] on purpose: relational queries

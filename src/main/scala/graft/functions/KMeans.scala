@@ -27,8 +27,7 @@ import org.apache.spark.sql.types._
   *    centroids → per-vector squared-L2 distance array (l-ascending,
   *    j-ascending double summation — [[CentroidDists]], the
   *    [[Pq.PqCoarseDists]] kernel generalized to a trained codebook) →
-  *    FIRST-minimum argmin assignment (`array_position(dl,
-  *    array_min(dl)) - 1` ≡ SQL `list_position(l, list_min(l)) - 1`) →
+  *    FIRST-minimum argmin assignment ([[nearest]]) →
   *    per-(cell, dim) decimal-exact means: `round(cast(sum(cast(elem
   *    AS decimal(18,9))) AS double) / count(*), 6)` — the p27
   *    layout-stability pattern: the decimal sum is exact hence
@@ -53,6 +52,12 @@ import org.apache.spark.sql.types._
   * (`TakeOrderedAndProject`), not a single-partition window.
   */
 object KMeans {
+
+  /** The nearest cell of distance list `dl`, 0-based: its FIRST minimum,
+    * so a distance tie goes to the lower cell. SQL twin:
+    * `list_position(dl, list_min(dl)) - 1`.
+    */
+  def nearest(dl: Column): Column = array_position(dl, array_min(dl)) - 1
 
   /** Squared-L2 distances of one vector to every centroid of a flat
     * (k·dim) codebook: l-ascending array, each entry a j-ascending
@@ -199,8 +204,7 @@ object KMeans {
           .select(col(vecCol).as("__v"))
           .select(col("__v"), dl.as("__dl"))
           .select(col("__v"),
-            (array_position(col("__dl"), array_min(col("__dl"))) - 1)
-              .cast("int").as("__cell"),
+            nearest(col("__dl")).cast("int").as("__cell"),
             round(array_min(col("__dl")), 6)
               .cast(DecimalType(38, 6)).as("__md"))
         // One aggregate per iteration: each cell's d = 0 row also carries

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.engine.ConfValue
+
 /** Physical data-layout operators: the deterministic curated parquet sink,
   * its read-back, and small-file compaction. Parquet row-group min/max
   * pruning and partition pruning only bite when values are clustered, so
@@ -22,12 +24,16 @@ object Layout {
     * user-scoped tmpdir. Queries that write as a side effect (p86/p91)
     * resolve through this, making the on-disk side effect explicit and
     * isolable — two concurrent sessions over the same fixture point the
-    * conf at disjoint roots instead of racing on one directory.
+    * conf at disjoint roots instead of racing on one directory. A blank
+    * value is malformed (it would root every sink at `/`) and gives the
+    * default.
     */
   def sinkRoot(spark: org.apache.spark.sql.SparkSession): String =
-    spark.conf.getOption("spark.graft.curatedSinkRoot").getOrElse(
-      System.getProperty("java.io.tmpdir") +
-        s"/graft-curated-${System.getProperty("user.name", "u")}")
+    ConfValue.get(spark, "spark.graft.curatedSinkRoot",
+        System.getProperty("java.io.tmpdir") +
+          s"/graft-curated-${System.getProperty("user.name", "u")}") { raw =>
+      require(raw.trim.nonEmpty, "blank path"); raw
+    }
 
   /** Per-query sink directory under [[sinkRoot]], named by a UUID of
     * `key` (the query tag plus fixture dir, e.g. `"p104:" + dir`): the same

@@ -421,7 +421,7 @@ object ScaleSmoke {
         .toDF("cell", "cv")
       val dl = graft.functions.KMeans.dists(col("embedding"), kmFixed)
       df.select(col("vec_id"), col("embedding"),
-          (array_position(dl, array_min(dl)) - 1).cast("int").as("cell"))
+          graft.functions.KMeans.nearest(dl).cast("int").as("cell"))
         .join(broadcast(cents), Seq("cell"))
         .select(graft.functions.Pq.encodeWith(
           zip_with(col("embedding"), col("cv"),

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.ConfValue
-import graft.operators.Dedup
+import graft.operators.{Dedup, Layout}
 import graft.plans.{BroadcastGuard, PartialReduce}
 
 /** Every `spark.graft.*` key the engine parses takes a valid value, and a
@@ -19,7 +19,9 @@ import graft.plans.{BroadcastGuard, PartialReduce}
   * default with one WARN naming the key and the value. The `keys` table
   * is the list of those keys. Each key is read through the one site that
   * uses it, and a query that reaches that site runs under each value
-  * without throwing.
+  * without throwing. `spark.graft.curatedSinkRoot` takes any path, so
+  * it has no garbage value and is tested beside the table: only a blank
+  * value is malformed.
   */
 class ConfValueSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -95,6 +97,26 @@ class ConfValueSpec extends AnyFunSuite {
           w.contains("\"" + bad + "\""))
         assert(named.size == 1, s"warnings: $warned")
       }
+    }
+  }
+
+  test("spark.graft.curatedSinkRoot: a blank value falls back to the " +
+    "tmpdir default with one WARN naming the key and the value") {
+    val key = "spark.graft.curatedSinkRoot"
+    val default = Layout.sinkRoot(spark)
+    assert(default.nonEmpty)
+    withConf(key, "/tmp/graft-sink-x") {
+      assert(Layout.sinkRoot(spark) == "/tmp/graft-sink-x")
+    }
+    for (blank <- Seq("", "  ")) {
+      val warned = warnings {
+        withConf(key, blank) {
+          assert(Layout.sinkRoot(spark) == default)
+          assert(Layout.sinkDir(spark, "k").startsWith(default + "/"))
+        }
+      }
+      assert(warned.count(w => w.contains(key) &&
+        w.contains("\"" + blank + "\"")) == 1, s"warnings: $warned")
     }
   }
 

@@ -1,65 +1,21 @@
 package graft
 
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.scalatest.funsuite.AnyFunSuite
 
-/** p150's size-derived probe-panel strategy (r19): at fixture scale the
-  * panel rides a single coalesced partition (cheapest correct shape for
-  * a KB panel); at corpus scale it is LANDED to per-invocation parquet
-  * so the planner sees real stats and no partition grows with N. Both
-  * branches must compute identical rows — and each must carry its
-  * declared physical shape.
-  *
-  * The branch is chosen by the real predicate (`Tables.isNarrowScan`), so
-  * the scale branch is reached by shrinking the split size: sf0.01's
-  * documents.parquet (~65 KB) at 8 KB per split estimates 8 splits,
-  * which is not narrow for the test session's 8 cores.
+import graft.engine.Tables
+
+/** The size predicate behind `Tables.loadFanned`: a fixture scan is
+  * NARROW when its estimated split count is under half the session's
+  * parallelism. A table whose size cannot be read must take the scale
+  * branch (no fan-out), never pass for one small split.
   */
-class PanelStrategySpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
+class PanelStrategySpec extends AnyFunSuite {
   import SparkTestSession._
-
-  private val maxSplit = "spark.sql.files.maxPartitionBytes"
-
-  private def run(splitBytes: Option[String]) = {
-    val prior = spark.conf.get(maxSplit)
-    splitBytes.foreach(spark.conf.set(maxSplit, _))
-    try {
-      val df = SparkEntry.queries("p150_hard_negatives")(spark, sf01)
-      (df.queryExecution.executedPlan,
-        df.collect().map(_.toString).sorted.toSeq)
-    } finally spark.conf.set(maxSplit, prior)
-  }
-
-  /** A parquet scan of the landed `.../panel` sink directory. */
-  private def landedPanelScan(plan: SparkPlan): Boolean =
-    find(plan) {
-      case s: FileSourceScanExec =>
-        s.relation.location.rootPaths.exists(_.getName == "panel")
-      case _ => false
-    }.isDefined
-
-  test("fixture branch (narrow scan): coalesced panel, no landed scan; " +
-    "scale branch (8 KB splits): panel read from parquet with real " +
-    "stats; identical results") {
-    val (fixturePlan, fixtureRows) = run(None)
-    assert(fixturePlan.toString.contains("Coalesce 1"),
-      s"fixture branch must coalesce the panel:\n$fixturePlan")
-    assert(!landedPanelScan(fixturePlan),
-      s"fixture branch must not land the panel:\n$fixturePlan")
-    val (scalePlan, scaleRows) = run(Some("8k"))
-    assert(landedPanelScan(scalePlan),
-      s"scale branch must read the landed panel:\n$scalePlan")
-    assert(!scalePlan.toString.contains("Coalesce 1"),
-      s"scale branch must not carry a single-partition panel:\n$scalePlan")
-    assert(fixtureRows == scaleRows,
-      "panel strategy changed the query's rows")
-  }
 
   test("size predicate: a stat failure takes the scale branch") {
     // tableBytes reports an unreadable table as Long.MaxValue; the split
     // estimate must not overflow into "one split, narrow".
-    assert(!graft.engine.Tables.isNarrowScan(spark, sf01, "no_such_table"))
-    assert(graft.engine.Tables.isNarrowScan(spark, sf01, "documents"))
+    assert(!Tables.isNarrow(spark, Tables.tableBytes(spark, sf01, "no_such_table")))
+    assert(Tables.isNarrow(spark, Tables.tableBytes(spark, sf01, "documents")))
   }
 }
