@@ -26,11 +26,10 @@ object GraftSession {
     *  - `spark.graft.partialReduce` (default false, like the reference's
     *    `partial_reduce`): extra merge aggregation below the exchange —
     *    see [[graft.plans.PartialReduce]], A/B-measured by q34 vs q34b.
-    *  - `spark.graft.cc.localEdgeThreshold` (default 2^20): edge count at
-    *    or below which connected components finish with a bounded driver
-    *    union-find + broadcast label join instead of more shuffle rounds;
-    *    0 forces the fully-distributed paths — see
-    *    [[graft.operators.Dedup.connectedComponents]].
+    *
+    * Connected components take no key: star contraction behind the driver
+    * finisher, whose edge bound is the `localEdges` parameter of
+    * [[graft.operators.Dedup.connectedComponents]].
     */
   def defaultConf: Map[String, String] = Map(
     "spark.sql.shuffle.partitions" -> "32",

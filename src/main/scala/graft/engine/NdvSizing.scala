@@ -152,7 +152,7 @@ object NdvSizing {
     */
   def sizedEquiJoin(left: DataFrame, right: DataFrame, keys: Seq[String],
                     maxPartitions: Int = 4096,
-                    broadcastBytes: Long = 32L * 1024 * 1024,
+                    broadcastBytes: Long = DefaultBroadcastBytes,
                     keysPerPartition: Long = targetKeysPerPartition): (DataFrame, JoinSizingDecision) = {
     val (ls, rs) = (keyStats(left, keys), keyStats(right, keys))
     if (estimatedBytes(right, rs.rows) <= broadcastBytes) {

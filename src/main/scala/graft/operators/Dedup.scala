@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.graft.Shared
 
-import graft.engine.ConfValue
 import graft.functions.TextFunctions._
 import graft.functions.HashExpressions
 
@@ -337,20 +336,14 @@ object Dedup {
 
   /** Duplicate clusters = connected components over the near-dup pair
     * graph: every doc labeled with the min id reachable through near-dup
-    * edges (singletons label themselves). Iterative min-label propagation —
-    * each round is one join + aggregate, rounds ≤ graph diameter (near-dup
-    * components are shallow: exact-dup stars have diameter 2). The loop is
-    * driver-coordinated but all data work is distributed joins; at 100 TB
-    * this is the standard big-data CC pattern (large-star/small-star is the
-    * same idea with better skew behavior).
+    * edges (singletons label themselves). [[connectedComponents]] labels
+    * them: star contraction behind the driver finisher.
     */
   def dupClusters(df: DataFrame, idCol: String, textCol: String,
                   shingleLen: Int = 5, threshold: Double = 0.5,
-                  k: Int = 64, r: Int = 2,
-                  maxIters: Int = 20): DataFrame =
+                  k: Int = 64, r: Int = 2): DataFrame =
     connectedComponents(df.select(col(idCol).as("id")),
-      nearDupPairs(df, idCol, textCol, shingleLen, threshold, k, r),
-      maxIters)
+      nearDupPairs(df, idCol, textCol, shingleLen, threshold, k, r))
       .select(col("id").as(idCol), col("cluster_id"))
 
   /** Corpus snapshot diff: per-id status between two snapshots of a
@@ -451,25 +444,22 @@ object Dedup {
     Sampling.assignSplits(withClusters, "cluster_id", splits)
   }
 
-  /** Edge-count threshold below which connected components finish on the
-    * driver (union-find + broadcast label join) instead of running more
-    * distributed rounds. Default 2^20 edges ≈ 16 MB collected — safe for
-    * any real driver; set `spark.graft.cc.localEdgeThreshold` to 0 to force
-    * the fully-distributed path. The collect is BOUNDED by this conf: at
-    * 100 TB a billion-edge dup graph takes the distributed path (and star
-    * contraction monotonically shrinks the edge set, so later rounds still
-    * cut over to the local finisher once contracted below the threshold) —
-    * this is the standard hybrid production CC implementations use, because
-    * once the edge set fits in one process, O(E α(E)) union-find beats any
-    * number of additional shuffle rounds.
+  /** Edge count up to which connected components finish on the driver
+    * (union-find + broadcast label join) instead of running more
+    * distributed rounds: 2^20 edges ≈ 16 MB collected, safe for any real
+    * driver. The collect is BOUNDED by it: at 100 TB a billion-edge dup
+    * graph takes the distributed path, and star contraction monotonically
+    * shrinks the edge set, so later rounds still cut over to the finisher
+    * once contracted below it. This is the standard hybrid production CC
+    * implementations use: once the edge set fits in one process, O(E α(E))
+    * union-find beats any number of additional shuffle rounds.
     */
-  private[graft] def localEdgeThreshold(df: DataFrame): Long =
-    ConfValue.get(df.sparkSession, "spark.graft.cc.localEdgeThreshold",
-      1L << 20) { raw =>
-      val edges = raw.toLong
-      require(edges >= 0, "a negative edge count")
-      edges
-    }
+  val LocalEdges: Long = 1L << 20
+
+  /** Round cap of the star loop; a graph that has not contracted to stars
+    * by then fails loudly rather than returning split components.
+    */
+  private val maxRounds = 50
 
   /** Both endpoints (and the node ids) must be integral for the driver
     * finisher's LongMap union-find; non-integral ids just stay on the
@@ -566,91 +556,39 @@ object Dedup {
     * [[graft.operators.Similarity]]-based semantic clustering. Returns
     * (`id`, `cluster_id`).
     *
-    * Strategy: below [[localEdgeThreshold]] edges, the driver finisher;
-    * otherwise min-label propagation (one join+agg per round — optimal for
-    * the shallow components near-dup graphs produce) for up to `maxIters`
-    * rounds; a graph whose diameter exceeds that switches to
-    * [[connectedComponentsStar]], which contracts long paths in O(log²)
-    * rounds instead of O(diameter) — the 100 TB-safe fallback for
-    * adversarial chain-shaped components.
-    *
-    * The loop runs over EDGE-TOUCHED nodes only: in a deduplicated corpus
-    * nearly every document is a singleton whose label can never change, so
-    * iterating over `ids` would shuffle the whole corpus once per round.
-    * Touched nodes are O(edges); singletons label themselves in one final
-    * left join.
+    * Strategy: star contraction behind the driver finisher. With integral
+    * ids and at most `localEdges` pairs (default [[LocalEdges]]), the
+    * driver finisher labels everything after one count. Otherwise
+    * alternating large-star/small-star contraction (Kiveris et al.,
+    * "Connected Components in MapReduce and Beyond", SoCC'14 — public
+    * algorithm): each round re-points high neighbors (large-star) then low
+    * neighbors (small-star) of every node at the minimum of its closed
+    * neighborhood. The edge set monotonically converges to a forest of
+    * stars centered at each component's minimum in O(log²) rounds rather
+    * than O(diameter), so chain-shaped components converge too; a round
+    * whose edge set has contracted to `localEdges` or fewer hands over to
+    * the finisher. `localEdges = 0` keeps every round distributed.
     */
   def connectedComponents(ids: DataFrame, pairList: DataFrame,
-                          maxIters: Int = 20): DataFrame = {
+                          localEdges: Long = LocalEdges): DataFrame = {
+    val threshold = if (integralIds(ids, pairList)) localEdges else 0L
+    if (threshold <= 0) return starComponents(ids, pairList, threshold)
     val pairs = Shared(pairList.select(col("id_a"), col("id_b")))
-    val threshold = localEdgeThreshold(ids)
-    if (threshold > 0 && integralIds(ids, pairList) && pairs.count() <= threshold) {
-      val out = finishComponentsLocally(ids, pairs)
-      Shared.release(pairs)
-      return out
-    }
-    // Symmetric edge list: propagate labels both directions.
-    val edges = Shared(
-      pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-        .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))))
-    // Every round is shared: each round's plan references the prior
-    // round's labels twice, so an unshared plan doubles per round — at
-    // diameters near maxIters the logical plan alone OOMs the driver in
-    // explainString. The `changed` count that immediately follows every
-    // round materializes it, so sharing costs no extra job.
-    var labels = Shared(edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id")))
-    // Round N is dead once round N+1 materializes; released eagerly so
-    // storage never holds more than two rounds.
-    var prevCp: DataFrame = labels
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIters) {
-      val neighborMin = edges.join(labels, edges("dst") === labels("id"))
-        .groupBy(col("src")).agg(min(col("label")).as("nmin"))
-      // Carry the previous label through so convergence is read off the
-      // same materialized pass — one join per round, not two.
-      val next = Shared(
-        labels.join(neighborMin, labels("id") === neighborMin("src"), "left_outer")
-          .select(col("id"), col("label").as("_old"),
-            least(col("label"), coalesce(col("nmin"), col("label"))).as("label")))
-      val changed = next.filter(col("label") =!= col("_old")).count()
-      Shared.release(prevCp)
-      prevCp = next
-      labels = next.select(col("id"), col("label"))
-      converged = changed == 0
-      iter += 1
-    }
-    Shared.release(edges)
+    val out =
+      if (pairs.count() <= threshold) finishComponentsLocally(ids, pairs)
+      else starComponents(ids, pairs, threshold)
+    // The finisher collected the pairs eagerly, and the star loop's first
+    // signature stored its own normalized copy of them.
     Shared.release(pairs)
-    // A diameter beyond maxIters would silently split one true component
-    // into several — wrong answers, undetectably — if we returned here.
-    // Instead switch algorithms: star contraction's round count grows with
-    // log² of the component size, not its diameter, so chain-shaped
-    // components (the propagation worst case) still converge.
-    if (!converged) {
-      Shared.release(prevCp)
-      return connectedComponentsStar(ids, pairList)
-    }
-    // Singletons (never touched by an edge) label themselves.
-    ids.select(col("id"))
-      .join(labels.select(col("id").as("__tid"), col("label")),
-        col("id") === col("__tid"), "left_outer")
-      .select(col("id"), coalesce(col("label"), col("id")).as("cluster_id"))
+    out
   }
 
-  /** Connected components by alternating large-star/small-star contraction
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC'14 — public algorithm): each round re-points high neighbors
-    * (large-star) then low neighbors (small-star) of every node at the
-    * minimum of its closed neighborhood. The edge set monotonically
-    * converges to a forest of stars centered at each component's minimum —
-    * in O(log²) rounds rather than O(diameter), which is why this is the
-    * scale path behind [[connectedComponents]] for long-chain graphs.
-    * Same contract: (`id`, `cluster_id`), singletons label themselves.
+  /** The star-contraction loop of [[connectedComponents]], cutting over to
+    * the driver finisher once a round's edge set is at most `threshold`
+    * edges (0 = never).
     */
-  def connectedComponentsStar(ids: DataFrame, pairList: DataFrame,
-                              maxRounds: Int = 50): DataFrame = {
+  private def starComponents(ids: DataFrame, pairList: DataFrame,
+                             threshold: Long): DataFrame = {
     // Normalized undirected edge set: (u, v) with u < v, no self-loops.
     def normalize(df: DataFrame): DataFrame =
       df.select(least(col("u"), col("v")).as("u"),
@@ -719,7 +657,6 @@ object Dedup {
     // either an m-target or the larger endpoint of a surviving edge —
     // the same invariant the final labeling pass depends on); the
     // randomized parity tests exercise both cutover points.
-    val threshold = if (integralIds(ids, pairList)) localEdgeThreshold(ids) else 0L
     var converged = false
     var round = 0
     while (!converged && round < maxRounds && sig._1 > 0) {
@@ -739,7 +676,7 @@ object Dedup {
     }
     if (!converged && sig._1 > 0)
       throw new IllegalStateException(
-        s"connectedComponentsStar did not converge in $maxRounds rounds")
+        s"connectedComponents did not converge in $maxRounds rounds")
     // Stars guarantee every node's neighborhood min IS the component min:
     // one final propagation pass reads the labels off.
     val nbrMin = sym(edges).groupBy(col("src")).agg(min(col("dst")).as("__nm"))

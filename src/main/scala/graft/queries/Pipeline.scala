@@ -448,7 +448,7 @@ object Pipeline {
     }),
 
     // ---- duplicate clusters: connected components over the near-dup
-    // graph (iterative distributed min-label propagation); the oracle
+    // graph (star contraction behind the driver finisher); the oracle
     // recomputes components from the exact pair list with a recursive
     // CTE. ----
     "p18_dup_clusters" -> ((s, dir) => {
@@ -601,10 +601,11 @@ object Pipeline {
     }),
 
     // ---- semantic dedup clusters: connected components over the
-    // embedding near-dup graph (axis-sign LSH pairs -> generic min-label
-    // propagation). The approximate pair graph is SQL-recomputable, so the
-    // oracle re-derives buckets, probes, cosines AND the components
-    // (recursive CTE) — the whole embedding-dedup path verified end-to-end ----
+    // embedding near-dup graph (axis-sign LSH pairs -> generic connected
+    // components: star contraction behind the driver finisher). The
+    // approximate pair graph is SQL-recomputable, so the oracle re-derives
+    // buckets, probes, cosines AND the components (recursive CTE) — the
+    // whole embedding-dedup path verified end-to-end ----
     "p32_semantic_clusters" -> ((s, dir) => {
       val e = emb(s, dir)
       val nBits = Similarity.deriveNBits(Queries.embCount(s, dir), Queries.KNN_TARGET_BUCKET)
@@ -674,21 +675,18 @@ object Pipeline {
     }),
 
     // ---- star-contraction connected components on a planted 200-node
-    // chain (successor-id edges): diameter 199 ≫ any propagation budget, so
-    // this exercises the O(log²)-round large-star/small-star path — the
-    // scale fallback — under full differential verification (the oracle
-    // re-derives components by recursive reachability, like p32). The
-    // hybrid driver-finisher is disabled (threshold 0, scoped to a child
-    // session) so the distributed rounds themselves stay oracle-gated;
-    // production callers get the hybrid by default. ----
-    "p38_star_components" -> ((s0, dir) => {
-      val s = s0.newSession()
-      s.conf.set("spark.graft.cc.localEdgeThreshold", "0")
+    // chain (successor-id edges): diameter 199, so this exercises the
+    // O(log²)-round large-star/small-star path under full differential
+    // verification (the oracle re-derives components by recursive
+    // reachability, like p32). The driver finisher is off (localEdges = 0)
+    // so the distributed rounds themselves stay oracle-gated; every other
+    // caller gets star contraction behind the driver finisher. ----
+    "p38_star_components" -> ((s, dir) => {
       val n = docs(s, dir).select(col("doc_id").as("id"))
         .filter(col("id") < 200)
       val pairs = n.select(col("id").as("id_a"))
         .join(n.select(col("id").as("id_b")), col("id_b") === col("id_a") + 1)
-      Dedup.connectedComponentsStar(n, pairs)
+      Dedup.connectedComponents(n, pairs, localEdges = 0)
         .orderBy(col("id"))
     }),
 

@@ -2,6 +2,7 @@ package graft.queries
 
 import Pipeline.{BpeBudget, CopyIdOffset, Fresh2IdOffset, FreshIdOffset, KmIters,
   SampledTrainFraction}
+import Pipeline.Queries.{KNN_MAX_BUCKET, KNN_TARGET_BUCKET}
 
 /** DuckDB twins of the [[Pipeline]] queries: for each query, SQL over
   * the same parquet tables that must give the same rows. `Verify` writes
@@ -1758,10 +1759,10 @@ object PipelineOracles {
     // per-vector top-5 — byte-identical to Spark's approximate graph at
     // ANY scale factor.
     "p30_knn_graph" ->
-      """WITH params AS (
+      s"""WITH params AS (
           SELECT CASE WHEN q <= 1 THEN 1
                       ELSE least(16, length(printf('%b', q - 1))) END AS nb
-          FROM (SELECT (count(*) + 31) // 32 AS q FROM embeddings)),
+          FROM (SELECT (count(*) + ${KNN_TARGET_BUCKET - 1}) // $KNN_TARGET_BUCKET AS q FROM embeddings)),
         fb AS (
           SELECT vec_id, embedding,
                  (CASE WHEN embedding[1] > 0 THEN 1 ELSE 0 END
@@ -1785,7 +1786,7 @@ object PipelineOracles {
                      full_bucket & ((1 << nb) - 1) AS bucket
               FROM fb, params),
         sizes AS (SELECT bucket, count(*) AS bsz FROM c GROUP BY bucket),
-        ok AS (SELECT bucket FROM sizes WHERE bsz <= 4096),
+        ok AS (SELECT bucket FROM sizes WHERE bsz <= $KNN_MAX_BUCKET),
         masks AS (SELECT unnest(list_prepend(0,
                     list_transform(range(nb), b -> 1 << b))) AS m FROM params),
         probes AS (SELECT vec_id AS id_a, embedding AS va, xor(bucket, m) AS bucket
@@ -1817,12 +1818,12 @@ object PipelineOracles {
 
     // Recompute the axis-sign buckets, probes, cosines, and then the
     // connected components (recursive reachability) — the full semantic
-    // dedup path, including the iterative distributed CC, verified exactly.
+    // dedup path, connected components included, verified exactly.
     "p32_semantic_clusters" ->
-      """WITH RECURSIVE params AS (
+      s"""WITH RECURSIVE params AS (
           SELECT CASE WHEN q <= 1 THEN 1
                       ELSE least(16, length(printf('%b', q - 1))) END AS nb
-          FROM (SELECT (count(*) + 31) // 32 AS q FROM embeddings)),
+          FROM (SELECT (count(*) + ${KNN_TARGET_BUCKET - 1}) // $KNN_TARGET_BUCKET AS q FROM embeddings)),
         fb AS (
           SELECT vec_id, embedding,
                  (CASE WHEN embedding[1] > 0 THEN 1 ELSE 0 END
@@ -1846,7 +1847,7 @@ object PipelineOracles {
                      full_bucket & ((1 << nb) - 1) AS bucket
               FROM fb, params),
         sizes AS (SELECT bucket, count(*) AS bsz FROM c GROUP BY bucket),
-        ok AS (SELECT bucket FROM sizes WHERE bsz <= 4096),
+        ok AS (SELECT bucket FROM sizes WHERE bsz <= $KNN_MAX_BUCKET),
         masks AS (SELECT unnest(list_prepend(0,
                     list_transform(range(nb), b -> 1 << b))) AS m FROM params),
         probes AS (SELECT vec_id AS id_a, embedding AS va, xor(bucket, m) AS bucket

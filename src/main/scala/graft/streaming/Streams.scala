@@ -314,11 +314,6 @@ object Streams {
       finally spark.conf.set(key, prev)
     }
     try { q.processAllAvailable() } finally {
-      if (sys.env.contains("GRAFT_STREAM_DEBUG"))
-        q.recentProgress.foreach(p => System.err.println(
-          s"[stream] batch=${p.batchId} rows=${p.numInputRows} " +
-            s"ms=${p.durationMs} state=${p.stateOperators.map(s =>
-              s"rows=${s.numRowsTotal}").mkString(",")}"))
       q.stop()
       // Best-effort scratch cleanup — checkpoints are per-run throwaways.
       try {

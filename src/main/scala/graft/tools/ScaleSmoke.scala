@@ -18,8 +18,8 @@ import graft.operators.{AudioHash, Dedup, Html, ImageHash, Mp4Meta, Multimodal, 
   *  - `axisKnnGraph`: near-linear because nBits derives from the corpus
   *    count (at FIXED nBits it would be quadratic — the r05 verdict's
   *    exact concern);
-  *  - `connectedComponents`: rounds bounded by component diameter, work by
-  *    edge count.
+  *  - `connectedComponents`: star rounds grow as log² of component size,
+  *    work by edge count.
   *
   * `runMain graft.tools.ScaleSmoke [factor] [sfDir]` — prints per-operator
   * wall times at 1× and factor×, with the observed scaling exponent

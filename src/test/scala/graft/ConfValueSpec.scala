@@ -11,13 +11,14 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.ConfValue
-import graft.operators.{Dedup, Layout}
+import graft.operators.Layout
 import graft.plans.{BroadcastGuard, PartialReduce}
 
 /** Every `spark.graft.*` key the engine parses takes a valid value, and a
   * malformed one (empty, garbage or out of range) falls back to the
   * default with one WARN naming the key and the value. The `keys` table
-  * is the list of those keys. Each key is read through the one site that
+  * is the list of those keys: a `spark.graft.*` literal in a main source
+  * that is neither a row nor a named exception fails the spec. Each key is read through the one site that
   * uses it, and a query that reaches that site runs under each value
   * without throwing. `spark.graft.curatedSinkRoot` takes any path, so
   * it has no garbage value and is tested beside the table: only a blank
@@ -39,13 +40,6 @@ class ConfValueSpec extends AnyFunSuite {
     Key("spark.graft.partialReduce", "true", true, false, None,
       s => PartialReduce(s).enabled,
       s => s.range(0, 100, 1, 4).groupBy(col("id") % 3).count().collect()),
-    Key("spark.graft.cc.localEdgeThreshold", "0", 0L, 1L << 20, Some("-1"),
-      s => Dedup.localEdgeThreshold(s.range(1).toDF()),
-      s => {
-        import s.implicits._
-        Dedup.connectedComponents(Seq(1L, 2L, 3L).toDF("id"),
-          Seq((1L, 2L)).toDF("id_a", "id_b")).collect()
-      }),
     Key(BroadcastGuard(spark).MaxBytesKey, "1024", BigInt(1024),
       BigInt(256L * 1024 * 1024), Some("-1"),
       s => BroadcastGuard(s).maxBytes,
@@ -118,6 +112,24 @@ class ConfValueSpec extends AnyFunSuite {
       assert(warned.count(w => w.contains(key) &&
         w.contains("\"" + blank + "\"")) == 1, s"warnings: $warned")
     }
+  }
+
+  test("every spark.graft.* key literal under src/main is a row of the " +
+    "keys table or a named exception") {
+    // curatedSinkRoot is tested beside the table; CatalogState's two keys
+    // are markers the engine writes for itself, not settings a user parses.
+    val exceptions = Set("spark.graft.curatedSinkRoot",
+      "spark.graft.catalog.bound", "spark.graft.catalog.fixture")
+    val literal = "\"(spark\\.graft\\.[^\"]*)\"".r
+    val found = MainSources.scalaFiles("src/main/scala").flatMap { case (p, text) =>
+      literal.findAllMatchIn(MainSources.code(text, keepStrings = true))
+        .map(m => m.group(1) -> p)
+    }
+    assert(found.nonEmpty, "no spark.graft.* literal found under src/main/scala")
+    val listed = keys.map(_.key).toSet ++ exceptions
+    val unlisted = found.filterNot { case (k, _) => listed(k) }
+    assert(unlisted.isEmpty, "keys neither in the table nor a named exception: " +
+      unlisted.map { case (k, p) => s"$k ($p)" }.mkString(", "))
   }
 
   test("SPARK_GRAFT_CONF-style overrides skip an entry without '='") {

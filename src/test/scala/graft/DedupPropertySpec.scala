@@ -191,23 +191,22 @@ class DedupPropertySpec extends AnyFunSuite {
   test("star contraction: planted 50-node chain converges where plain " +
     "propagation would hit the iteration cap; mixed components + singletons") {
     import spark.implicits._
-    // Path graph 0-1-2-...-49 (diameter 49 ≫ maxIters), a separate
-    // triangle {100,101,102}, and singleton 200.
+    // Path graph 0-1-2-...-49 (diameter 49), a separate triangle
+    // {100,101,102}, and singleton 200.
     val chain = (0L until 49L).map(i => (i, i + 1))
     val tri = Seq((100L, 101L), (101L, 102L), (100L, 102L))
     val pairs = (chain ++ tri).toDF("id_a", "id_b")
     val ids = ((0L to 49L) ++ Seq(100L, 101L, 102L, 200L)).toDF("id")
-    // Direct star-contraction path.
-    val star = Dedup.connectedComponentsStar(ids, pairs)
+    // Every round distributed: the star rounds alone must contract the chain.
+    val star = Dedup.connectedComponents(ids, pairs, localEdges = 0)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     (0L to 49L).foreach(i => assert(star(i) == 0L, s"chain node $i -> ${star(i)}"))
     Seq(100L, 101L, 102L).foreach(i => assert(star(i) == 100L))
     assert(star(200L) == 200L, "singleton must label itself")
-    // Behind connectedComponents: maxIters=3 cannot propagate across the
-    // 49-hop chain — the fallback must kick in and still give min labels.
-    val auto = Dedup.connectedComponents(ids, pairs, maxIters = 3)
+    // At the default the driver finisher labels the same graph.
+    val auto = Dedup.connectedComponents(ids, pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(auto == star, "fallback path must equal the direct star result")
+    assert(auto == star, "the driver finisher must equal the distributed star rounds")
   }
 
   test("incremental near-dedup: batch dups of corpus docs are found and " +
@@ -258,48 +257,42 @@ class DedupPropertySpec extends AnyFunSuite {
   }
 
   /** Parity across all three execution modes of the CC engine:
-    * threshold 0 = pure distributed star rounds, huge threshold = immediate
-    * driver union-find, mid threshold on a dense graph = distributed rounds
-    * that cut over to the driver finisher once contraction shrinks the edge
-    * set under the bound.
+    * localEdges 0 = pure distributed star rounds, huge localEdges =
+    * immediate driver union-find, mid localEdges on a dense graph =
+    * distributed rounds that cut over to the driver finisher once
+    * contraction shrinks the edge set under the bound.
     */
   test("star contraction equals union-find on random graphs (all hybrid modes)") {
     for (
-      (threshold, n, avgDeg) <- Seq(("0", 120, 0.8), ("1000000", 120, 0.8),
-        ("100", 80, 3.75));
+      (localEdges, n, avgDeg) <- Seq((0L, 120, 0.8), (1000000L, 120, 0.8),
+        (100L, 80, 3.75));
       seed <- Seq(11, 23, 47)
     ) {
-      val s = spark.newSession()
-      s.conf.set("spark.graft.cc.localEdgeThreshold", threshold)
-      import s.implicits._
+      import spark.implicits._
       val rnd = new scala.util.Random(seed)
       val edges = Seq.fill((n * avgDeg).toInt)(
         (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
         .filter { case (a, b) => a != b }
-      val got = Dedup.connectedComponentsStar(
+      val got = Dedup.connectedComponents(
           (0L until n.toLong).toDF("id"),
-          edges.toDF("id_a", "id_b"))
+          edges.toDF("id_a", "id_b"), localEdges)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val want = unionFindWant(n, edges)
       assert(got == want,
-        s"seed=$seed threshold=$threshold: star labels diverge from union-find")
+        s"seed=$seed localEdges=$localEdges: labels diverge from union-find")
     }
   }
 
   test("connected components with zero edges labels every node a singleton " +
     "(both algorithms, with and without the driver finisher)") {
-    for (threshold <- Seq("0", "1000000")) {
-      val s = spark.newSession()
-      s.conf.set("spark.graft.cc.localEdgeThreshold", threshold)
-      import s.implicits._
-      val ids = (0L until 5L).toDF("id")
-      val noEdges = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
-      val want = (0L until 5L).map(i => i -> i).toMap
-      for (out <- Seq(Dedup.connectedComponents(ids, noEdges),
-                      Dedup.connectedComponentsStar(ids, noEdges))) {
-        val got = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        assert(got == want, s"threshold=$threshold: $got")
-      }
+    import spark.implicits._
+    val ids = (0L until 5L).toDF("id")
+    val noEdges = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
+    val want = (0L until 5L).map(i => i -> i).toMap
+    for (localEdges <- Seq(0L, Dedup.LocalEdges)) {
+      val got = Dedup.connectedComponents(ids, noEdges, localEdges)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == want, s"localEdges=$localEdges: $got")
     }
   }
 
@@ -337,11 +330,13 @@ class DedupPropertySpec extends AnyFunSuite {
     assert(spanning == 0, "a cluster spans more than one split")
   }
 
+  /** Every node is labelled with the least id of its component (the
+    * min label), here on sparse random graphs through the public
+    * entry point, all distributed and all on the driver finisher.
+    */
   test("min-label propagation equals union-find with and without the driver finisher") {
-    for (threshold <- Seq("0", "1000000"); seed <- Seq(7, 31)) {
-      val s = spark.newSession()
-      s.conf.set("spark.graft.cc.localEdgeThreshold", threshold)
-      import s.implicits._
+    import spark.implicits._
+    for (localEdges <- Seq(0L, 1000000L); seed <- Seq(7, 31)) {
       val rnd = new scala.util.Random(seed)
       val n = 100
       val edges = Seq.fill(80)(
@@ -349,11 +344,11 @@ class DedupPropertySpec extends AnyFunSuite {
         .filter { case (a, b) => a != b }
       val got = Dedup.connectedComponents(
           (0L until n.toLong).toDF("id"),
-          edges.toDF("id_a", "id_b"))
+          edges.toDF("id_a", "id_b"), localEdges)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val want = unionFindWant(n, edges)
       assert(got == want,
-        s"seed=$seed threshold=$threshold: propagation labels diverge from union-find")
+        s"seed=$seed localEdges=$localEdges: labels diverge from union-find")
     }
   }
 

@@ -113,19 +113,25 @@ class SimilaritySpec extends AnyFunSuite {
   test("connectedComponents over axisNearPairs matches brute-force components") {
     import graft.operators.Dedup
     val pairs = Similarity.axisNearPairs(corpus, minCos = 0.5, nBits = 6)
-    val got = Dedup.connectedComponents(
-        corpus.select(col("vec_id").as("id")), pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val ids = corpus.select(col("vec_id").as("id"))
     // Serial union-find oracle on the same pair list.
     val edges = pairs.collect().map(r => (r.getLong(0), r.getLong(1)))
-    val parent = scala.collection.mutable.Map(got.keys.map(k => k -> k).toSeq: _*)
+    val nodes = ids.collect().map(_.getLong(0))
+    val parent = scala.collection.mutable.Map(nodes.map(k => k -> k).toSeq: _*)
     def find(x: Long): Long = { var r = x; while (parent(r) != r) r = parent(r); r }
     edges.foreach { case (a, b) =>
       val (ra, rb) = (find(a), find(b))
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
     }
-    val want = got.keys.map(k => k -> find(k)).toMap
-    assert(got == want, "distributed min-label propagation must equal union-find")
+    val want = nodes.map(k => k -> find(k)).toMap
+    assert(edges.nonEmpty, "the near-pair graph must have edges to label")
+    // The default takes the driver finisher; localEdges = 0 runs star rounds.
+    for ((path, localEdges) <- Seq("driver finisher" -> Dedup.LocalEdges,
+                                   "distributed star rounds" -> 0L)) {
+      val got = Dedup.connectedComponents(ids, pairs, localEdges)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == want, s"$path must equal union-find")
+    }
   }
 
   test("axisKnnGraph plan: bucket equi-join, no cartesian, partial top-k pushdown") {
